@@ -1441,7 +1441,7 @@ def m4_thumbnails(spark, sf_dir):
 def s10_knn_ivf_trained(spark, sf_dir):
     """IVF search over a REAL trained k-means codebook (functions/
     similarity.py::knn_ivf_trained): Lloyd-trained cells, map-only
-    corpus assignment (codebook inlined as literals), nprobe=2 probe,
+    corpus assignment (clustering.assign_topn), nprobe=2 probe,
     exact-cosine rank — the full train-index-search lifecycle."""
     return similarity.knn_ivf_trained(
         _emb(spark, sf_dir), query_ids=[0, 1, 2, 3, 4], k=5
@@ -4787,8 +4787,8 @@ def a8_kcore(spark, sf_dir):
 
 def a5_kmeans(spark, sf_dir):
     """Distributed k-means (2 Lloyd iterations, k=8, deterministic seed,
-    6-dp centroid rounding) — assignment map-only via inlined centroid
-    literals, update one bounded shuffle (functions/clustering.py); the
+    6-dp centroid rounding) — assignment map-only via the Arrow BLAS
+    cell kernel, update one bounded shuffle (functions/clustering.py); the
     oracle replays both iterations with the same folds and rounding."""
     from projet_graphdb_spark.functions.clustering import kmeans_assignments
 

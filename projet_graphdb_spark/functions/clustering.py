@@ -5,23 +5,25 @@ training-data-pipeline surface (cluster-balanced sampling, IVF codebook
 training, topic bucketing).  The Spark shape per iteration is the one
 that scales:
 
-* **assignment** — the current centroids are a handful of literals
-  inlined into the plan (like the IVF codebook in ``similarity.knn_ivf``),
-  so assigning every vector is MAP-ONLY: no shuffle, no broadcast
-  exchange, whole-stage codegen over ``zip_with``/``aggregate``.
+* **assignment** — the current centroids travel in the closure of one
+  Arrow-batched BLAS UDF (:func:`assign_topn`), so assigning every
+  vector is MAP-ONLY: no shuffle, no broadcast exchange, one matmul per
+  batch.
 * **update** — ``posexplode`` the assigned vectors and average per
   (cluster, position): ONE shuffle of (k·dim)-bounded aggregates
   (map-side combined), then a k·dim-row collect to the driver — tiny by
-  construction (centroids must fit on the driver for the next literal
-  inlining regardless).
+  construction (centroids must fit on the driver for the next
+  assignment regardless).
 
 Determinism/oracle story: seeding is deterministic (vectors with
 ``id < k``), ties break toward the smaller centroid id, and every
 centroid coordinate is rounded to ``round_dp`` decimals after each
 average.  The rounding absorbs float summation-order differences, so a
-DuckDB oracle replaying the same iterations (same left-to-right
-fold for distances, same rounding) reproduces the assignment exactly —
-the a3-pagerank playbook applied to clustering.
+DuckDB oracle replaying the same iterations (a left-to-right fold for
+distances, same rounding) reproduces the assignment exactly while the
+fixture's adjacent distances stay far above the BLAS/fold discrepancy
+(``tools/margin_gauge.py``) — the a3-pagerank playbook applied to
+clustering.
 """
 
 from __future__ import annotations
@@ -32,34 +34,15 @@ from pyspark.sql import functions as F
 
 def _sqdist_to_literal(vec: Column, centroid: list) -> Column:
     """Squared euclidean distance to a literal centroid, accumulated
-    left-to-right (bit-reproducible; mirrors the oracle's list fold)."""
+    left-to-right (bit-reproducible; mirrors the oracle's list fold).
+    Only for distances that are EMITTED (the PQ lookup-table entries);
+    nearest-centroid selection goes through :func:`assign_topn`."""
     lit = F.array(*[F.lit(float(x)) for x in centroid])
     return F.aggregate(
         F.zip_with(vec, lit, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-# Above this many centroid·dim literal cells the inlined distance
-# expression becomes the bottleneck (same failure mode as the SRP plane
-# trees in similarity._MAX_JVM_PLANES: minutes of driver-side Catalyst
-# analysis + generated code past janino's 64 KB cap).  Past the cutoff,
-# assignment runs as ONE Arrow-batched numpy UDF whose closure carries
-# the (k × dim) centroid matrix — per-batch cost one BLAS matmul.
-# Oracle constructions (k ≤ 16 or so) always stay on the JVM path.
-# JVM-literal assignment cutoff in cells×dim units.  MEASURED at 1M
-# rows (round 7): the literal array-of-structs + array_sort plan is
-# 13-50× slower than the Arrow BLAS UDF at every size ≥1024 units
-# (k=32/dim=32: 41 s vs 3 s; k=256: 413 s vs 8 s) — per-row struct
-# allocation and the k-element sort dominate long before the
-# distance arithmetic does.  512 keeps the pinned oracle codebooks
-# (8 cells × 64 dims and smaller — s4/s10/s22/s24) on the fused
-# whole-stage-codegen path where the Python-worker roundtrip would
-# cost more than the job; everything bigger goes BLAS.  Both paths
-# are bit-identical on seeded constructions (tests pin parity), so
-# the cutoff is purely a performance dial.
-_MAX_JVM_CELLS = 512
 
 
 def assign_topn(
@@ -72,35 +55,21 @@ def assign_topn(
     """Adds ``out_col``: array of the ``nprobe`` nearest centroid ids
     (squared euclidean, ties to the smaller cid), map-only.
 
-    Size-gated like the SRP signatures: small codebooks inline the
-    centroids as literals (whole-stage codegen, left-to-right distance
-    fold — bit-reproducible against a SQL oracle's ``list_reduce``);
-    codebooks past ``_MAX_JVM_CELLS`` literal cells switch to one
-    Arrow-batched BLAS UDF (``pyudf.make_topn_cells_udf``).  Both paths
-    use the same stable (distance, cid) ordering; they can disagree
-    only on exact distance ties between DIFFERENT centroids, which the
-    seeded constructions used by oracles never produce.
+    The one nearest-centroid kernel of the engine: every codebook —
+    k-means training, IVF cells, PQ subspace codes — assigns through
+    the Arrow-batched BLAS UDF ``pyudf.make_topn_cells_udf``, whose
+    closure carries the (k × dim) centroid matrix.  Its selection is a
+    stable ``(distance, cid)`` sort, the order a SQL oracle's
+    left-to-right distance fold produces; the BLAS expansion agrees
+    with that fold while adjacent distances stay far above f64 drift
+    (receipt: ``tools/margin_gauge.py``).  A NULL vector, or one whose
+    length is not the codebook's dim, gets a NULL ``out_col``.
     """
-    items = sorted(cents.items())
-    dim = len(items[0][1]) if items else 0
-    if len(items) * dim <= _MAX_JVM_CELLS:
-        arr = F.array(
-            *[
-                F.struct(
-                    _sqdist_to_literal(F.col(vec_col), cv).alias("d"),
-                    F.lit(int(cid)).cast("long").alias("cid"),
-                )
-                for cid, cv in items
-            ]
-        )
-        nearest = F.slice(F.array_sort(arr), 1, nprobe)
-        return emb.withColumn(
-            out_col, F.transform(nearest, lambda s: s["cid"])
-        )
     import numpy as np
 
     from .pyudf import make_topn_cells_udf
 
+    items = sorted(cents.items())
     mat = np.asarray([cv for _, cv in items], dtype=np.float64)
     cids = [int(cid) for cid, _ in items]
     return emb.withColumn(out_col, make_topn_cells_udf(mat, cids, nprobe)(F.col(vec_col)))
@@ -108,7 +77,7 @@ def assign_topn(
 
 def _assign(emb: DataFrame, cents: dict, id_col: str, vec_col: str) -> DataFrame:
     """(id, vec, cluster): nearest centroid, ties to the smaller cid —
-    map-only (size-gated literal argmin / BLAS UDF, see assign_topn)."""
+    map-only (see assign_topn)."""
     return (
         assign_topn(emb, cents, nprobe=1, vec_col=vec_col, out_col="_c1")
         .withColumn("cluster", F.col("_c1")[0])
@@ -128,7 +97,7 @@ def kmeans_centroids(
     iterations from the deterministic seed (vectors with ``id < k``,
     coordinates rounded to ``round_dp`` after every average).  The
     driver-side dict is the INDEX METADATA a consumer (e.g. IVF search)
-    inlines as literals."""
+    hands to :func:`assign_topn`."""
     emb = embeddings.select(F.col(id_col), F.col(vec_col)).localCheckpoint(eager=True)
     seed = emb.filter(F.col(id_col) < k).select(id_col, vec_col).collect()
     cents = {

@@ -7,7 +7,7 @@ reads the REAL type hints to infer the UDF kind; stringized annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 # Module-level UDFs declare their return type as a DataType OBJECT, not
 # a DDL string: string types are parsed through the active SparkContext
@@ -50,29 +50,27 @@ def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
     ``_incremental_cells_pairs`` (guide §4.2: the interpreted
     ``aggregate(zip_with(...))`` fold costs ~4.5 µs/pair and dominates
     the verify tail at scale; one BLAS-shaped batch op replaces it).
-    Bit-identical to the JVM fold by construction: see
-    :func:`seq_rowdot`."""
+    Bit-identical to the JVM fold for finite, non-null elements of
+    equal length: see :func:`seq_rowdot`.
+
+    Edge semantics (pinned by tests/test_pyudf_verify.py): a NULL
+    vector or a ragged pair (lengths differ — the JVM ``zip_with``
+    null-pads and folds to NULL) yields NULL.  A NaN ELEMENT yields a
+    NaN dot, which the pandas→Arrow conversion turns into NULL — unlike
+    the JVM fold, whose NaN passes ``sim >= threshold``.  Either way
+    the pair is dropped by the verify filter."""
     import numpy as np
 
-    if not len(va):
-        return pd.Series([], dtype="float64")
-    na = va.isna()
-    nb = vb.isna()
-    if na.any() or nb.any():
-        # a NULL vector folds to a NULL dot on the JVM path; NaN here
-        # behaves identically downstream (>= filter drops both)
-        valid = ~(na | nb)
-        out = np.full(len(va), np.nan)
-        if valid.any():
-            out[valid.to_numpy()] = seq_rowdot(
-                np.vstack(va[valid].to_numpy()),
-                np.vstack(vb[valid].to_numpy()),
-            )
-        return pd.Series(out)
-    A = np.vstack(va.to_numpy())
-    B = np.vstack(vb.to_numpy())
-    return pd.Series(seq_rowdot(A, B))
-
+    la = va.map(len, na_action="ignore")
+    lb = vb.map(len, na_action="ignore")
+    valid = la == lb  # NULL lengths are NaN, never equal
+    out = np.full(len(va), np.nan)
+    for n in la[valid].unique():
+        rows = (valid & (la == n)).to_numpy()
+        out[rows] = seq_rowdot(
+            np.vstack(va[rows].to_numpy()), np.vstack(vb[rows].to_numpy())
+        )
+    return pd.Series(out)
 
 
 def make_srp_sigs_udf(mat, offsets, weights):
@@ -101,27 +99,53 @@ def make_srp_sigs_udf(mat, offsets, weights):
     return _sigs
 
 
-def make_topn_cells_udf(cent_mat, cids, nprobe):
-    """Factory for the large-codebook cell-assignment UDF (see
-    clustering.assign_topn): per Arrow batch, BLAS distance blocks
-    ``||v||² − 2·V·Cᵀ + ||c||²`` then top-``nprobe`` selection — ties
-    break to the smaller centroid id, mirroring the JVM literal path's
-    ``array_sort((d, cid))``.
+def cell_sqdist(V, cent_mat, csq):
+    """The cell kernel's squared distances, ``||v||² − 2·V·Cᵀ + ||c||²``
+    as one BLAS block: (rows × k) from (rows × dim) f64 vectors, the
+    (k × dim) centroid matrix and its row norms ``csq``.  Its rounding
+    differs from the oracles' left-to-right fold; ``tools/margin_gauge.py``
+    measures by how much against the fixtures' adjacent-distance gaps."""
+    return (V * V).sum(axis=1)[:, None] - 2.0 * (V @ cent_mat.T) + csq[None, :]
 
-    Scale shape (measured at N=1M, k=16384 — the regime this UDF
-    exists for): rows are processed in sub-chunks sized so the distance
-    block stays ~32 MB (a full 10k-row Arrow batch × 16384 cells × 8 B
-    is 1.3 GB per core — allocation thrash, not compute, dominated the
-    first implementation), and the per-row full ``argsort`` over k is
-    replaced by O(k) ``argpartition`` + an ``nprobe``-element sort.
-    Tie semantics are preserved exactly where ties can exist: the
-    partition's survivors are re-sorted ascending-by-position (= by
-    cid, since ``cids`` arrive sorted) before the stable distance sort,
-    so equal-distance survivors order by smaller cid just like the
-    JVM fold.  (Equal distances straddling the partition BOUNDARY could
-    drop the smaller cid — a measure-zero event the seeded
-    constructions used by oracles never produce, same caveat as the
-    JVM path's own tie documentation.)
+
+def topn_stable(D, p):
+    """Column indices of the ``p`` smallest entries per row of ``D``,
+    equal to a stable sort by (distance, column) — with sorted cids,
+    ties keep the smaller cid, like the oracles' fold.
+
+    O(k) per row: the ``p``-th smallest distance is a cutoff, and a row
+    with exactly ``p`` entries at or under it sorts only those (found in
+    ascending column order, then sorted stably by distance).  A row
+    where equal distances straddle the cutoff (duplicate centroids) or
+    a NaN appears takes the full stable sort instead."""
+    import numpy as np
+
+    p = min(p, D.shape[1])
+    if not 0 < p < D.shape[1]:
+        return np.argsort(D, axis=1, kind="stable")[:, :p]
+    inside = D <= np.partition(D, p - 1, axis=1)[:, p - 1 : p]
+    clean = inside.sum(axis=1) == p
+    near = np.empty((len(D), p), dtype=np.int64)
+    part = np.nonzero(inside[clean])[1].reshape(-1, p)
+    order = np.argsort(np.take_along_axis(D[clean], part, axis=1), axis=1, kind="stable")
+    near[clean] = np.take_along_axis(part, order, axis=1)
+    near[~clean] = np.argsort(D[~clean], axis=1, kind="stable")[:, :p]
+    return near
+
+
+def make_topn_cells_udf(cent_mat, cids, nprobe):
+    """Factory for the engine's one cell-assignment UDF (see
+    clustering.assign_topn): per Arrow batch, :func:`cell_sqdist`
+    blocks, then :func:`topn_stable` picks the ``nprobe`` nearest cells.
+
+    Scale shape (measured at N=1M, k=16384): rows are processed in
+    sub-chunks sized so the distance block stays ~32 MB (a full
+    10k-row Arrow batch × 16384 cells × 8 B is 1.3 GB per core —
+    allocation thrash, not compute, dominated the first
+    implementation), and selection is O(k) per row, not a full sort.
+
+    A NULL vector, or one whose length differs from the codebook's
+    dim, emits NULL.
 
     ``cent_mat``: (k × dim) float64 centroid matrix, rows in ``cids``
     order; ``cids``: sorted ascending int64 centroid ids; ``nprobe``:
@@ -130,26 +154,21 @@ def make_topn_cells_udf(cent_mat, cids, nprobe):
 
     cvec = np.asarray(cids, dtype=np.int64)
     csq = (cent_mat * cent_mat).sum(axis=1)  # (k,)
-    k = len(cvec)
+    k, dim = cent_mat.shape
 
-    @pandas_udf("array<long>")
+    @pandas_udf(ArrayType(LongType()))
     def _cells(v: pd.Series) -> pd.Series:
-        V = np.vstack(v.to_numpy()).astype(np.float64)  # (batch × dim)
-        vsq = (V * V).sum(axis=1)
-        out = np.empty((len(V), min(nprobe, k)), dtype=np.int64)
-        rows_per_chunk = max(1, int(4_000_000 // max(1, k)))  # ~32 MB blocks
-        for i0 in range(0, len(V), rows_per_chunk):
-            Vc = V[i0 : i0 + rows_per_chunk]
-            D = vsq[i0 : i0 + rows_per_chunk, None] - 2.0 * (Vc @ cent_mat.T) + csq[None, :]
-            if nprobe < k:
-                part = np.argpartition(D, nprobe - 1, axis=1)[:, :nprobe]
-                part.sort(axis=1)  # ascending position == ascending cid
-                dsel = np.take_along_axis(D, part, axis=1)
-                order = np.argsort(dsel, axis=1, kind="stable")
-                near = np.take_along_axis(part, order, axis=1)
-            else:
-                near = np.argsort(D, axis=1, kind="stable")
-            out[i0 : i0 + len(Vc)] = cvec[near]
-        return pd.Series(list(out))
+        ok = (v.map(len, na_action="ignore") == dim).to_numpy()
+        out = [None] * len(v)
+        if ok.any():
+            V = np.vstack(v[ok].to_numpy()).astype(np.float64)  # (rows × dim)
+            step = max(1, int(4_000_000 // max(1, k)))  # ~32 MB blocks
+            cells = np.concatenate([
+                cvec[topn_stable(cell_sqdist(V[i : i + step], cent_mat, csq), nprobe)]
+                for i in range(0, len(V), step)
+            ])
+            for i, c in zip(np.flatnonzero(ok), cells):
+                out[i] = c
+        return pd.Series(out, dtype=object)
 
     return _cells

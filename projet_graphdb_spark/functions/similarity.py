@@ -38,7 +38,9 @@ def _pair_sim(va: Column, vb: Column, na: Column, nb: Column) -> Column:
     ONE Arrow-batched numpy op per batch (guide §4.2 — the interpreted
     ``aggregate(zip_with(...))`` fold costs ~4.5 µs/pair and is the
     dominant per-candidate term at scale), divided by the precomputed
-    norms JVM-side.  Values are BIT-IDENTICAL to ``dot(va, vb)``:
+    norms JVM-side.  For finite, equal-length vectors (the edge cases
+    are NULL and the pair is dropped — see ``pyudf.pair_dot``) values
+    are BIT-IDENTICAL to ``dot(va, vb)``:
     ``pyudf.pair_dot`` reproduces the fold's exact IEEE operation
     sequence (f64 casts, f64 products, strict left-to-right summation
     via sequential ``cumsum`` — see ``pyudf.seq_rowdot``), so the
@@ -1047,9 +1049,9 @@ def ivf_cosine_dups(
     LINEAR in N.  Training runs on a deterministic 1-in-step id sample
     capped at ``max_train_rows`` (re-id'd densely, map-side, so the
     seeded id<k rule still applies); corpus assignment is one BLAS
-    matmul per Arrow batch past the literal-inlining cutoff
-    (``clustering.assign_topn``).  Beyond ``max_centroids`` cells
-    (~1e7+ rows/shard) flat assignment's N·k matmul is the next wall —
+    matmul per Arrow batch (``clustering.assign_topn``).  Beyond
+    ``max_centroids`` cells (~1e7+ rows/shard) flat assignment's N·k
+    matmul is the next wall —
     :func:`imi_cosine_dups` breaks it with the two-level IMI layout
     (k1·k2 virtual cells from k1+k2 half-space centroids).
 
@@ -1100,7 +1102,7 @@ def ivf_cosine_dups(
             )
             .select("_vid", F.explode("_cells").alias("_cell"))
             .localCheckpoint(eager=True)  # (id, cell) is ~16 B/row; candidate
-            # generation references it twice and the BLAS/literal assignment
+            # generation references it twice and the BLAS assignment
             # should run once, not once per join branch
         )
     assigned = assigned_cells
@@ -4319,46 +4321,38 @@ def knn_ivf_trained(
 
     Scale design: training's per-iteration cost is one map-only
     assignment + a (k·dim)-bounded update aggregate; the codebook is
-    driver metadata inlined as literals, so corpus cell assignment is a
-    PURE map-side expression (no join/shuffle), the cell id becomes the
-    bucket key, and a probe scans ``nprobe/n_centroids`` of the data.
+    driver metadata handed to ``clustering.assign_topn`` (``nprobe=1``
+    for the corpus cell, ``nprobe`` for the query probes), so corpus
+    cell assignment is a PURE map-side pass (no join/shuffle), the cell
+    id becomes the bucket key, and a probe scans
+    ``nprobe/n_centroids`` of the data.
     Assignment metric is squared euclidean (the k-means objective);
     ranking is exact cosine over the probed cells only.
 
     Output: (query_id, neighbour_id, rank, sim) — knn_bruteforce shape.
     """
-    from .clustering import _sqdist_to_literal, kmeans_centroids
+    from . import clustering
 
-    cents = kmeans_centroids(
+    cents = clustering.kmeans_centroids(
         embeddings, k=n_centroids, num_iter=num_iter,
         id_col=id_col, vec_col=vec_col,
     )
     vec = F.col(vec_col)
-    cell_structs = F.array(
-        *[
-            F.struct(
-                _sqdist_to_literal(vec, cv).alias("d"),
-                F.lit(int(cid)).cast("long").alias("cid"),
-            )
-            for cid, cv in sorted(cents.items())
-        ]
-    )
-    base = embeddings.select(
-        F.col(id_col), vec, l2norm(vec).alias("_n"),
-        F.array_min(cell_structs)["cid"].alias("_cell"),
-    )
-    assigned = base.select(
+    base = embeddings.select(F.col(id_col), vec, l2norm(vec).alias("_n"))
+    assigned = clustering.assign_topn(base, cents, nprobe=1, vec_col=vec_col).select(
         F.col(id_col).alias("neighbour_id"),
         F.col(vec_col).alias("_cv"),
         F.col("_n").alias("_cn"),
-        "_cell",
+        F.col("_cells")[0].alias("_cell"),
     )
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
+    q = clustering.assign_topn(
+        base.filter(F.col(id_col).isin(query_ids)), cents, nprobe=nprobe, vec_col=vec_col
+    ).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.explode(F.slice(F.array_sort(cell_structs), 1, nprobe)).alias("_probe"),
-    ).select("query_id", "_qv", "_qn", F.col("_probe")["cid"].alias("_cell"))
+        F.explode("_cells").alias("_cell"),
+    )
     scored = (
         q.join(assigned, on="_cell")
         .filter(F.col("query_id") != F.col("neighbour_id"))
@@ -4370,6 +4364,63 @@ def knn_ivf_trained(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbour_id", "rank", F.round("sim", 6).alias("sim"))
     )
+
+
+def _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp) -> list:
+    """Per-subspace PQ codebooks: ``m`` Lloyd-trained ``ksub``-entry
+    codebooks, one over each ``sub``-wide slice of ``vec_col``."""
+    from .clustering import kmeans_centroids
+
+    return [
+        kmeans_centroids(
+            embeddings.select(
+                F.col(id_col), F.slice(F.col(vec_col), j * sub + 1, sub).alias(vec_col)
+            ),
+            k=ksub, num_iter=num_iter,
+            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        )
+        for j in range(m)
+    ]
+
+
+def _pq_encode(frame: DataFrame, books: list, sub: int, vec_col: str) -> DataFrame:
+    """Adds ``_codes``: per subspace j, the nearest codeword of
+    ``books[j]`` to the j-th ``sub``-wide slice of ``vec_col``
+    (``clustering.assign_topn`` with ``nprobe=1`` — map-only)."""
+    from . import clustering
+
+    for j, book in enumerate(books):
+        frame = clustering.assign_topn(
+            frame.withColumn(f"_s{j}", F.slice(F.col(vec_col), j * sub + 1, sub)),
+            book, vec_col=f"_s{j}", out_col=f"_c{j}",
+        )
+    return frame.withColumn(
+        "_codes", F.array(*[F.col(f"_c{j}")[0] for j in range(len(books))])
+    )
+
+
+def _pq_lut(q: DataFrame, books: list, sub: int, id_col: str, vec_col: str, round_dp: int) -> DataFrame:
+    """(query_id, _j, _code, _d): the ADC lookup table — the distance
+    from each query's j-th subvector to every codeword of ``books[j]``,
+    a left-to-right fold rounded to ``round_dp + 3`` so the sum of m
+    entries is replayable."""
+    from .clustering import _sqdist_to_literal
+
+    entries = [
+        F.struct(
+            F.lit(j).cast("int").alias("_j"),
+            F.lit(int(cid)).cast("long").alias("_code"),
+            F.round(
+                _sqdist_to_literal(F.slice(F.col(vec_col), j * sub + 1, sub), cv),
+                round_dp + 3,
+            ).alias("_d"),
+        )
+        for j, book in enumerate(books)
+        for cid, cv in sorted(book.items())
+    ]
+    return q.select(
+        F.col(id_col).alias("query_id"), F.explode(F.array(*entries)).alias("_e")
+    ).select("query_id", "_e._j", "_e._code", "_e._d")
 
 
 def knn_pq_adc(
@@ -4396,8 +4447,9 @@ def knn_pq_adc(
 
     * **train**: per-subspace ``clustering.kmeans_centroids`` (map-only
       assign + (ksub·dim/m)-bounded update);
-    * **encode**: codebooks inlined as literals → corpus encoding is a
-      PURE map-side expression, output m small ints per vector;
+    * **encode**: one ``clustering.assign_topn`` per subspace slice →
+      corpus encoding is a PURE map-side pass, output m small ints per
+      vector;
     * **LUT**: |queries|·m·ksub rows computed from literals (map-only
       over the tiny query set);
     * **score**: codes posexploded to (vec, subspace, code) join the
@@ -4411,52 +4463,15 @@ def knn_pq_adc(
     """
     from pyspark.sql.window import Window as W
 
-    from .clustering import _sqdist_to_literal, kmeans_centroids
-
     sub = dim // m
-    slices = [F.slice(F.col(vec_col), j * sub + 1, sub) for j in range(m)]
-    books = []
-    for j in range(m):
-        sv = embeddings.select(F.col(id_col), slices[j].alias(vec_col))
-        books.append(
-            kmeans_centroids(
-                sv, k=ksub, num_iter=num_iter,
-                id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-            )
-        )
-
-    def _code(j):
-        arr = F.array(
-            *[
-                F.struct(
-                    _sqdist_to_literal(slices[j], cv).alias("d"),
-                    F.lit(int(cid)).cast("long").alias("cid"),
-                )
-                for cid, cv in sorted(books[j].items())
-            ]
-        )
-        return F.array_min(arr)["cid"]
-
-    codes = embeddings.select(
-        F.col(id_col).alias("neighbour_id"),
-        F.posexplode(F.array(*[_code(j) for j in range(m)])).alias("_j", "_code"),
-    )
-    # per-query subspace LUT: distance from the query's j-th subvector to
-    # every codebook entry, rounded so the sum of m entries is replayable
-    lut_entries = [
-        F.struct(
-            F.lit(j).cast("int").alias("_j"),
-            F.lit(int(cid)).cast("long").alias("_code"),
-            F.round(_sqdist_to_literal(slices[j], cv), round_dp + 3).alias("_d"),
-        )
-        for j in range(m)
-        for cid, cv in sorted(books[j].items())
-    ]
-    lut = (
-        embeddings.filter(F.col(id_col).isin([int(q) for q in query_ids]))
-        .select(F.col(id_col).alias("query_id"), F.explode(F.array(*lut_entries)).alias("_e"))
-        .select("query_id", F.col("_e._j").alias("_j"), F.col("_e._code").alias("_code"),
-                F.col("_e._d").alias("_d"))
+    books = _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp)
+    codes = _pq_encode(
+        embeddings.select(F.col(id_col).alias("neighbour_id"), F.col(vec_col)),
+        books, sub, vec_col,
+    ).select("neighbour_id", F.posexplode("_codes").alias("_j", "_code"))
+    lut = _pq_lut(
+        embeddings.filter(F.col(id_col).isin([int(q) for q in query_ids])),
+        books, sub, id_col, vec_col, round_dp,
     )
     scored = (
         codes.join(F.broadcast(lut), on=["_j", "_code"])
@@ -4494,92 +4509,52 @@ def knn_ivfpq(
     full corpus nor full-precision vectors are touched at query time.
 
     Scale shape: cell codebook and PQ codebooks are driver metadata
-    inlined as literals → corpus assignment + encoding are ONE map-only
-    pass whose output is (cell, m codes) per vector — the entire
-    persisted index, ~bytes/vector.  A query reads ``nprobe/n_cells``
-    of the code table (cell = partition key), joins the broadcast LUT,
-    and reduces per (query, candidate).  Compared to s11 (flat PQ scan)
-    this prunes the scan; compared to s10 (IVF with exact re-rank) the
-    candidate scoring is compressed-domain.
+    handed to ``clustering.assign_topn`` → corpus assignment + encoding
+    are ONE map-only pass whose output is (cell, m codes) per vector —
+    the entire persisted index, ~bytes/vector.  A query reads
+    ``nprobe/n_cells`` of the code table (cell = partition key), joins
+    the broadcast LUT, and reduces per (query, candidate).  Compared to
+    s11 (flat PQ scan) this prunes the scan; compared to s10 (IVF with
+    exact re-rank) the candidate scoring is compressed-domain.
 
     Cells are seeded deterministically (rounded vectors with id <
     n_cells — the s4 codebook discipline); PQ codebooks are 1-iteration
     Lloyd per subspace (the s11 discipline), so the DuckDB oracle
-    replays routing, encoding, LUTs, and ranking bit-for-bit.
+    replays routing, encoding, LUTs, and ranking.
 
     Output: (query_id, neighbour_id, rank, adc_dist).
     """
     from pyspark.sql.window import Window as W
 
-    from .clustering import _sqdist_to_literal, kmeans_centroids
+    from . import clustering
 
-    vec = F.col(vec_col)
     cells = {
         int(r[0]): [round(float(x), round_dp) for x in r[1]]
         for r in embeddings.filter(F.col(id_col) < n_cells)
         .select(id_col, vec_col)
         .collect()
     }
-    cell_structs = F.array(
-        *[
-            F.struct(
-                _sqdist_to_literal(vec, cv).alias("d"),
-                F.lit(int(cid)).cast("long").alias("cid"),
-            )
-            for cid, cv in sorted(cells.items())
-        ]
-    )
-
     sub = dim // m
-    slices = [F.slice(vec, j * sub + 1, sub) for j in range(m)]
-    books = [
-        kmeans_centroids(
-            embeddings.select(F.col(id_col), slices[j].alias(vec_col)),
-            k=ksub, num_iter=num_iter,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
-        )
-        for j in range(m)
-    ]
-
-    def _code(j):
-        arr = F.array(
-            *[
-                F.struct(
-                    _sqdist_to_literal(slices[j], cv).alias("d"),
-                    F.lit(int(cid)).cast("long").alias("cid"),
-                )
-                for cid, cv in sorted(books[j].items())
-            ]
-        )
-        return F.array_min(arr)["cid"]
+    books = _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp)
 
     # ONE map-only pass: (id, cell, m codes) — the persisted index rows
-    enc = embeddings.select(
-        F.col(id_col).alias("neighbour_id"),
-        F.array_min(cell_structs)["cid"].alias("_cell"),
-        F.posexplode(F.array(*[_code(j) for j in range(m)])).alias("_j", "_code"),
+    enc = _pq_encode(
+        clustering.assign_topn(
+            embeddings.select(F.col(id_col).alias("neighbour_id"), F.col(vec_col)),
+            cells, vec_col=vec_col,
+        ),
+        books, sub, vec_col,
+    ).select(
+        "neighbour_id",
+        F.col("_cells")[0].alias("_cell"),
+        F.posexplode("_codes").alias("_j", "_code"),
     )
     qids = [int(q) for q in query_ids]
     q = embeddings.filter(F.col(id_col).isin(qids))
-    probes = q.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(F.slice(F.array_sort(cell_structs), 1, nprobe)).alias("_p"),
-    ).select("query_id", F.col("_p")["cid"].alias("_cell"))
-    lut_entries = [
-        F.struct(
-            F.lit(j).cast("int").alias("_j"),
-            F.lit(int(cid)).cast("long").alias("_code"),
-            F.round(_sqdist_to_literal(slices[j], cv), round_dp + 3).alias("_d"),
-        )
-        for j in range(m)
-        for cid, cv in sorted(books[j].items())
-    ]
-    lut = q.select(
-        F.col(id_col).alias("query_id"), F.explode(F.array(*lut_entries)).alias("_e")
-    ).select(
-        "query_id", F.col("_e._j").alias("_j"), F.col("_e._code").alias("_code"),
-        F.col("_e._d").alias("_d"),
+    probes = clustering.assign_topn(q, cells, nprobe=nprobe, vec_col=vec_col).select(
+        F.col(id_col).alias("query_id"), F.explode("_cells").alias("_cell")
     )
+    lut = _pq_lut(q, books, sub, id_col, vec_col, round_dp)
     scored = (
         enc.join(F.broadcast(probes), on="_cell")
         .where(F.col("neighbour_id") != F.col("query_id"))

@@ -3,10 +3,11 @@ BIT-IDENTICAL to the JVM ``aggregate(zip_with(...))`` fold, and the
 sink-backed materialization mode must round-trip frames unchanged."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from projet_graphdb_spark.functions import similarity
+from projet_graphdb_spark.functions import pyudf, similarity
 from projet_graphdb_spark.functions.pyudf import seq_rowdot
 
 
@@ -83,6 +84,68 @@ def test_pair_sim_bit_identical_to_jvm_fold(spark):
     got = {(r.id_a, r.id_b): r.sim for r in arrow.collect()}
     want = {(r.id_a, r.id_b): r.sim for r in jvm.collect()}
     assert got == want  # dict equality on raw doubles == bitwise
+
+
+def test_pair_dot_ragged_nan_null_pairs_are_dropped(spark):
+    """pair_dot edge semantics: a ragged pair is NULL (as the JVM
+    ``zip_with`` null-pad folds), a NaN element becomes an Arrow NULL
+    (the JVM fold gives NaN instead), a NULL vector is NULL; the verify
+    tail drops all three pairs and keeps the clean one."""
+    rows = [
+        (0, [1.0, 2.0, 3.0]),
+        (1, [1.0, 2.0, 3.5]),
+        (2, [1.0, float("nan"), 3.0]),
+        (3, [1.0, 2.0]),
+        (4, None),
+    ]
+    base = spark.createDataFrame(rows, "_vid long, _v array<float>").withColumn(
+        "_n", similarity.l2norm(F.col("_v"))
+    )
+    pairs = spark.createDataFrame([(0, b) for b in range(1, 5)], "id_a long, id_b long")
+    va = base.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"))
+    vb = base.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"))
+    dots = {
+        r.id_b: (r.arrow, r.jvm)
+        for r in pairs.join(va, "id_a").join(vb, "id_b").select(
+            "id_b",
+            pyudf.pair_dot(F.col("_va"), F.col("_vb")).alias("arrow"),
+            similarity.dot(F.col("_va"), F.col("_vb")).alias("jvm"),
+        ).collect()
+    }
+    assert dots[1] == (1.0 + 4.0 + 10.5,) * 2
+    assert dots[2][0] is None and np.isnan(dots[2][1])
+    assert dots[3] == (None, None)
+    assert dots[4] == (None, None)
+    kept = similarity._verify_candidate_pairs(base, pairs, 0.5).collect()
+    assert [(r.id_a, r.id_b) for r in kept] == [(0, 1)]
+
+
+def test_pair_dot_mixed_lengths_across_rows():
+    """Equal-length pairs of DIFFERENT lengths in one batch each get
+    the exact fold (one vstack per length, not one per batch)."""
+    va = pd.Series([np.array([1.0, 2.0]), np.array([1.0, 2.0, 3.0]), None])
+    vb = pd.Series([np.array([3.0, 4.0]), np.array([1.0, 1.0, 1.0]), np.array([1.0])])
+    got = pyudf.pair_dot.func(va, vb)
+    assert got[:2].tolist() == [11.0, 6.0] and np.isnan(got[2])
+
+
+def test_topn_stable_equals_stable_sort():
+    """The O(k) selection equals a stable (distance, column) sort for
+    every p, including exact ties straddling the cutoff and NaN."""
+    rng = np.random.default_rng(5)
+    D = rng.integers(0, 6, size=(400, 12)).astype(np.float64)  # dense ties
+    D[::7, 3] = np.nan
+    full = np.argsort(D, axis=1, kind="stable")
+    for p in range(0, 14):
+        assert np.array_equal(pyudf.topn_stable(D, p), full[:, :p]), p
+
+
+def test_topn_cells_null_and_ragged_vectors_emit_null():
+    cells = pyudf.make_topn_cells_udf(
+        np.eye(3), [10, 20, 30], 2
+    ).func(pd.Series([None, np.array([0.0, 1.0]), np.array([0.0, 0.0, 1.0], np.float32)]))
+    assert cells[0] is None and cells[1] is None
+    assert list(cells[2]) == [30, 10]
 
 
 def test_materialize_sink_backed_roundtrip(spark, tmp_path, monkeypatch):
@@ -184,7 +247,7 @@ def test_srp_index_validate_flag(spark):
     same pairs; validate_srp_index_config still rejects mismatches."""
     import numpy as np
 
-    from projet_graphdb_spark.functions import similarity
+    from projet_graphdb_spark.functions import pyudf, similarity
 
     rng = np.random.default_rng(5)
     base = rng.standard_normal(8)

@@ -1383,30 +1383,42 @@ def test_ivf_cells_forget_removes_vectors(spark, emb, tmp_path):
     assert got == want
 
 
-def test_assign_topn_jvm_udf_parity(spark, emb):
-    """The BLAS-UDF assignment path (codebooks past _MAX_JVM_CELLS)
-    must agree with the literal-inlined JVM path: same centroids, same
-    (distance, cid) stable ordering, only the execution engine differs.
-    Forced by monkeypatching the cutoff rather than training a 128+
-    centroid codebook on 500 rows."""
+def _fold_topn(V, C, nprobe):
+    """Exact-fold reference: left-to-right cumsum of (x − c)² over f64
+    casts (the oracles' distance), then a stable (d, cid) sort."""
+    D = np.stack([np.cumsum((V - c) ** 2, axis=1)[:, -1] for c in C], axis=1)
+    return np.argsort(D, axis=1, kind="stable")[:, :nprobe]
+
+
+def test_assign_topn_matches_exact_fold(spark, emb, emb_np):
+    """assign_topn (the Arrow BLAS kernel) emits the exact-fold top-n
+    for every nprobe 1..k: on a trained 8-cell codebook, a seeded
+    64-cell codebook, and a codebook with a duplicate centroid, where
+    equal distances straddle the nprobe boundary and the smaller cid
+    must win."""
     from projet_graphdb_spark.functions import clustering
 
-    cents = clustering.kmeans_centroids(emb, k=8, num_iter=1)
-    base = emb.select("vec_id", "embedding")
-    via_jvm = {
-        r["vec_id"]: list(r["_cells"])
-        for r in clustering.assign_topn(base, cents, nprobe=3).collect()
+    ids, V = emb_np
+    V = V[np.argsort(ids)]
+    dup = np.round(V[:8], 6)
+    dup[5] = dup[2]
+    books = {
+        "kmeans8": clustering.kmeans_centroids(emb, k=8, num_iter=1),
+        "seeded64": {i: list(np.round(V[i], 6)) for i in range(64)},
+        "dup8": {i: list(c) for i, c in enumerate(dup)},
     }
-    old = clustering._MAX_JVM_CELLS
-    clustering._MAX_JVM_CELLS = 0
-    try:
-        via_udf = {
-            r["vec_id"]: list(r["_cells"])
-            for r in clustering.assign_topn(base, cents, nprobe=3).collect()
-        }
-    finally:
-        clustering._MAX_JVM_CELLS = old
-    assert via_jvm == via_udf
+    base = emb.select("vec_id", "embedding")
+    for name, cents in books.items():
+        cids = sorted(cents)
+        C = np.asarray([cents[c] for c in cids], dtype=np.float64)
+        frame = base
+        for p in range(1, len(cids) + 1):
+            frame = clustering.assign_topn(frame, cents, nprobe=p, out_col=f"_p{p}")
+        rows = sorted(frame.drop("embedding").collect(), key=lambda r: r["vec_id"])
+        for p in range(1, len(cids) + 1):
+            want = np.asarray(cids)[_fold_topn(V, C, p)]
+            got = np.asarray([list(r[f"_p{p}"]) for r in rows])
+            assert np.array_equal(got, want), (name, p)
 
 
 def test_choose_dup_strategy_threshold_crossover(spark):
