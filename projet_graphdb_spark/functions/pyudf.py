@@ -74,11 +74,14 @@ def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
 
 
 def make_srp_sigs_udf(mat, offsets, weights):
-    """Factory for the large-construction SRP signature UDF (see
+    """Factory for the engine's one SRP signature UDF (see
     similarity.srp_signature_array): one BLAS matmul per Arrow batch,
-    then per-band bit packing.  Lives here because this module skips
-    ``from __future__ import annotations`` — pandas_udf needs REAL
-    type hints to infer the UDF kind.
+    then per-band bit packing.  The matmul's summation order differs
+    from the oracles' fold; ``tools/margin_gauge.py`` shows every
+    fixture projection sits far outside the drift band.
+
+    A NULL vector, or one whose length differs from the plane dim,
+    emits a NULL signature array, so it is never indexed.
 
     ``mat``: (total_bits × dim) float64 plane matrix; ``offsets``:
     per-band bit offsets (len n_bands+1); ``weights``: per-band
@@ -86,15 +89,20 @@ def make_srp_sigs_udf(mat, offsets, weights):
     import numpy as np
 
     n_bands = len(weights)
+    dim = mat.shape[1]
 
-    @pandas_udf("array<long>")
+    @pandas_udf(ArrayType(LongType()))
     def _sigs(v: pd.Series) -> pd.Series:
-        V = np.vstack(v.to_numpy())  # (batch × dim)
-        S = (V @ mat.T) >= 0.0  # (batch × total_bits) sign bits
-        out = np.empty((len(V), n_bands), dtype=np.int64)
-        for j in range(n_bands):
-            out[:, j] = S[:, offsets[j]:offsets[j + 1]] @ weights[j]
-        return pd.Series(list(out))
+        ok = (v.map(len, na_action="ignore") == dim).to_numpy()
+        out = [None] * len(v)
+        if ok.any():
+            S = (np.vstack(v[ok].to_numpy()) @ mat.T) >= 0.0  # (rows × total_bits)
+            sigs = np.empty((len(S), n_bands), dtype=np.int64)
+            for j in range(n_bands):
+                sigs[:, j] = S[:, offsets[j]:offsets[j + 1]] @ weights[j]
+            for i, s in zip(np.flatnonzero(ok), sigs):
+                out[i] = s
+        return pd.Series(out, dtype=object)
 
     return _sigs
 

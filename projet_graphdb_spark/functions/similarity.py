@@ -293,79 +293,20 @@ def srp_auto_bands(
     return srp_bands(n_bands, bits, dim, seed)
 
 
-def srp_signature(vec: Column, planes: list) -> Column:
-    """Signed-random-projection bit signature (long) for a vector.
-
-    ``planes``: list of hyperplanes (list of floats) — fixed/seeded by
-    the caller; the signature is fully deterministic.
-    """
-    # NOTE: the HOF dot is deliberate here.  Unrolling every plane
-    # (bands × bits × dim terms in one projection) grows the generated
-    # processNext() past janino's 64 KB method cap, and the fallback
-    # interprets the WHOLE stage — measured ~10× slower than the HOF at
-    # sf0.01.  Signatures are per-VECTOR (linear), so the interpreted
-    # fold is not the hot path.  (Unrolling the per-PAIR dot in
-    # embedding_cosine_dups was measured too: the fused join stage's
-    # generated code also degrades — the HOF fold wins there as well.)
-    bits = []
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bits.append(F.when(dot(vec, p) >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-# Above this many planes (n_bands × bits) the HOF expression tree is a
-# liability on BOTH sides: the driver spends minutes in single-threaded
-# Catalyst analysis over bands·bits·dim literal nodes (measured: the
-# 64-band × 10-bit auto construction at 30× data never finished its
-# FIRST job inside 10 min), and the generated code blows janino's 64 KB
-# method cap so the whole stage runs interpreted.  Past the cutoff we
-# switch to ONE Arrow-batched pandas UDF whose closure carries the
-# planes as a numpy matrix — plan size O(1), per-row cost one BLAS
-# matmul.
-#
-# r15 (optimization round): cutoff lowered 96 → 16, moving the pinned
-# 8×6 oracle construction (48 planes) onto the Arrow path.  Measured at
-# sf0.1: the 48-plane HOF projection costs 0.5–0.8 s in a friendly plan
-# shape but 3.4–4.4 s whenever the projection lands in a stage whose
-# generated code trips janino's cap (e.g. downstream of a join — the
-# t42 2a lineage), because the ENTIRE stage then evaluates interpreted
-# with per-element boxing; the Arrow matmul is a stable 0.19–0.33 s in
-# every shape (10×).  Signatures are bit-identical: both paths use the
-# same `dot >= 0` convention and the fixtures' sign margins are ≥3e-6
-# (min |dot| over every vector × plane at sf0.001/0.01/0.1) while
-# f64 summation-order drift for a 64-term dot is ≤~1e-14 — pinned by
-# test_srp_signature_array_udf_matches_jvm and the pinned-construction
-# twin below it.  Constructions ≤16 planes (single-band probes) stay on
-# the JVM path: one band's worth of HOF terms codegens fine and skips
-# the Python-worker roundtrip.
-_MAX_JVM_PLANES = 16
-
-
 def srp_signature_array(vec: Column, bands: list) -> Column:
     """Array of per-band SRP signatures (``array<long>``, one signature
-    per band) for a vector — the all-bands form of
-    :func:`srp_signature`, size-gated between a JVM expression build
-    (small constructions: whole-stage codegen, zero Python) and a
-    single vectorized numpy matmul UDF (large auto-tuned constructions,
-    where the expression tree itself becomes the bottleneck — see
-    ``_MAX_JVM_PLANES``).  Bit convention identical on both paths:
-    bit ``i`` of band ``j`` is set iff ``dot(vec, bands[j][i]) >= 0``.
-    """
-    n_planes = sum(len(b) for b in bands)
-    if n_planes <= _MAX_JVM_PLANES:
-        return F.array(*[srp_signature(vec, band) for band in bands])
+    per band) for a vector: bit ``i`` of band ``j`` is set iff
+    ``dot(vec, bands[j][i]) >= 0``.
 
+    Every construction runs the one Arrow-batched numpy matmul UDF
+    ``pyudf.make_srp_sigs_udf``, whose closure carries the planes as a
+    matrix, so the plan stays O(1) in bands·bits·dim.  A NULL vector, or
+    one whose length is not the plane dim, gets a NULL array.
+    """
     import numpy as np
 
     from .pyudf import make_srp_sigs_udf
 
-    # (total_bits × dim) plane matrix + per-band bit weights, captured
-    # in the UDF closure (a 640×64 float64 matrix is ~330 KB —
-    # task-binary noise next to the multi-MB literal plans it replaces)
     mat = np.asarray([p for band in bands for p in band], dtype=np.float64)
     band_sizes = [len(b) for b in bands]
     offsets = np.cumsum([0] + band_sizes)
@@ -387,7 +328,7 @@ def knn_lsh(
     At scale: corpus bucketed once (map-only signature + shuffle on
     bucket), each query joins its bucket only — probe cost ∝ bucket size.
     """
-    sig = srp_signature(F.col(vec_col), planes)
+    sig = srp_signature_array(F.col(vec_col), [planes])[0]
     base = embeddings.select(F.col(id_col), F.col(vec_col), sig.alias("_bucket"))
     q = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"), "_bucket"
@@ -422,63 +363,56 @@ def knn_ivf(
     Index: pick ``n_centroids`` deterministic centroids (the vectors with
     the lowest ids — a seeded stand-in for a k-means codebook, chosen so
     the DuckDB oracle can reproduce the exact cells), assign every corpus
-    vector to its nearest centroid (map-only: the centroid table is tiny
-    and broadcast).  Search: each query probes its ``nprobe`` nearest
-    cells and ranks only vectors in those cells.
+    vector to its nearest centroid (map-only: the codebook is tiny and
+    rides in the kernel's closure).  Search: each query probes its
+    ``nprobe`` nearest cells and ranks only vectors in those cells.
 
-    At 100 TB the assignment is a broadcast join fused into the scan (no
-    corpus shuffle), the cell id becomes the partition/bucket key, and a
+    Cells come from the one nearest-centroid kernel,
+    ``clustering.assign_topn``, over the UNIT-normalized codebook: it
+    ranks by ``||v||² − 2v·ĉ + ||ĉ||²``, and with ``||ĉ|| = 1`` the
+    smallest value is the largest cosine for a fixed ``v``; ties go to
+    the smaller cid, as in the oracle's ``ORDER BY s DESC, cid ASC``.
+    A zero-norm codebook vector has no direction and raises
+    ``ValueError`` before any corpus job runs.
+
+    At 100 TB the assignment is fused into the scan (no corpus
+    shuffle), the cell id becomes the partition/bucket key, and a
     probe touches ``nprobe/n_centroids`` of the data instead of all of
     it.  Output shape matches ``knn_bruteforce``.
     """
+    import numpy as np
+
+    from . import clustering
+
     # the codebook is metadata: collect the handful of centroid vectors
-    # to the driver and inline them as literals, so cell assignment is a
-    # PURE map-side expression over the corpus scan — no join, no
-    # shuffle, no window over the full corpus
-    codebook = [
-        (r[0], [float(x) for x in r[1]])
-        for r in embeddings.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .collect()
-    ]
-    vec = F.col(vec_col)
-    # struct(sim, -cid): array_max picks highest sim, ties -> lowest cid
-    # (identical semantics to ROW_NUMBER ORDER BY sim DESC, cid ASC)
-    cell_structs = F.array(
-        *[
-            F.struct(
-                cosine(vec, F.array(*[F.lit(x) for x in cv])).alias("s"),
-                F.lit(-cid).alias("negcid"),
+    # to the driver and normalize them there; the kernel's closure
+    # carries them, so cell assignment is a map-side UDF over the scan
+    units = {}
+    for r in embeddings.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).collect():
+        c = np.asarray(r[1], dtype=np.float64)
+        norm = np.sqrt(c @ c)
+        if not norm > 0:
+            raise ValueError(
+                f"knn_ivf: codebook vector {r[0]} has norm {norm}; a cosine cell needs a direction"
             )
-            for cid, cv in codebook
-        ]
-    )
-    base = embeddings.select(
-        F.col(id_col),
-        vec,
-        l2norm(vec).alias("_n"),
-        (-F.array_max(cell_structs)["negcid"]).alias("_cell"),
+        units[r[0]] = c / norm
+    vec = F.col(vec_col)
+    base = clustering.assign_topn(
+        embeddings.select(F.col(id_col), vec, l2norm(vec).alias("_n")),
+        units, nprobe=nprobe, vec_col=vec_col,
     )
     assigned = base.select(
         F.col(id_col).alias("neighbour_id"),
         F.col(vec_col).alias("_cvv"),
         F.col("_n").alias("_cnn"),
-        "_cell",
+        F.col("_cells")[0].alias("_cell"),
     )
-    # probe side: only the (few) query rows rank all centroids
-    q = base.filter(F.col(id_col).isin(query_ids)).select(
+    # probe side: each query row explodes its nprobe nearest cells
+    probes = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.explode(cell_structs).alias("_cs"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc(F.col("_cs")["s"]), F.asc(-F.col("_cs")["negcid"])
-    )
-    probes = (
-        q.withColumn("_crank", F.row_number().over(wp))
-        .filter(F.col("_crank") <= nprobe)
-        .select("query_id", "_qv", "_qn", (-F.col("_cs")["negcid"]).alias("_cell"))
+        F.explode("_cells").alias("_cell"),
     )
     cand = (
         assigned.join(F.broadcast(probes), on="_cell")
@@ -776,9 +710,8 @@ def lsh_cosine_dups(
         l2norm(F.col(vec_col)).alias("_n"),
     )
     # one signature pass, materialized: (id, one long per band) is tiny
-    # (~40 B/row at any corpus size); srp_signature_array size-gates
-    # between the codegen'd JVM expression (small/pinned constructions)
-    # and one Arrow matmul UDF (large auto-tuned ones).  posexplode —
+    # (~40 B/row at any corpus size) from one Arrow matmul UDF
+    # (srp_signature_array).  posexplode —
     # not an n-band union — turns the array into (band, sig) rows, so
     # the plan stays O(1) in band count (the old 64-leg union was a
     # driver-side analysis bottleneck before the first task ever ran)
@@ -2599,7 +2532,7 @@ def incremental_srp_dups(
     whose recall drifts.
 
     Per shard: S·bands·bits·dim signature flops (map-only, the same
-    size-gated JVM/Arrow path as the batch tier), a (band, bhash) join
+    Arrow matmul UDF as the batch tier), a (band, bhash) join
     whose shuffle carries the SHARD's keys against the partition-
     pruned index, and the shared candidate-bounded exact-cosine verify
     (:func:`_incremental_cells_pairs` — band and bucket fold into one

@@ -148,6 +148,33 @@ def test_topn_cells_null_and_ragged_vectors_emit_null():
     assert list(cells[2]) == [30, 10]
 
 
+@pytest.mark.parametrize("n_bands,bits", [(1, 8), (8, 6)])
+def test_srp_signatures_null_and_ragged_vectors_emit_null(spark, n_bands, bits):
+    """A NULL vector or one whose length is not the plane dim gets a
+    NULL signature array — never bucket 0, never a task crash — so
+    posexplode drops it and it is not indexed; valid rows in the same
+    batch are signed as usual."""
+    bands = similarity.srp_bands(n_bands, bits, 64, 43)
+    rng = np.random.default_rng(3)
+    good = [[float(x) for x in rng.standard_normal(64)] for _ in range(2)]
+    df = spark.createDataFrame(
+        [(0, good[0]), (1, None), (2, good[1][:63]), (3, good[1])],
+        "id long, v array<double>",
+    )
+    sigs = df.select("id", similarity.srp_signature_array(F.col("v"), bands).alias("s"))
+    got = {r["id"]: r["s"] for r in sigs.collect()}
+    assert got[1] is None and got[2] is None
+    for i, v in ((0, good[0]), (3, good[1])):
+        want = [
+            sum(1 << b for b, p in enumerate(band) if _fold_dot(v, p) >= 0) for band in bands
+        ]
+        assert list(got[i]) == want
+    indexed = sigs.select("id", F.posexplode("s")).select("id").distinct().collect()
+    assert sorted(r["id"] for r in indexed) == [0, 3]
+    first = df.select("id", similarity.srp_signature_array(F.col("v"), bands)[0].alias("b"))
+    assert {r["id"] for r in first.collect() if r["b"] is None} == {1, 2}
+
+
 def test_materialize_sink_backed_roundtrip(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_CKPT_DIR switches materialize() to a parquet
     round-trip: values unchanged, lineage cut (plan reads the sink),

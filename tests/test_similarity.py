@@ -379,55 +379,106 @@ def test_lsh_cosine_dups_auto_bands_matches_explicit(spark, emb):
     )
 
 
-def test_srp_signature_array_udf_matches_jvm(spark, emb):
-    """The Arrow-matmul path (>_MAX_JVM_PLANES planes) must produce
-    bit-identical signatures to the JVM HOF expression path — same
-    planes, same `dot >= 0` convention, only the execution engine
-    differs.  Construction: 20 bands × 5 bits = 100 planes (> the 96
-    cutoff) checked against a forced-JVM build of the same planes."""
-    bands = similarity.srp_bands(n_bands=20, bits=5, dim=64, seed=7)
-    assert sum(len(b) for b in bands) > similarity._MAX_JVM_PLANES
-    via_udf = emb.select(
-        "vec_id", similarity.srp_signature_array(F.col("embedding"), bands).alias("s")
-    ).collect()
-    via_jvm = emb.select(
-        "vec_id",
-        F.array(
-            *[similarity.srp_signature(F.col("embedding"), b) for b in bands]
-        ).alias("s"),
-    ).collect()
-    assert {r["vec_id"]: list(r["s"]) for r in via_udf} == {
-        r["vec_id"]: list(r["s"]) for r in via_jvm
-    }
+def _fold_signatures(mat, bands):
+    """SRP signatures from a left-to-right f64 fold of each dot (the
+    oracles' summation order): bit i of band j is set iff the fold of
+    ``vec · bands[j][i]`` is >= 0."""
+    sigs = []
+    for band in bands:
+        P = np.asarray(band, dtype=np.float64)
+        dots = np.cumsum(mat[:, None, :] * P[None, :, :], axis=2)[:, :, -1]
+        sigs.append(((dots >= 0) * (1 << np.arange(len(band)))).sum(axis=1))
+    return np.stack(sigs, axis=1)
 
 
-def test_srp_signature_pinned_construction_udf_matches_jvm(spark, emb):
-    """r15: the pinned 8×6 oracle construction (48 planes) moved from
-    the JVM HOF path to the Arrow matmul path (_MAX_JVM_PLANES 96→16);
-    its signatures must stay bit-identical to a forced-JVM build of the
-    same planes — these are the exact signatures every SRP oracle
-    (s9/d10/t42-2a) replays in SQL."""
-    bands = similarity.srp_bands(n_bands=8, bits=6, dim=64, seed=0)
-    assert sum(len(b) for b in bands) > similarity._MAX_JVM_PLANES
-    via_udf = emb.select(
-        "vec_id", similarity.srp_signature_array(F.col("embedding"), bands).alias("s")
-    ).collect()
-    via_jvm = emb.select(
-        "vec_id",
-        F.array(
-            *[similarity.srp_signature(F.col("embedding"), b) for b in bands]
-        ).alias("s"),
-    ).collect()
-    assert {r["vec_id"]: list(r["s"]) for r in via_udf} == {
-        r["vec_id"]: list(r["s"]) for r in via_jvm
-    }
+def _seed42_planes():
+    """s3/s7's single band: 8 planes from ``default_rng(42)``."""
+    return [list(r) for r in np.random.default_rng(42).standard_normal((8, 64))]
+
+
+@pytest.mark.parametrize(
+    "bands",
+    [
+        pytest.param([_seed42_planes()], id="s3_seed42_8"),
+        pytest.param(similarity.srp_auto_bands(500, 64, threshold=0.9), id="auto_500_4x4"),
+        pytest.param(similarity.srp_bands(8, 6, 64, 43), id="pinned_8x6_seed43"),
+        pytest.param(similarity.srp_bands(20, 5, 64, 7), id="20x5_seed7"),
+    ],
+)
+def test_srp_signature_array_matches_numpy_fold(spark, emb, emb_np, bands):
+    """The Arrow matmul UDF signs every construction exactly as a
+    left-to-right fold of each dot would (the oracles' order): the
+    fixture's projections sit far outside the summation-order drift."""
+    ids, mat = emb_np
+    got = dict(
+        emb.select(
+            "vec_id", similarity.srp_signature_array(F.col("embedding"), bands).alias("s")
+        ).collect()
+    )
+    want = _fold_signatures(mat, bands)
+    assert {i: list(got[i]) for i in ids} == {i: list(w) for i, w in zip(ids, want)}
+
+
+def _ivf_frame(spark, codebook, corpus):
+    """(vec_id, embedding) with ids 0.. for the codebook rows, then the
+    corpus rows; every value is exact in float32."""
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(list(codebook) + list(corpus))]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_knn_ivf_scaled_duplicate_centroid_loses_to_smaller_cid(spark, monkeypatch):
+    """A codebook vector that is an exact 2x copy of another normalizes
+    to a bitwise-equal unit vector: every vector in that direction ties
+    between the two cells and goes to the smaller cid, so the group is
+    never split and a query's probes are [0, 1]."""
+    from projet_graphdb_spark.functions import clustering
+
+    seen = {}
+    real = clustering.assign_topn
+
+    def spy(emb, cents, *a, **kw):
+        seen["cents"] = cents
+        seen["out"] = real(emb, cents, *a, **kw)
+        return seen["out"]
+
+    monkeypatch.setattr(clustering, "assign_topn", spy)
+    c0 = np.array([0.5, 0.25, 0.125, 0.75])
+    codebook = [c0, 2 * c0, [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
+    corpus = [c0 + 0.0625 * np.eye(4)[i % 4] for i in range(8)] + [[0.0, 0.0, 1.0, 0.25]]
+    df = _ivf_frame(spark, codebook, corpus)
+    out = similarity.knn_ivf(df, query_ids=[4], n_centroids=4, nprobe=2, k=20)
+    assert seen["cents"][1].tobytes() == seen["cents"][0].tobytes()
+    cells = {r["vec_id"]: list(r["_cells"]) for r in seen["out"].collect()}
+    for i in [0, 1, *range(4, 12)]:
+        assert cells[i] == [0, 1], (i, cells[i])
+    assert {r["neighbour_id"] for r in out.collect()} == {0, 1, *range(5, 12)}
+
+
+def test_knn_ivf_zero_norm_codebook_vector_raises(spark):
+    """A zero-norm centroid has no direction: knn_ivf names its cid in a
+    ValueError while building the frame, before any corpus job runs."""
+    df = _ivf_frame(spark, [[1.0, 0.0], [0.0, 0.0], [0.0, 1.0]], [[1.0, 1.0]])
+    with pytest.raises(ValueError, match="codebook vector 1 "):
+        similarity.knn_ivf(df, query_ids=[3], n_centroids=3, nprobe=1, k=2)
+
+
+def test_knn_ivf_zero_norm_corpus_vector_divides_like_bruteforce(spark):
+    """A zero-norm corpus vector is not special-cased: like every cosine
+    operator here, the candidate score divides by its norm, which ANSI
+    mode rejects (it ties into cell 0, the query's cell)."""
+    df = _ivf_frame(spark, [[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.25], [0.0, 0.0]])
+    for out in (
+        similarity.knn_ivf(df, query_ids=[2], n_centroids=2, nprobe=1, k=3),
+        similarity.knn_bruteforce(df, query_ids=[2], k=3),
+    ):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            out.collect()
 
 
 def test_lsh_cosine_dups_large_band_count_runs(spark, emb):
-    """A large auto-tuned construction (above the JVM-plane cutoff) runs
-    end-to-end through the posexplode candidate path and agrees with the
-    same-planes small-construction semantics: every emitted pair is
-    verified-exact at the threshold, ids ordered."""
+    """A large auto-tuned construction runs end-to-end through the
+    posexplode candidate path: every emitted pair is verified-exact at
+    the threshold, ids ordered."""
     bands = similarity.srp_bands(n_bands=20, bits=5, dim=64, seed=7)
     got = similarity.lsh_cosine_dups(emb, bands=bands, threshold=0.3).collect()
     for r in got:

@@ -1,17 +1,26 @@
-"""SRP sign-margin gauge (round-15 ADVICE): the Arrow BLAS signature
-path is bit-identical to the SQL oracle replay ONLY while every
-|dot(vector, plane)| stays orders of magnitude above f64
-summation-order drift — a vector whose projection lands inside the
-drift band could flip a sign bit between summation orders and split
-engine vs oracle silently.  This gauge measures the minimum |dot|
-across vectors × planes of the PINNED 8×6 construction (seed 43) for
-each test fixture and asserts margin / drift-bound >= MARGIN_FACTOR.
+"""Sign- and rank-margin gauge for the engine's Arrow BLAS kernels.
 
-(The r16 exact-VERIFY change needs no such gauge: ``pyudf.seq_rowdot``
+Each kernel computes a dot or distance in a different summation order
+than the SQL oracles' left-to-right fold.  It agrees with the oracle
+only while every decision it makes (a sign bit, a cell rank) is far
+from the f64 drift between the two orders.  For each test fixture the
+gauge reports the smallest such margin and asserts margin / drift >=
+MARGIN_FACTOR.
+
+SRP receipt: ``similarity.srp_signature_array`` signs every
+construction through one numpy matmul (``pyudf.make_srp_sigs_udf``).
+A vector whose projection lands inside the drift band could flip a
+sign bit between summation orders and split engine vs oracle
+silently.  For the pinned 8×6 construction (seed 43, s9/d10/t42),
+s3/s7's single band of 8 seed-42 planes, and the 4×4 auto build
+``srp_auto_bands(500, 64, threshold=0.9)``, the gauge measures the
+minimum |dot| over vectors × planes against a worst-case reorder drift
+bound.
+
+(The exact-VERIFY tail needs no gauge: ``pyudf.seq_rowdot``
 reproduces the JVM fold's exact IEEE operation sequence, so engine
-sims are bit-identical by construction, not by margin — pinned by
-tests/test_pyudf_verify.py.  Signs of SRP projections are the one
-place a BLAS matmul's different summation order is load-bearing.)
+sims are bit-identical by construction — pinned by
+tests/test_pyudf_verify.py.)
 
 Cell-assignment receipt: ``clustering.assign_topn`` picks cells from
 the BLAS expansion ``||v||² − 2v·c + ||c||²`` (``pyudf.cell_sqdist``),
@@ -23,6 +32,14 @@ rounded to 6 dp, and ``ivf_train``'s 8 cells × 2 Lloyd rounds) the
 gauge reports, per nprobe, the smallest such gap and the discrepancy,
 both scaled by ``||v||² + ||c||²`` so near-zero self-distances do not
 dominate, and asserts gap / discrepancy >= MARGIN_FACTOR.
+
+Cosine-cell receipt: ``similarity.knn_ivf`` (s4) ranks cells by the
+same kernel over the unit-normalized ``id < 8`` codebook, while its
+oracle ranks ``list_cosine_similarity``.  The gauge maps the kernel's
+distances back to cosine units, ``(||v||² + ||ĉ||² − D) / (2||v||)``,
+and compares their largest discrepancy from a left-to-right cosine
+fold with the smallest gap between the oracle's ``nprobe``-th and
+``(nprobe+1)``-th cosine, for nprobe 1 and 2.
 
 Usage: python tools/margin_gauge.py [out.json]
 Exit 1 if any fixture's margin is below the bound.
@@ -40,7 +57,7 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from projet_graphdb_spark.functions.pyudf import cell_sqdist  # noqa: E402
-from projet_graphdb_spark.functions.similarity import srp_bands  # noqa: E402
+from projet_graphdb_spark.functions.similarity import srp_auto_bands, srp_bands  # noqa: E402
 
 FIXTURES = [
     "/root/testdata/sf0.001",
@@ -119,27 +136,78 @@ def cell_gauges(V: np.ndarray) -> dict:
     }
 
 
-def gauge(sf_dir: str) -> dict:
-    V = load_embeddings(sf_dir)
-    dim = V.shape[1]
-    planes = np.asarray(
-        [p for band in srp_bands(8, 6, dim, 43) for p in band]
-    )  # (48, dim)
-    D = V @ planes.T  # (n, 48)
-    # worst-case reorder drift per dot: d * eps * sum|v_i * p_i|
-    absD = np.abs(V) @ np.abs(planes.T)
-    drift = dim * np.finfo(np.float64).eps * absD
-    margin = np.abs(D)
-    ratio = margin / np.maximum(drift, np.finfo(np.float64).tiny)
-    cells = cell_gauges(V)
+def srp_constructions(dim: int) -> dict:
+    """Every SRP construction a fixture query signs: the pinned 8×6
+    bands, s3/s7's one band (``__spark_entry__._srp_planes``: 8 planes
+    from ``default_rng(42)``), and the 16-plane auto build."""
     return {
-        "n_vectors": int(V.shape[0]),
-        "dim": int(dim),
+        "pinned_8x6_seed43": srp_bands(8, 6, dim, 43),
+        "s3_s7_seed42_8": [list(np.random.default_rng(42).standard_normal((8, dim)))],
+        "auto_500_4x4": srp_auto_bands(500, dim, threshold=0.9),
+    }
+
+
+def srp_gauge(V: np.ndarray, bands: list) -> dict:
+    """Min |dot| over vectors × planes vs the worst-case reorder drift
+    ``d * eps * sum|v_i * p_i|`` of each dot."""
+    planes = np.asarray([p for band in bands for p in band], dtype=np.float64)
+    margin = np.abs(V @ planes.T)
+    drift = V.shape[1] * np.finfo(np.float64).eps * (np.abs(V) @ np.abs(planes.T))
+    ratio = margin / np.maximum(drift, np.finfo(np.float64).tiny)
+    return {
+        "n_planes": int(len(planes)),
         "min_abs_dot": float(margin.min()),
         "max_drift_bound": float(drift.max()),
         "min_margin_over_drift": float(ratio.min()),
+        "ok": bool(ratio.min() >= MARGIN_FACTOR),
+    }
+
+
+def srp_gauges(V: np.ndarray) -> dict:
+    return {name: srp_gauge(V, b) for name, b in srp_constructions(V.shape[1]).items()}
+
+
+def fold_dot(V: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Left-to-right f64 fold of each row's dot with ``c``."""
+    return np.cumsum(V * c, axis=-1)[..., -1]
+
+
+def ivf_cosine_gauge(V: np.ndarray, k: int = N_CELLS) -> dict:
+    """s4's receipt: oracle cosine rank gaps at nprobe 1 and 2 vs the
+    kernel's discrepancy, both in cosine units."""
+    C = V[:k]
+    vn = np.sqrt(fold_dot(V, V))
+    cos = np.stack([fold_dot(V, c) / (vn * np.sqrt(fold_dot(c, c))) for c in C], axis=1)
+    U = np.stack([c / np.sqrt(c @ c) for c in C])  # as knn_ivf normalizes
+    usq = (U * U).sum(axis=1)
+    D = cell_sqdist(V, U, usq)
+    kernel_cos = ((V * V).sum(axis=1)[:, None] + usq[None, :] - D) / (2.0 * vn[:, None])
+    err = float(np.abs(kernel_cos - cos).max())
+    ranked = -np.sort(-cos, axis=1)
+    per_nprobe = {p: float((ranked[:, p - 1] - ranked[:, p]).min()) for p in (1, 2)}
+    min_gap = min(per_nprobe.values())
+    ratio = min_gap / max(err, np.finfo(np.float64).tiny)
+    return {
+        "min_gap_per_nprobe": per_nprobe,
+        "min_cosine_gap": min_gap,
+        "max_cosine_discrepancy": err,
+        "min_gap_over_discrepancy": ratio,
+        "ok": bool(ratio >= MARGIN_FACTOR),
+    }
+
+
+def gauge(sf_dir: str) -> dict:
+    V = load_embeddings(sf_dir)
+    srp = srp_gauges(V)
+    cells = cell_gauges(V)
+    ivf_cos = ivf_cosine_gauge(V)
+    return {
+        "n_vectors": int(V.shape[0]),
+        "dim": int(V.shape[1]),
+        "srp": srp,
         "cells": cells,
-        "ok": bool(ratio.min() >= MARGIN_FACTOR) and all(c["ok"] for c in cells.values()),
+        "ivf_cosine": ivf_cos,
+        "ok": all(r["ok"] for r in [*srp.values(), *cells.values(), ivf_cos]),
     }
 
 
@@ -154,18 +222,25 @@ def main() -> None:
         r = gauge(d)
         results[d] = r
         ok = ok and r["ok"]
-        print(
-            f"{d}: n={r['n_vectors']} dim={r['dim']} "
-            f"min|dot|={r['min_abs_dot']:.3e} "
-            f"drift<= {r['max_drift_bound']:.3e} "
-            f"margin/drift>={r['min_margin_over_drift']:.1e}"
-        )
+        print(f"{d}: n={r['n_vectors']} dim={r['dim']}")
+        for name, g in r["srp"].items():
+            print(
+                f"  srp {name}: min|dot|={g['min_abs_dot']:.3e} "
+                f"drift<= {g['max_drift_bound']:.3e} "
+                f"margin/drift>={g['min_margin_over_drift']:.1e}"
+            )
         for name, c in r["cells"].items():
             print(
                 f"  cells {name}: min gap={c['min_scaled_gap']:.3e} "
                 f"discrepancy={c['max_scaled_discrepancy']:.3e} "
                 f"gap/discrepancy>={c['min_gap_over_discrepancy']:.1e}"
             )
+        g = r["ivf_cosine"]
+        print(
+            f"  s4 cosine cells: min gap={g['min_cosine_gap']:.3e} "
+            f"discrepancy={g['max_cosine_discrepancy']:.3e} "
+            f"gap/discrepancy>={g['min_gap_over_discrepancy']:.1e}"
+        )
         print(f"  {'OK' if r['ok'] else 'TOO CLOSE'}")
     results["margin_factor_required"] = MARGIN_FACTOR
     results["ok"] = ok
