@@ -33,6 +33,7 @@ from projet_graphdb_spark.functions import (
     text,
 )
 from projet_graphdb_spark.functions.asof import asof_join
+from projet_graphdb_spark.functions.materialize import materialize
 from projet_graphdb_spark.sources import load_tpch_graph
 from projet_graphdb_spark.streaming import (
     click_purchase_pairs_batch,
@@ -256,14 +257,15 @@ def _dup_clusters_cached(spark, sf_dir):
     """d5's MinHash-LSH cluster manifest, memoized per (session, sf) —
     the same move as sources/parquet_graph._LOAD_CACHE: d5/d12/d17/d18
     all consume the identical manifest, and the iterative component
-    closure is the expensive part, so it is computed once and pinned
-    with localCheckpoint (blocks freed with the session)."""
+    closure is the expensive part, so it is computed once behind a
+    ``materialize`` barrier (blocks freed with the session; a sink stays
+    until ``SPARK_GRAFT_CKPT_DIR`` is cleaned)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _DUP_CLUSTERS_CACHE:
         cl = dedup.dup_clusters(_docs(spark, sf_dir), threshold=0.2, hash="md5")
         if len(_DUP_CLUSTERS_CACHE) > 16:
             _DUP_CLUSTERS_CACHE.clear()
-        _DUP_CLUSTERS_CACHE[key] = cl.localCheckpoint(eager=True)
+        _DUP_CLUSTERS_CACHE[key] = materialize(cl)
     return _DUP_CLUSTERS_CACHE[key]
 
 
@@ -1109,9 +1111,9 @@ def _s33_policy_frame(spark, sf_dir):
     # assert's first() is the only execution — previously the caller's
     # count (bench) or m17's union re-ran the whole occupancy+drift
     # policy plan a second time (r15 optimization, ~1-4 s per re-run)
-    out = similarity.index_rebuild_policy(
+    out = materialize(similarity.index_rebuild_policy(
         spark.read.parquet(path), live, old_half, new_half
-    ).localCheckpoint(eager=True)
+    ))
     row = out.first()
     if not row["config_stale"] or row["decision"] != "rebuild":
         raise AssertionError(
@@ -2347,9 +2349,7 @@ def m17_maintenance_decision_table(spark, sf_dir):
         # policy row, the auto ladder's gauges, the index write, and the
         # recovered policy row — checkpoint once instead of five md5
         # re-scans
-        st = _flat_border_fingerprints(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
+        st = materialize(_flat_border_fingerprints(spark, sf_dir))
         ham = dedup.hamming_reband_policy(
             st, nbits=64, bands=4, hash_col="dhash",
         ).select(
@@ -2445,9 +2445,7 @@ def m19_dhash_gauge_ledger(spark, sf_dir):
 
     # five gauge runs consume the same fingerprint frame — checkpoint
     # once (bounded: 2N rows of two longs) instead of five md5 re-scans
-    st = _flat_border_fingerprints(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    st = materialize(_flat_border_fingerprints(spark, sf_dir))
     path = tempfile.mkdtemp(prefix="m19_gauge_") + "/ledger"
     # the five maintenance runs are independent writes to disjoint
     # run_seq partitions of the same checkpointed fingerprint frame —
@@ -5587,9 +5585,9 @@ def e38_pair_sink_retention(spark, sf_dir):
     the rest' or it goes red."""
     import tempfile
 
-    ev = load_events(spark, sf_dir).select(
+    ev = materialize(load_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
-    ).localCheckpoint(eager=True)
+    ))
     base = tempfile.mkdtemp(prefix="retention_")
     sink = base + "/sink"
     for b in range(6):
@@ -5801,9 +5799,9 @@ def d28_two_day_ingest(spark, sf_dir):
     corpus = docs.where(~F.col("source").isin("src0", "src1"))
     path = tempfile.mkdtemp(prefix="lsh_lifecycle_") + "/index"
     dedup.lsh_band_index(corpus, hash="md5").write.partitionBy("band").parquet(path)
-    dec1 = dedup.ingest_dedup_decisions(
+    dec1 = materialize(dedup.ingest_dedup_decisions(
         corpus, day1, threshold=0.2, hash="md5", index=spark.read.parquet(path)
-    ).localCheckpoint(eager=True)
+    ))
     accepted1 = day1.join(
         dec1.where(F.col("status") == "unique").select(
             F.col("new_id").alias("doc_id")
@@ -6673,9 +6671,7 @@ def e23_dimension_asof_stream(spark, sf_dir):
     from projet_graphdb_spark.streaming import drain, state_partitions, stream_source
 
     path, schema = stream_source(spark, sf_dir)
-    dim = relational.scd2_intervals(load_events(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    dim = materialize(relational.scd2_intervals(load_events(spark, sf_dir)))
     stream = (
         spark.readStream.schema(schema)
         .parquet(path)

@@ -20,8 +20,10 @@ physical strategy (broadcast vs shuffle joins, pushdown, pruning):
 * ``return``        → projection/reorder (sem.ml:348-356).
 
 Sequential mutation over immutable DataFrames grows lineage; every
-``checkpoint_every`` graph mutations the node/edge tables are
-``localCheckpoint``-ed to keep plans bounded (SURVEY §7 risk register).
+``checkpoint_every`` graph mutations the node/edge tables go through
+the engine's one lineage barrier, ``functions.materialize`` (lazy by
+default, a parquet sink under ``SPARK_GRAFT_CKPT_DIR``), to keep plans
+bounded (SURVEY §7 risk register).
 """
 
 from __future__ import annotations
@@ -249,10 +251,11 @@ class Executor:
             # broadcast offset join -> map-only id arithmetic.  Dense,
             # and consistent for both consumers (ids are a pure function
             # of the frozen _mid/_pid columns).
-            src = (
+            from ..functions.materialize import materialize
+
+            src = materialize(
                 b.df.withColumn("_pid", F.spark_partition_id())
                 .withColumn("_mid", F.monotonically_increasing_id())
-                .localCheckpoint(eager=True)
             )
             pc = src.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c")).collect()
             acc, offs = 0, []
@@ -364,7 +367,7 @@ class Executor:
         of d frontier expansions.  The bounded form walks hop counts
         explicitly (hi is small by construction) and unions hops
         lo..hi.  Every round shuffles on the join key and cuts lineage
-        with a rotated localCheckpoint (superseded blocks freed eagerly).
+        with a rotated barrier (superseded blocks or sinks freed eagerly).
         """
         from ..functions.graph_algos import _ckpt_rotate, _materialize, _shrink
 
@@ -791,10 +794,12 @@ class Executor:
     def _after_mutation(self):
         self._mutations += 1
         if self.checkpoint_every and self._mutations % self.checkpoint_every == 0:
+            from ..functions.materialize import materialize
+
             st = self.state
-            st.edges = st.edges.localCheckpoint(eager=False)
+            st.edges = materialize(st.edges, eager=False)
             for lb in st.nodes:
-                st.nodes[lb] = st.nodes[lb].localCheckpoint(eager=False)
+                st.nodes[lb] = materialize(st.nodes[lb], eager=False)
 
 
 # ---------------------------------------------------------------------------

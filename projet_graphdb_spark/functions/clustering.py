@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 
 def _sqdist_to_literal(vec: Column, centroid: list) -> Column:
     """Squared euclidean distance to a literal centroid, accumulated
@@ -98,7 +100,7 @@ def kmeans_centroids(
     coordinates rounded to ``round_dp`` after every average).  The
     driver-side dict is the INDEX METADATA a consumer (e.g. IVF search)
     hands to :func:`assign_topn`."""
-    emb = embeddings.select(F.col(id_col), F.col(vec_col)).localCheckpoint(eager=True)
+    emb = materialize(embeddings.select(F.col(id_col), F.col(vec_col)))
     seed = emb.filter(F.col(id_col) < k).select(id_col, vec_col).collect()
     cents = {
         int(r[id_col]): [round(float(x), round_dp) for x in r[vec_col]] for r in seed

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
 from .text import fingerprint
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -89,20 +90,20 @@ def shingle_frame(
     outer ``transform``'s input array is evaluated once per row and the
     hash lambda captures only its own element variable.  ``_sh`` is
     then ``array<long>`` instead of ``array<string>``."""
-    toks = docs.select(
+    toks = materialize(docs.select(
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
         F.col(text_col).alias("_txt"),
         F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
-    ).localCheckpoint(eager=True)
+    ))
     sh = shingles_of_tokens(F.col("_toks"), F.col("_txt"), n)
     if hash_fn is not None:
         sh = F.transform(sh, lambda s: hash_fn(s))
-    return toks.select(
+    return materialize(toks.select(
         F.col(id_col),
         *[F.col(c) for c in extra_cols],
         sh.alias("_sh"),
-    ).localCheckpoint(eager=True)
+    ))
 
 
 def ngram_jaccard_pairs(
@@ -377,7 +378,7 @@ def minhash_shared(
     )
     sig = minhash_signatures(base, num_hashes)
     if checkpoint_sig:
-        sig = sig.localCheckpoint(eager=True)
+        sig = materialize(sig)
     # config records the COLUMN layout too (round-7 advice): a shared
     # tuple built from a different id/text column silently hashes the
     # wrong corpus; the assert in minhash_lsh_pairs must catch that.
@@ -921,10 +922,10 @@ def dup_clusters(
     # union references its input twice, and re-running the whole
     # MinHash-LSH candidate+verify pipeline per branch doubles the
     # expensive part
-    pairs = minhash_lsh_pairs(
+    pairs = materialize(minhash_lsh_pairs(
         docs, num_hashes=num_hashes, bands=bands, threshold=threshold,
         n=n, text_col=text_col, id_col=id_col, hash=hash,
-    ).localCheckpoint(eager=True)
+    ))
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )

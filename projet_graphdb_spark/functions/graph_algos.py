@@ -13,7 +13,7 @@ DataFrame joins so they run anywhere DataFrames run:
 
 Scale design: each iteration is one join + aggregate on the edge table
 (shuffle on dst/src) — the classic pregel message pattern.  Lineage is
-cut with ``localCheckpoint`` every iteration, otherwise the plan doubles
+cut with ``materialize`` every iteration, otherwise the plan doubles
 per round and the driver, not the cluster, becomes the bottleneck.  For
 a 100 TB graph, pre-partition ``edges`` by ``src`` (bucketing) so every
 iteration's join co-locates.
@@ -25,6 +25,8 @@ import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .materialize import handle, materialize, release
 
 # Below this row count a frame is "small": a single-partition plan beats
 # shuffle fan-out (32 map + AQE reduce tasks of pure scheduling overhead
@@ -49,13 +51,10 @@ def _probe(df: DataFrame) -> None:
 
 
 def _materialize(df: DataFrame) -> tuple[DataFrame, int, bool]:
-    """Lineage barrier + size probe (localCheckpoint by default,
-    sink-backed parquet when SPARK_GRAFT_CKPT_DIR is set — guide §5,
-    r15 verdict item 7).  Returns (frame, rows, is_small); small frames
-    are coalesced to one partition so every downstream stage schedules
-    one task instead of shuffle.partitions tasks."""
-    from .materialize import materialize
-
+    """Lineage barrier (:func:`materialize`) + size probe.  Returns
+    (frame, rows, is_small); small frames are coalesced to one
+    partition so every downstream stage schedules one task instead of
+    shuffle.partitions tasks."""
     _probe(df)
     df = materialize(df, eager=True)
     n = df.count()  # free: already materialized
@@ -70,91 +69,48 @@ def _shrink(df: DataFrame, small: bool) -> DataFrame:
 
 
 def _ckpt_rotate(df: DataFrame, prev_handle):
-    """Checkpoint a per-iteration frame and free its predecessor.
+    """Materialize a per-iteration frame and free its predecessor.
 
-    Returns ``(checkpointed_df, rdd_handle)``.  The handle is the JVM
-    RDD backing THIS checkpoint (found under the optional schema-
-    preserving Project the checkpoint Dataset wraps it in); the
-    predecessor's handle — which nothing can reference any more — is
-    unpersisted eagerly.  Without this, every iteration's blocks stay
-    pinned until JVM GC notices the dead weak refs, and stale iteration
-    state accumulates in executor storage memory for no benefit.  Only
-    handles produced by this function are ever dropped: unpersisting an
-    arbitrary frame's leaf RDD could kill a *shared* lineage-truncated
-    checkpoint (e.g. the input edge table), which is unrecoverable.
-
-    Sink-backed mode (SPARK_GRAFT_CKPT_DIR set): the handle is the
-    predecessor's parquet path, deleted instead of unpersisted.
+    Returns ``(materialized_df, handle)``; the handle (see
+    :func:`materialize.handle`) is what the NEXT rotation passes back
+    as ``prev_handle`` to :func:`materialize.release`.  Without this,
+    every iteration's blocks (or sink files) stay around until JVM GC
+    notices the dead weak refs, and stale iteration state accumulates
+    for no benefit.  Only handles produced by a rotation are ever
+    released: unpersisting an arbitrary frame's leaf RDD could kill a
+    *shared* lineage-truncated checkpoint (e.g. the input edge table),
+    which is unrecoverable.
     """
-    from .materialize import handle_of, materialize
-
     _probe(df)
     out = materialize(df, eager=True)
-    handle = handle_of(out) or _ckpt_handle(out)
-    _unpersist(prev_handle)
-    return out, handle
-
-
-def _ckpt_handle(df: DataFrame):
-    """JVM RDD backing a checkpointed Dataset (under the optional
-    schema-preserving Project), or None."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "Project":
-            plan = plan.child()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            return plan.rdd()
-    except Exception:
-        pass
-    return None
-
-
-def _unpersist(handle):
-    if isinstance(handle, str):  # sink-backed predecessor: delete it
-        from .materialize import release
-
-        release(handle)
-    elif handle is not None:
-        try:
-            handle.unpersist(False)
-        except Exception:
-            pass  # best-effort: never fail the algorithm over cleanup
+    h = handle(out)
+    release(prev_handle)
+    return out, h
 
 
 def _ckpt_rotate_agg(df: DataFrame, prev_handle, agg_exprs: list):
-    """Checkpoint a per-iteration frame LAZILY and materialize it via
-    the fixpoint-witness aggregate — ONE Spark job per iteration where
+    """Materialize a per-iteration frame LAZILY and run it via the
+    fixpoint-witness aggregate — ONE Spark job per iteration where
     eager-checkpoint-then-aggregate costs two (the per-job fixed cost
     dominates the deliberately small bench graphs, and at scale it's
-    one fewer full pass over the iteration state).
+    one fewer full pass over the iteration state).  With
+    ``SPARK_GRAFT_CKPT_DIR`` set the barrier is eager anyway (the
+    parquet write is the materialization) and the aggregate is a
+    second, columnar-scan job over the sunk rows.
 
-    Ordering matters: the predecessor is unpersisted only AFTER the
+    Ordering matters: the predecessor is released only AFTER the
     aggregate has computed (and thus persisted) every partition of the
-    new checkpoint — a lazy checkpoint still reads its parent's blocks
+    new barrier — a lazy checkpoint still reads its parent's blocks
     until it materializes.
 
-    Returns ``(checkpointed_df, rdd_handle, witness_row)``.
-
-    Sink-backed mode (SPARK_GRAFT_CKPT_DIR set): the parquet write is
-    the materialization (necessarily eager — one write job) and the
-    witness aggregate is a second, columnar-scan job over the sunk
-    rows; the handle is the predecessor's path, deleted not
-    unpersisted.  That is the 100-TB shape: durable iteration state,
-    no lineage truncation, no executor-storage pinning (guide §5).
+    Returns ``(materialized_df, handle, witness_row)``.
     """
-    from .materialize import ckpt_dir, handle_of, materialize
-
     _probe(df)
-    if ckpt_dir():
-        out = materialize(df, eager=True)
-        row = out.agg(*agg_exprs).collect()[0]
-        handle = handle_of(out)
-    else:
-        out = df.localCheckpoint(eager=False)
-        row = out.agg(*agg_exprs).collect()[0]
-        handle = _ckpt_handle(out)
-    _unpersist(prev_handle)
-    return out, handle, row
+    out = materialize(df, eager=False)
+    row = out.agg(*agg_exprs).collect()[0]
+    h = handle(out)
+    release(prev_handle)
+    return out, h, row
 
 
 def bfs_levels(
@@ -177,9 +133,9 @@ def bfs_levels(
     # (parquet scans, unions) from scratch
     e, _, small = _materialize(e.select("src", "dst"))
     spark = edges.sparkSession
-    frontier = spark.createDataFrame(
+    frontier = materialize(spark.createDataFrame(
         [(int(s), 0) for s in sources], "id long, level int"
-    ).localCheckpoint(eager=True)
+    ))
     # visited = lazy union of the per-level checkpointed frontiers: RDD
     # union is a narrow op over already-materialized data, so the
     # anti-join below never recomputes anything and we skip the extra
@@ -227,6 +183,8 @@ def pagerank(
             .distinct()
         )
     nodes, n, _ = _materialize(nodes.select("id"))
+    if n == 0:  # no nodes, no ranks (and no 1/n)
+        return nodes.withColumn("rank", F.lit(0.0))
     out_deg, _, _ = _materialize(
         e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).withColumnRenamed("src", "_dsrc")
     )
@@ -288,9 +246,9 @@ def sssp(
         )
     e, _, small = _materialize(e)
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
+    dist = materialize(spark.createDataFrame(
         [(int(s), 0.0) for s in sources], "id long, dist double"
-    ).localCheckpoint(eager=True)
+    ))
     ckpt_handle = None
     prev_sum = None
     for _ in range(num_iter):
@@ -986,7 +944,7 @@ def landmark_closeness(
     seed = e.sparkSession.createDataFrame(
         [(x, x, 0) for x in lm], "lm long, id long, dist int"
     )
-    frontier = seed.localCheckpoint(eager=True)
+    frontier = materialize(seed)
     # visited = lazy union of the per-round checkpointed frontiers (the
     # bfs_levels trick): RDD union over materialized data, so each round
     # runs ONE job — the lazy checkpoint materialized by its own

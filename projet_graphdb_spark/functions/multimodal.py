@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .materialize import materialize
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -673,7 +675,7 @@ def dhash_band_index(
     a recovery survives the query that ran it: the index remembers
     identity/interleave/permutation and every shard + append bands
     the same way from the read-back config.  The fingerprint frame is
-    localCheckpointed first so the ladder's gauge rungs (and the index
+    materialized first so the ladder's gauge rungs (and the index
     write) never re-run the payload-decoding mapInPandas pass — the
     expensive step for real images.
 
@@ -687,7 +689,7 @@ def dhash_band_index(
     )
     if layout == "auto":
         # bounded: one (id, dhash) row per media — two longs
-        st = st.localCheckpoint(eager=True)
+        st = materialize(st)
     return hamming_band_index(
         st, nbits=64, bands=bands, layout=layout, id_col=id_col,
         hash_col="dhash", hot_share=hot_share,

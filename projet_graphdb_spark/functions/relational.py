@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .materialize import materialize
+
 
 def rev_decimal() -> F.Column:
     """Discounted revenue computed EXACTLY in DECIMAL:
@@ -200,7 +202,7 @@ def partition_offset_rank(
 
     Mechanics: ``repartitionByRange`` on the sort key (the range
     partitioner guarantees partition *i* holds keys strictly below
-    partition *i+1*), freeze the layout with a localCheckpoint, collect
+    partition *i+1*), freeze the layout with ``materialize``, collect
     per-partition COUNTS (driver sees #partitions rows, never data),
     prefix-sum them into offsets, broadcast the offsets back, and add a
     PARTITIONED intra-partition ``row_number``.  Every stage is
@@ -208,11 +210,11 @@ def partition_offset_rank(
 
     ``order_cols`` must be a total order (give a tiebreaker) or ranks
     within ties are partition-placement-dependent.  Costs one range
-    shuffle + a localCheckpoint (which lives for the session like every
-    checkpoint here — the frozen layout is what both the offsets and
-    the ranks are defined against); when an approximate rank suffices,
-    use ``equidepth_histogram``-style percentile binning instead (the
-    t36 fix).  Internal columns use a ``__por_`` prefix so caller
+    shuffle + a ``materialize`` barrier (which lives for the session
+    like every non-rotation barrier — the frozen layout is what both
+    the offsets and the ranks are defined against); when an
+    approximate rank suffices, use ``equidepth_histogram``-style
+    percentile binning instead (the t36 fix).  Internal columns use a ``__por_`` prefix so caller
     columns named ``_pid``/``_off`` survive; a caller column colliding
     with ``rank_col`` or the internals raises.
 
@@ -287,11 +289,10 @@ def partition_offset_rank(
                 rank_col, F.lit(0).cast("long") + F.row_number().over(w)
             ).drop("__por_pid")
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    src = (
+    src = materialize(
         df.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("__por_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     pc = src.groupBy("__por_pid").agg(F.count(F.lit(1)).alias("_c")).collect()
     acc, offs = 0, []

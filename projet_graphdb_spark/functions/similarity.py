@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .materialize import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -517,12 +519,12 @@ def embedding_cosine_dups(
     large blocks is ``srp_cosine_pairs`` (s9), which bands the corpus
     sub-quadratically and verifies exactly inside buckets.
     """
-    base = embeddings.select(
+    base = materialize(embeddings.select(
         F.col(block_col).alias("_blk"),
         F.col(id_col).alias("_vid"),
         F.col(vec_col).alias("_v"),
         l2norm(F.col(vec_col)).alias("_n"),
-    ).localCheckpoint(eager=True)
+    ))
     if not exact_ok:
         # one tiny agg over the already-materialized checkpoint blocks —
         # negligible next to the quadratic join it refuses to run
@@ -715,9 +717,9 @@ def lsh_cosine_dups(
     # not an n-band union — turns the array into (band, sig) rows, so
     # the plan stays O(1) in band count (the old 64-leg union was a
     # driver-side analysis bottleneck before the first task ever ran)
-    sigs = base.select(
+    sigs = materialize(base.select(
         "_vid", srp_signature_array(F.col("_v"), bands).alias("_sigs")
-    ).localCheckpoint(eager=True)
+    ))
     cand = sigs.select(
         "_vid", F.posexplode("_sigs").alias("_band", "_sig")
     )
@@ -1029,14 +1031,13 @@ def ivf_cosine_dups(
                 max_centroids=max_centroids,
                 max_train_rows=max_train_rows,
             )
-        assigned_cells = (
+        # (id, cell) is ~16 B/row; candidate generation references it
+        # twice and the BLAS assignment should run once, not once per
+        # join branch
+        assigned_cells = materialize(
             clustering.assign_topn(
                 base.select("_vid", "_v"), centroids, nprobe=nprobe, vec_col="_v"
-            )
-            .select("_vid", F.explode("_cells").alias("_cell"))
-            .localCheckpoint(eager=True)  # (id, cell) is ~16 B/row; candidate
-            # generation references it twice and the BLAS assignment
-            # should run once, not once per join branch
+            ).select("_vid", F.explode("_cells").alias("_cell"))
         )
     assigned = assigned_cells
     a = assigned.select("_cell", F.col("_vid").alias("id_a"))
@@ -1538,7 +1539,7 @@ def imi_train(
         train = emb.filter(F.col("_vid") % step == 0).withColumn(
             "_vid", (F.col("_vid") / step).cast("long")
         )
-    train = train.localCheckpoint(eager=True)  # both half-codebooks
+    train = materialize(train)  # both half-codebooks
     # train from it; one scan, not two
     lo = F.slice(F.col("_v"), 1, half)
     hi = F.slice(F.col("_v"), half + 1, dim - half)
@@ -1664,9 +1665,9 @@ def imi_cosine_dups(
     assigned = _imi_assign(emb, cents1, cents2, p1, p2, len(cents2), dim)
     if cells_only:
         return assigned
-    assigned_cells = assigned.select(
+    assigned_cells = materialize(assigned.select(
         "_vid", F.explode("_cells").alias("_cell")
-    ).localCheckpoint(eager=True)
+    ))
     return ivf_cosine_dups(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
         n_rows=n_rows, assigned_cells=assigned_cells,
@@ -3347,9 +3348,9 @@ def incremental_cosine_dups_auto(
                 f"sink or ingest recall drops below the sink's design.",
                 stacklevel=2,
             )
-        assigned = clustering.assign_topn(
+        assigned = materialize(clustering.assign_topn(
             shard, ivf_centroids, nprobe=cap, vec_col="_v"
-        ).localCheckpoint(eager=True)
+        ))
         probe = sink_probe
         if calibrate:
             levels = [list(range(j)) for j in range(1, cap + 1)]
@@ -3413,10 +3414,10 @@ def incremental_cosine_dups_auto(
             f"sink or ingest recall drops below the sink's design.",
             stacklevel=2,
         )
-    assigned = _imi_assign(
+    assigned = materialize(_imi_assign(
         shard, imi_centroids[0], imi_centroids[1], cap1, cap2,
         k2_real, dim,
-    ).localCheckpoint(eager=True)
+    ))
     sink_idx = [i * cap2 + j for i in range(p1s) for j in range(p2s)]
     idx = sink_idx  # uncalibrated default: the sink's own rectangle
     probe_desc: object = f"sink({p1s}x{p2s})"
@@ -4030,12 +4031,12 @@ def cosine_dups_auto(
         # smallest sub-grid meeting the target.  Escalating never
         # recomputes the assignment; it only widens the slice.
         p_cap = min(4, plan["k1"], plan["k2"])
-        assigned = imi_cosine_dups(
+        assigned = materialize(imi_cosine_dups(
             embeddings, threshold=threshold, k1=plan["k1"], k2=plan["k2"],
             p1=p_cap, p2=p_cap, num_iter=plan["num_iter"],
             id_col=id_col, vec_col=vec_col,
             dim=dim, n_rows=n_rows, cells_only=True,
-        ).localCheckpoint(eager=True)
+        ))
         recalls, n_pairs = imi_calibrate_recall_grid(
             assigned, threshold, p_cap=p_cap, n_rows=n_rows
         )
@@ -4101,18 +4102,18 @@ def cosine_dups_auto(
         else:
             idx = [i * p_cap + j for i in range(p) for j in range(p)]
             sub = F.array(*[F.col("_cells")[k] for k in idx])
-        cells = assigned.select(
+        cells = materialize(assigned.select(
             "_vid", F.explode(sub).alias("_cell")
-        ).localCheckpoint(eager=True)
+        ))
         return ivf_cosine_dups(
             embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
             n_rows=n_rows, assigned_cells=cells,
         )
     emb = embeddings.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     centroids = ivf_train(emb, n_rows, n_centroids=plan["n_centroids"])
-    assigned_topn = clustering.assign_topn(
+    assigned_topn = materialize(clustering.assign_topn(
         emb, centroids, nprobe=max_nprobe, vec_col="_v"
-    ).localCheckpoint(eager=True)  # one (train + assign) pass feeds BOTH
+    ))  # one (train + assign) pass feeds BOTH
     # the calibration sample and candidate generation at whatever nprobe
     # calibration picks — never a second N·k matmul
     recalls, n_pairs = _calibrate_grown(
@@ -4163,11 +4164,9 @@ def cosine_dups_auto(
                 "sample_truth_pairs": n_pairs,
             }
         )
-    assigned_cells = (
-        assigned_topn.select(
-            "_vid", F.explode(F.slice("_cells", 1, nprobe)).alias("_cell")
-        ).localCheckpoint(eager=True)
-    )
+    assigned_cells = materialize(assigned_topn.select(
+        "_vid", F.explode(F.slice("_cells", 1, nprobe)).alias("_cell")
+    ))
     return ivf_cosine_dups(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
         n_rows=n_rows, assigned_cells=assigned_cells,
@@ -4220,7 +4219,7 @@ def embedding_dup_clusters(
             embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
             plan_out=plan_out,
         )
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs)
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
 from .relational import maybe_broadcast
 
 # Tiny per-language stopword marker sets for the n-gram/stopword-count
@@ -1507,15 +1508,15 @@ def corpus_build_funnel(
     Scale shape: every stage is the already-audited operator's plan
     (map-only gates, one fingerprint shuffle, two shingle-keyed
     shuffles, |sources|-row broadcasts, one packing window); the
-    inter-stage manifests are localCheckpointed so the funnel's eight
-    scalar aggregates don't recompute the chain (at 100 TB each stage
-    writes its manifest to the lake instead — same lineage cut, same
-    receipt).  The receipt itself is |stages| rows built from scalar
-    aggregates — the d18 posture, never a per-doc collect.
+    inter-stage manifests go through ``materialize`` so the funnel's
+    eight scalar aggregates don't recompute the chain (with
+    ``SPARK_GRAFT_CKPT_DIR`` set each stage writes its manifest to the
+    sink instead — same lineage cut, same receipt).  The receipt itself
+    is |stages| rows built from scalar aggregates — the d18 posture,
+    never a per-doc collect.  Zero survivors are not an error: counts
+    stay 0 and a ratio detail over a zero denominator is NULL.
     """
     from pyspark.sql.window import Window
-
-    from .materialize import materialize as _funnel_ckpt
 
     spark = docs.sparkSession
     t = F.col(text_col)
@@ -1531,18 +1532,19 @@ def corpus_build_funnel(
     qf = quality_filter(
         docs, text_col=text_col, id_col=id_col, keep_input_cols=True
     )
-    keep_l = F.col("keep").cast("long")
     r01 = qf.agg(
         F.count(F.lit(1)).alias("n0"),
         F.sum("n_chars").cast("double").alias("d0"),
-        F.sum(keep_l).alias("n1"),
+        F.count_if(F.col("keep")).alias("n1"),
         F.round(
-            F.sum(
-                F.when(
-                    F.col("keep"), F.floor(F.col("quality") * 1e6).cast("long")
-                ).otherwise(F.lit(0))
-            )
-            / (F.sum(keep_l) * F.lit(1e6)),
+            F.try_divide(
+                F.sum(
+                    F.when(
+                        F.col("keep"), F.floor(F.col("quality") * 1e6).cast("long")
+                    ).otherwise(F.lit(0))
+                ),
+                F.count_if(F.col("keep")) * F.lit(1e6),
+            ),
             6,
         ).alias("d1"),
     ).first()
@@ -1567,7 +1569,7 @@ def corpus_build_funnel(
     w2 = s1.withColumn("_keep", F.min(id_col).over(grp)).withColumn(
         "_grp_n", F.count(F.lit(1)).over(grp)
     )
-    s2ck = _funnel_ckpt(
+    s2ck = materialize(
         w2.where(F.col(id_col) == F.col("_keep")).drop("_keep")
     )
     r2 = s2ck.agg(F.max("_grp_n").cast("double").alias("detail")).first()
@@ -1585,7 +1587,7 @@ def corpus_build_funnel(
         sem = embeddings.join(
             cur.select(F.col(id_col).alias(emb_id_col)), emb_id_col
         )
-        man = _funnel_ckpt(embedding_dup_clusters(
+        man = materialize(embedding_dup_clusters(
             sem, bands=emb_bands, threshold=emb_threshold,
             id_col=emb_id_col,
         ))
@@ -1595,7 +1597,7 @@ def corpus_build_funnel(
             .agg(F.greatest(F.max("_sz"), F.lit(1)).cast("double").alias("detail"))
             .first()
         )
-        cur = _funnel_ckpt(cur.join(
+        cur = materialize(cur.join(
             man.where(~F.col("keep")).select(F.col("vec_id").alias(id_col)),
             id_col,
             "left_anti",
@@ -1612,11 +1614,11 @@ def corpus_build_funnel(
         med = media.join(
             cur.select(F.col(id_col).alias(media_id_col)), media_id_col
         )
-        pairs = _funnel_ckpt(dhash_pairs(
+        pairs = materialize(dhash_pairs(
             med, bands=media_bands, payload_col=media_payload_col,
             id_col=media_id_col,
         ))
-        comp = _funnel_ckpt(connected_components(
+        comp = materialize(connected_components(
             pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         ))
         r2b = comp.groupBy("component").agg(
@@ -1625,7 +1627,7 @@ def corpus_build_funnel(
             F.greatest(F.coalesce(F.max("_sz"), F.lit(1)), F.lit(1))
             .cast("double").alias("detail")
         ).first()
-        cur = _funnel_ckpt(cur.join(
+        cur = materialize(cur.join(
             comp.where(F.col("id") != F.col("component"))
             .select(F.col("id").alias(id_col)),
             id_col,
@@ -1637,19 +1639,19 @@ def corpus_build_funnel(
         )
         n_cur = n_new
 
-    dec = _funnel_ckpt(decontaminated_train(
+    dec = materialize(decontaminated_train(
         cur, max_overlap=max_overlap, text_col=text_col, id_col=id_col
     ))
     # one pass over the checkpointed decontam frame for both receipt
     # rows (r15: was two aggregate jobs over the same materialized rows)
     r34 = dec.agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.count(F.lit(1)) / F.lit(n_cur), 6).alias("d3"),
+        F.round(F.try_divide(F.count(F.lit(1)), F.lit(n_cur)), 6).alias("d3"),
         F.max("test_overlap_frac").alias("d4"),
     ).first()
     r3 = {"n": r34["n"], "detail": r34["d3"]}
     r4 = {"detail": r34["d4"]}
-    s4 = _funnel_ckpt(cur.join(
+    s4 = materialize(cur.join(
         dec.where("keep").select(id_col), id_col
     ))
     n4 = s4.count()
@@ -1659,7 +1661,7 @@ def corpus_build_funnel(
         F.substring(F.md5(F.concat_ws(":", F.lit("mx"), F.col(id_col))), 1, 15),
         16, 10,
     ).cast("long").cast("double")
-    s5 = _funnel_ckpt(
+    s5 = materialize(
         s4.join(F.broadcast(rates.select("source", "final_rate")), "source")
         .where(u < F.col("final_rate") * F.lit(16.0 ** 15))
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_graphdb_spark.functions import dedup
+from projet_graphdb_spark.functions.materialize import materialize
 
 
 def streaming_ingest_dedup(
@@ -192,7 +193,7 @@ def compact_batch_sink(
         kept = df.filter(F.col(batch_col) >= cutoff)
     # materialize BEFORE the swap: the plan must not lazily re-read the
     # directory the swap is about to replace
-    kept = kept.select(*df.columns).localCheckpoint(eager=True)
+    kept = materialize(kept.select(*df.columns))
     rows_after = kept.count()
     # repartition BY the batch column: each kept batch lands whole in
     # one task, so the Hive-partitioned rewrite emits exactly one file

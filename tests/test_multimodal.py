@@ -445,3 +445,20 @@ def test_dhash_index_two_day_ingest_lifecycle(spark, tmp_path):
     assert got2 == brute_cross(day2_rows, corpus_rows + day1_rows)
     # day-2's exact re-upload of a day-1 twin is caught at hd=0
     assert (101, 1, 0) in got2
+
+
+def test_dhash_band_index_auto_layout_sink_backed(spark, both_modes):
+    """layout="auto" materializes the fingerprint frame before the gauge
+    ladder; in sink-backed mode the index and its chosen layout equal
+    the default mode's."""
+    media = multimodal.fake_media_table(spark, n=48)
+
+    def run():
+        plan = {}
+        rows = multimodal.dhash_band_index(
+            media, bands=4, layout="auto", plan_out=plan
+        ).collect()
+        return sorted(map(tuple, rows)), plan.get("layout")
+
+    default, sink = both_modes(run)
+    assert sink == default and default[0]

@@ -340,3 +340,30 @@ def test_failed_program_leaves_state_untouched(spark):
             initial_state=state,
         )
     assert state.edges.count() == n_edges
+
+
+def test_checkpoint_every_sink_backed(spark, both_modes):
+    """Twelve DataFrame-path mutations trip ``checkpoint_every`` (12) on
+    the last one, so the returned edge table IS the barrier: a lazy
+    checkpoint RDD by default, a parquet sink with SPARK_GRAFT_CKPT_DIR
+    set — and both modes return the same rows and graph."""
+    from projet_graphdb_spark.functions import materialize as M
+
+    prog = (
+        SCHEMA
+        + "\n".join(f"create (n{i}: P)" for i in range(6))
+        + "\n"
+        + "\n".join(f"set n{i}.age = {20 + i}" for i in range(5))
+        + "\ncreate (n0) -[:ami]-> (n1)"
+        + "\nmatch (x: P) -[:ami]-> (y: P) where x.age < y.age return x, y"
+    )
+
+    def run():
+        state, b = run_program(spark, prog, fold_prefix=False)
+        h = M.handle(state.edges)
+        kind = "sink" if isinstance(h, str) else ("rdd" if h is not None else None)
+        return rows(b), state.collect_nodes(), state.collect_edges(), kind
+
+    default, sink = both_modes(run)
+    assert sink[:3] == default[:3] and default[0] == [(0, 1)]
+    assert (default[3], sink[3]) == ("rdd", "sink")

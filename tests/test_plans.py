@@ -307,6 +307,32 @@ def test_nl_allowed_build_sides_measured(spark):
         assert not probs, f"{name}: {probs}"
 
 
+def test_partition_offset_rank_distributed_sink_backed(spark, both_modes):
+    """A pinned ``num_partitions`` forces the distributed path, whose
+    frozen range layout is a barrier: in sink-backed mode the ranks
+    equal the default mode's and the exact global order."""
+    from pyspark.sql import functions as F
+
+    from projet_graphdb_spark.functions import relational
+
+    df = spark.range(0, 2000).withColumn("_c", F.col("id") % 37).repartition(8)
+    want = sorted(
+        (i, c, r + 1)
+        for r, (c, i) in enumerate(sorted((i % 37, i) for i in range(2000)))
+    )
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in relational.partition_offset_rank(
+                df, [F.asc("_c"), F.asc("id")], num_partitions=6
+            ).collect()
+        )
+
+    default, sink = both_modes(run)
+    assert sink == default == want
+
+
 def test_partition_offset_rank_exact_and_distributed(spark):
     """partition_offset_rank must equal the global row_number it
     replaces (exact dense 1..N ranks under the same total order) while

@@ -189,20 +189,26 @@ def test_materialize_sink_backed_roundtrip(spark, tmp_path, monkeypatch):
     assert sorted(r.x for r in out.collect()) == sorted(
         r.x for r in df.collect()
     )
-    h = M.handle_of(out)
-    assert h is not None and os.path.isdir(h)
+    h = M.handle(out)
+    assert isinstance(h, str) and os.path.isdir(h)
     assert "parquet" in out._jdf.queryExecution().executedPlan().toString().lower()
     M.release(h)
     assert not os.path.exists(h)
 
 
 def test_materialize_default_is_local_checkpoint(spark, monkeypatch):
+    """Unset, materialize() is localCheckpoint: the handle is the
+    checkpoint's RDD, and release() unpersists it."""
     from projet_graphdb_spark.functions import materialize as M
 
     monkeypatch.delenv("SPARK_GRAFT_CKPT_DIR", raising=False)
     out = M.materialize(spark.range(10))
-    assert M.handle_of(out) is None
     assert out.count() == 10
+    h = M.handle(out)
+    assert not isinstance(h, str) and h.getStorageLevel().useMemory()
+    assert "ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
+    M.release(h)
+    assert not h.getStorageLevel().useMemory()
 
 
 def test_connected_components_sink_backed(spark, tmp_path, monkeypatch):

@@ -2322,3 +2322,73 @@ def test_cell_appends_carry_join_cost_stamp(spark, emb, tmp_path):
         .collect()
     )
     assert len(ivals) == 1 and ivals[0][0] == 4.25e8
+
+
+def test_cosine_dups_auto_sink_backed(spark, emb, both_modes):
+    """Both routed branches of cosine_dups_auto reach their barriers
+    with SPARK_GRAFT_CKPT_DIR set and return the default mode's rows:
+    IVF at t=0.1 (the top-max_nprobe assignment and its sliced cells)
+    and IMI through the n_rows override (the p_cap assignment and its
+    sub-grid cells)."""
+    import warnings as _w
+
+    def run():
+        got = {}
+        for strategy, kw in (
+            ("ivf", dict(threshold=0.1)),
+            ("imi", dict(threshold=0.4, n_rows=10_000_000)),
+        ):
+            receipt = {}
+            with _w.catch_warnings():
+                _w.simplefilter("ignore")  # IMI's under-target warning
+                rows = similarity.cosine_dups_auto(
+                    emb, plan_out=receipt, **kw
+                ).collect()
+            assert receipt["strategy"] == strategy
+            got[strategy] = sorted(map(tuple, rows))
+        return got
+
+    default, sink = both_modes(run)
+    assert sink == default and default["ivf"] and default["imi"]
+
+
+def test_incremental_cosine_dups_auto_sink_backed(spark, emb, both_modes):
+    """The router's IVF and IMI sink legs (uncalibrated, exact leg
+    excluded) materialize the shard assignment; in sink-backed mode
+    they return the default mode's rows."""
+    cut = int(emb.count() * 0.9)
+    corpus = emb.where(F.col("vec_id") < cut)
+    shard = emb.where(F.col("vec_id") >= cut)
+    corp = corpus.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
+    ivf_cents = similarity.ivf_train(corp, cut, n_centroids=8, num_iter=2)
+    imi_cents = similarity.imi_train(corp, cut, k1=4, k2=4, num_iter=1, dim=64)
+    legs = {
+        "ivf": dict(
+            ivf_centroids=ivf_cents,
+            ivf_cells=similarity.ivf_cells_frame(corpus, ivf_cents, nprobe=2),
+        ),
+        "imi": dict(
+            imi_centroids=imi_cents,
+            imi_cells=similarity.imi_cells_frame(
+                corpus, *imi_cents, p1=2, p2=2, dim=64
+            ),
+        ),
+    }
+
+    def run():
+        got = {}
+        for strategy, arts in legs.items():
+            receipt = {}
+            rows = similarity.incremental_cosine_dups_auto(
+                corpus, shard, threshold=0.4, target_recall=0.95, dim=64,
+                calibrate=False, exact_allowed=False, plan_out=receipt,
+                **arts,
+            ).collect()
+            assert receipt["strategy"] == strategy
+            got[strategy] = sorted(
+                (r["new_id"], r["corpus_id"], r["sim"]) for r in rows
+            )
+        return got
+
+    default, sink = both_modes(run)
+    assert sink == default and default["ivf"] and default["imi"]

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F  # noqa: E402
 import make_scaled_sf as uniform  # noqa: E402
 from projet_graphdb_spark.engine import get_spark  # noqa: E402
 from projet_graphdb_spark.functions import clustering, dedup, similarity  # noqa: E402
+from projet_graphdb_spark.functions.materialize import materialize  # noqa: E402
 
 COPIES = [1, 10, 30]
 THRESH_J = 0.2  # d26's jaccard threshold
@@ -64,7 +65,7 @@ def _scaled_union(base, table, n, sizes):
 def rehearse_docs(spark, src, tmp, sizes):
     docs = spark.read.parquet(f"{src}/documents.parquet")
     is_new = F.col("source").isin("src0", "src1")
-    shard = docs.where(is_new).localCheckpoint(eager=True)
+    shard = materialize(docs.where(is_new))
     corpus_base = docs.where(~is_new)
     n_shard = shard.count()
     results = []
@@ -134,9 +135,9 @@ def rehearse_emb(spark, src, tmp, sizes):
         # also what keeps the BATCH arm's union densely id'd 0..N-1
         # (corpus 0..n_corpus-1 + shard n_corpus..), per ivf_train's
         # id%step / id<k contract
-        shard = emb.where(F.col("vec_id") >= cut).withColumn(
+        shard = materialize(emb.where(F.col("vec_id") >= cut).withColumn(
             "vec_id", F.col("vec_id") - cut + F.lit(n_corpus)
-        ).localCheckpoint(eager=True)
+        ))
         corp = corpus.select(
             F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v")
         )

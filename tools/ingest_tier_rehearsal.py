@@ -64,6 +64,7 @@ from pyspark.sql import functions as F  # noqa: E402
 import make_scaled_sf as uniform  # noqa: E402
 from projet_graphdb_spark.engine import get_spark  # noqa: E402
 from projet_graphdb_spark.functions import similarity  # noqa: E402
+from projet_graphdb_spark.functions.materialize import materialize  # noqa: E402
 
 COPIES = [1, 10, 30]
 THRESH = 0.4
@@ -119,9 +120,9 @@ def rehearse(spark, src, tmp, sizes):
         )
         corpus = spark.read.parquet(cdir)
         n_corpus = n * cut
-        shard = emb.where(F.col("vec_id") >= cut).withColumn(
+        shard = materialize(emb.where(F.col("vec_id") >= cut).withColumn(
             "vec_id", F.col("vec_id") - cut + F.lit(n_corpus)
-        ).localCheckpoint(eager=True)
+        ))
         n_shard = n_total - cut
         corp = corpus.select(
             F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v")
@@ -313,10 +314,8 @@ def _seeded_shard(spark, corpus, base_shard, id_start, n_seed=300):
         out /= np.linalg.norm(out)
         seeds.append((id_start + i, [float(x) for x in out]))
     seed_df = spark.createDataFrame(seeds, "vec_id long, embedding array<float>")
-    return (
-        base_shard.select("vec_id", "embedding")
-        .unionByName(seed_df)
-        .localCheckpoint(eager=True)
+    return materialize(
+        base_shard.select("vec_id", "embedding").unionByName(seed_df)
     )
 
 
@@ -565,9 +564,9 @@ def rehearse_compaction(spark, src, tmp):
     cut = int(emb.count() * 0.9)
     corpus = emb.where(F.col("vec_id") < cut)
     shard = emb.where(F.col("vec_id") >= cut)
-    pairs = similarity.incremental_ivf_dups(
+    pairs = materialize(similarity.incremental_ivf_dups(
         corpus, shard, threshold=THRESH, nprobe=2
-    ).localCheckpoint(eager=True)
+    ))
     sink = f"{tmp}/pair_sink"
     for b in range(6):
         pairs.where(F.col("new_id") % 6 == b).repartition(4).write.mode(
