@@ -46,10 +46,13 @@ def seq_rowdot(A, B):
 @pandas_udf(DoubleType())
 def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
     """Arrow-batched exact-verify dot product for candidate PAIRS —
-    the per-pair term of ``similarity._verify_candidate_pairs`` /
-    ``_incremental_cells_pairs`` (guide §4.2: the interpreted
-    ``aggregate(zip_with(...))`` fold costs ~4.5 µs/pair and dominates
-    the verify tail at scale; one BLAS-shaped batch op replaces it).
+    the per-pair term of ``similarity._verify_candidate_pairs`` (LSH
+    bands) and ``_incremental_cells_pairs`` (IVF/IMI ingest, shard ×
+    corpus); the batch IVF family verifies inside its cells and calls
+    :func:`seq_rowdot` directly (``similarity._verify_within_cells``).
+    Guide §4.2: the interpreted ``aggregate(zip_with(...))`` fold costs
+    ~4.5 µs/pair and dominates the verify tail at scale; one
+    BLAS-shaped batch op replaces it.
     Bit-identical to the JVM fold for finite, non-null elements of
     equal length: see :func:`seq_rowdot`.
 

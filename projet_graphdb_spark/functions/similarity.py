@@ -735,10 +735,11 @@ def lsh_cosine_dups(
 
 
 def _verify_candidate_pairs(base: DataFrame, pairs: DataFrame, threshold: float) -> DataFrame:
-    """Exact-cosine verification tail shared by every candidate
-    generator (LSH bands, IVF cells): two id-keyed joins fetch the
-    vectors + precomputed norms from ``base`` (_vid, _v, _n), one
-    map-side dot per candidate, filter at the unrounded threshold.
+    """Exact-cosine verification tail of :func:`lsh_cosine_dups`'s
+    band candidates: two id-keyed joins fetch the vectors +
+    precomputed norms from ``base`` (_vid, _v, _n), one map-side dot
+    per candidate, filter at the unrounded threshold.  (The IVF family
+    verifies inside its cells instead: :func:`_verify_within_cells`.)
     Output: (id_a, id_b, sim) rounded to 6 dp."""
     va = base.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
     vb = base.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
@@ -761,9 +762,9 @@ def ivf_train(
     max_train_rows: int = 200_000,
 ) -> dict:
     """Train the IVF codebook over a ``(_vid, _v)`` frame: ``k = N /
-    target_cell_rows`` (occupancy — and hence the Σ cell² candidate
-    term — held constant as N grows), Lloyd iterations on a
-    deterministic 1-in-step id sample capped at ``max_train_rows``,
+    target_cell_rows`` (occupancy — and hence each cell's share of the
+    Σ cell² verify term — held constant as N grows), Lloyd iterations
+    on a deterministic 1-in-step id sample capped at ``max_train_rows``,
     densely re-id'd map-side so the seeded ``id < k`` rule keeps its
     k seeds.  Returns the centroid dict :func:`clustering.assign_topn`
     consumes."""
@@ -980,11 +981,18 @@ def ivf_cosine_dups(
 
     Scale design: codebook size tracks the corpus (``k = N /
     target_cell_rows``) so expected cell occupancy — and hence the
-    Σ cell² candidate term ≈ ``nprobe²·target_cell_rows·N/2`` — stays
-    LINEAR in N.  Training runs on a deterministic 1-in-step id sample
-    capped at ``max_train_rows`` (re-id'd densely, map-side, so the
-    seeded id<k rule still applies); corpus assignment is one BLAS
-    matmul per Arrow batch (``clustering.assign_topn``).  Beyond
+    Σ cell² verify term ≈ ``nprobe²·target_cell_rows·N/2`` dot
+    products — stays LINEAR in N.  Training runs on a deterministic
+    1-in-step id sample capped at ``max_train_rows`` (re-id'd densely,
+    map-side, so the seeded id<k rule still applies); corpus assignment
+    is one BLAS matmul per Arrow batch (``clustering.assign_topn``),
+    exploded straight into the cell-local verify
+    (:func:`_verify_within_cells`): one ``groupBy("_cell")`` grouped-map
+    pass whose task verifies one cell's members against each other in
+    BLAS blocks — Σ cell² dot products per task, no candidate-pair
+    shuffle and no vector-fetch join.  One cell's rows land in one
+    task, so ``target_cell_rows`` is what bounds a task at scale (a
+    hot cell is the skew to watch: :func:`cell_occupancy_report`).  Beyond
     ``max_centroids`` cells (~1e7+ rows/shard) flat assignment's N·k
     matmul is the next wall —
     :func:`imi_cosine_dups` breaks it with the two-level IMI layout
@@ -1001,7 +1009,8 @@ def ivf_cosine_dups(
     ``assigned_cells``: a precomputed (_vid, _cell) frame (e.g. a
     top-``max_nprobe`` assignment sliced to a calibrated nprobe) —
     skips training and assignment so the router's single soft
-    assignment pass is reused, not repeated.
+    assignment pass is reused, not repeated; it is joined to the
+    vectors on ``_vid`` and verified by the same cell-local kernel.
 
     Output: (id_a, id_b, sim), id_a < id_b, cosine ≥ threshold —
     identical shape/semantics to :func:`lsh_cosine_dups` minus the
@@ -1031,24 +1040,95 @@ def ivf_cosine_dups(
                 max_centroids=max_centroids,
                 max_train_rows=max_train_rows,
             )
-        # (id, cell) is ~16 B/row; candidate generation references it
-        # twice and the BLAS assignment should run once, not once per
-        # join branch
-        assigned_cells = materialize(
-            clustering.assign_topn(
-                base.select("_vid", "_v"), centroids, nprobe=nprobe, vec_col="_v"
-            ).select("_vid", F.explode("_cells").alias("_cell"))
-        )
-    assigned = assigned_cells
-    a = assigned.select("_cell", F.col("_vid").alias("id_a"))
-    b = assigned.select("_cell", F.col("_vid").alias("id_b"))
-    pairs = (
-        a.join(b, on="_cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()  # soft assignment can pair the same ids in ≥2 cells
+        rows = clustering.assign_topn(
+            base, centroids, nprobe=nprobe, vec_col="_v"
+        ).select("_vid", "_v", "_n", F.explode("_cells").alias("_cell"))
+    else:
+        rows = assigned_cells.select("_vid", "_cell").join(base, "_vid")
+    return _verify_within_cells(rows, threshold)
+
+
+def _verify_within_cells(rows: DataFrame, threshold: float) -> DataFrame:
+    """Cell-local exact-cosine verify of the IVF family: ``rows`` carry
+    (_cell, _vid, _v, _n), one row per (vector, cell) membership with
+    ``_n`` the JVM :func:`l2norm`.  One ``groupBy("_cell").applyInPandas``
+    pass verifies each cell's members against each other, so no
+    candidate pair is shuffled and no vector is fetched by id.
+
+    Per cell (NULL ids, cells and vectors are dropped first): the rows
+    are split by vector length (ragged pairs are never compared, as in
+    ``pyudf.pair_dot``) and sorted by ``_vid``; ``V_blk @ V.T /
+    outer(n, n)`` runs in ~32 MB row blocks (the ``make_topn_cells_udf``
+    sizing) and keeps the pairs ``id_a < id_b`` that are not provably
+    below the threshold: a BLAS cosine ``>= threshold − 1e-9`` (the
+    ``incremental_exact_dups`` slack, far above the ≤ dim·u BLAS-vs-fold
+    error), a non-finite one, or a zero norm product.  The survivors are
+    re-folded with ``pyudf.seq_rowdot`` and ``sim = _dot / (_na * _nb)``
+    is computed JVM-side, so every emitted ``sim`` is the same double
+    :func:`_pair_sim` gives — the prefilter only selects pairs.  A NaN
+    fold reaches the JVM as NULL (the pandas→Arrow conversion, as in
+    ``pair_dot``), a zero norm product divides by zero there exactly as
+    the pair-join verify did.  A pair sharing ≥2 cells is verified once
+    per cell; the ``distinct`` runs over verified pairs only.
+
+    One cell's rows land in one task, so the task's cost is its cell²
+    dot products; ``target_cell_rows`` is what bounds that at scale.
+    Output: (id_a, id_b, sim rounded to 6 dp), ``id_a`` / ``id_b`` of
+    the input's id type."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    id_type = rows.schema["_vid"].dataType
+    schema = StructType(
+        [StructField("id_a", id_type), StructField("id_b", id_type)]
+        + [StructField(c, DoubleType()) for c in ("_dot", "_na", "_nb")]
     )
-    return _verify_candidate_pairs(base, pairs, threshold)
+    floor = threshold - 1e-9
+
+    def verify(cell):
+        import numpy as np
+        import pandas as pd
+
+        from .pyudf import seq_rowdot
+
+        cell = cell.sort_values("_vid", kind="stable")
+        out = {c: [] for c in ("id_a", "id_b", "_dot", "_na", "_nb")}
+        for _, grp in cell.groupby(cell["_v"].map(len), sort=False):
+            ids = grp["_vid"].to_numpy()
+            V = np.vstack(grp["_v"].to_numpy()).astype(np.float64)
+            n = grp["_n"].to_numpy(dtype=np.float64)
+            step = max(1, 4_000_000 // len(V))  # ~32 MB blocks
+            for s in range(0, len(V), step):
+                # sorted ids: every partner of rows s.. sits at column ≥ s
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    nn = n[s : s + step, None] * n[None, s:]
+                    cos = (V[s : s + step] @ V[s:].T) / nn
+                keep = (~(cos < floor) | (nn == 0)) & (ids[s : s + step, None] < ids[None, s:])
+                i, j = np.nonzero(keep)
+                i += s
+                j += s
+                out["id_a"].append(ids[i])
+                out["id_b"].append(ids[j])
+                out["_dot"].append(seq_rowdot(V[i], V[j]))
+                out["_na"].append(n[i])
+                out["_nb"].append(n[j])
+        # a group is never empty, so every list holds ≥1 (typed) array
+        return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+    verified = (
+        rows.where(
+            F.col("_vid").isNotNull() & F.col("_cell").isNotNull() & F.col("_v").isNotNull()
+        )
+        .select("_cell", "_vid", "_v", "_n")
+        .groupBy("_cell")
+        .applyInPandas(verify, schema)
+    )
+    return (
+        verified.withColumn("sim", F.col("_dot") / (F.col("_na") * F.col("_nb")))
+        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", "sim")
+        .distinct()  # soft assignment verifies a pair in every cell it shares
+        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+    )
 
 
 # staleness-guard sample width for incremental_ivf_dups: first N dense
@@ -1627,9 +1707,10 @@ def imi_cosine_dups(
     Probing: top-``p1`` cells in half one × top-``p2`` in half two =
     p1·p2 virtual cells per vector (the grid form of IMI's
     multi-sequence traversal — exactly mirrorable in SQL, which the
-    s24 oracle does).  Candidates are distinct same-virtual-cell pairs;
-    verification is exact cosine at the threshold (zero false
-    positives, the s9/s22 tail).  Like all IVF-family blocking, pair
+    s24 oracle does).  Candidates are same-virtual-cell pairs,
+    verified inside each virtual cell by :func:`ivf_cosine_dups`'s
+    cell-local kernel (exact cosine at the threshold, zero false
+    positives, the s22 tail).  Like all IVF-family blocking, pair
     RECALL is empirical — measure with :func:`ivf_calibrate_recall`
     over the virtual-cell assignment.
 
@@ -1638,7 +1719,7 @@ def imi_cosine_dups(
 
     ``cells_only``: return the ``(_vid, _v, _cells)`` virtual-cell
     assignment instead of pairs — :func:`cosine_dups_auto` feeds it to
-    :func:`ivf_calibrate_recall` and then to the shared candidate tail.
+    :func:`ivf_calibrate_recall` and then to the shared cell-local verify.
     ``centroids``: a pre-trained (cents1, cents2) tuple (e.g. the
     persisted :func:`imi_train` artifact) — skips training, the same
     frozen-codebook contract as :func:`ivf_cosine_dups`.
@@ -1665,12 +1746,10 @@ def imi_cosine_dups(
     assigned = _imi_assign(emb, cents1, cents2, p1, p2, len(cents2), dim)
     if cells_only:
         return assigned
-    assigned_cells = materialize(assigned.select(
-        "_vid", F.explode("_cells").alias("_cell")
-    ))
     return ivf_cosine_dups(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
-        n_rows=n_rows, assigned_cells=assigned_cells,
+        n_rows=n_rows,
+        assigned_cells=assigned.select("_vid", F.explode("_cells").alias("_cell")),
     )
 
 
@@ -3965,8 +4044,9 @@ def cosine_dups_auto(
     one top-``max_nprobe`` soft assignment pass, then
     :func:`ivf_calibrate_recall` estimates recall per nprobe level from
     a bounded sample against the REAL centroids, and the smallest
-    nprobe meeting ``target_recall`` generates candidates (the
-    assignment is sliced, not recomputed).  When even ``max_nprobe``
+    nprobe meeting ``target_recall`` is verified cell by cell through
+    :func:`ivf_cosine_dups`'s kernel (the assignment is sliced, not
+    recomputed).  When even ``max_nprobe``
     cannot reach the target, the router does NOT silently upgrade to a
     near-quadratic plan — it warns with the achieved figure and the
     cost of the recall-holding LSH alternative, and proceeds
@@ -4102,12 +4182,10 @@ def cosine_dups_auto(
         else:
             idx = [i * p_cap + j for i in range(p) for j in range(p)]
             sub = F.array(*[F.col("_cells")[k] for k in idx])
-        cells = materialize(assigned.select(
-            "_vid", F.explode(sub).alias("_cell")
-        ))
         return ivf_cosine_dups(
             embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
-            n_rows=n_rows, assigned_cells=cells,
+            n_rows=n_rows,
+            assigned_cells=assigned.select("_vid", F.explode(sub).alias("_cell")),
         )
     emb = embeddings.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     centroids = ivf_train(emb, n_rows, n_centroids=plan["n_centroids"])
@@ -4164,12 +4242,12 @@ def cosine_dups_auto(
                 "sample_truth_pairs": n_pairs,
             }
         )
-    assigned_cells = materialize(assigned_topn.select(
-        "_vid", F.explode(F.slice("_cells", 1, nprobe)).alias("_cell")
-    ))
     return ivf_cosine_dups(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
-        n_rows=n_rows, assigned_cells=assigned_cells,
+        n_rows=n_rows,
+        assigned_cells=assigned_topn.select(
+            "_vid", F.explode(F.slice("_cells", 1, nprobe)).alias("_cell")
+        ),
     )
 
 

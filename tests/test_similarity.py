@@ -515,6 +515,161 @@ def test_ivf_cosine_dups_exact_precision_and_recall(spark, emb, emb_np):
     assert len(got & truth) / len(truth) >= 0.7
 
 
+def _fold_dups(spark, ids, mat, cells, threshold, chunk=200_000):
+    """Numpy reference for the IVF verify: every pair sharing a cell in
+    ``cells`` (one id list per cell), ``sim = seq_rowdot / (na·nb)`` with
+    the fold's norms, filtered at ``threshold`` and rounded by Spark's
+    own ``round``.  Returns sorted (id_a, id_b, sim) tuples."""
+    from projet_graphdb_spark.functions.pyudf import seq_rowdot
+
+    ids = np.asarray(ids)
+    pos = {int(v): i for i, v in enumerate(ids)}
+    V = np.asarray(mat, dtype=np.float64)
+    norms = np.sqrt(seq_rowdot(V, V))
+    keys = []
+    for members in cells:
+        m = np.array([pos[int(v)] for v in members], dtype=np.int64)
+        i, j = np.triu_indices(len(m), 1)
+        a, b = m[i], m[j]
+        lo = ids[a] < ids[b]
+        keys.append(np.where(lo, a, b) * len(ids) + np.where(lo, b, a))
+    cand = np.unique(np.concatenate(keys))  # a pair sharing 2 cells counts once
+    out = []
+    for s in range(0, len(cand), chunk):
+        ia, ib = np.divmod(cand[s : s + chunk], len(ids))
+        sim = seq_rowdot(V[ia], V[ib]) / (norms[ia] * norms[ib])
+        keep = sim >= threshold
+        out += [
+            (int(ids[a]), int(ids[b]), float(x))
+            for a, b, x in zip(ia[keep], ib[keep], sim[keep])
+        ]
+    ref = spark.createDataFrame(out, "id_a long, id_b long, sim double")
+    return sorted(tuple(r) for r in ref.select("id_a", "id_b", F.round("sim", 6)).collect())
+
+
+def _vec_frame(spark, vectors):
+    return spark.createDataFrame(
+        list(enumerate(vectors)), "vec_id long, embedding array<float>"
+    )
+
+
+def _ivf_rows(df, **kw):
+    return sorted(tuple(r) for r in similarity.ivf_cosine_dups(df, **kw).collect())
+
+
+@pytest.mark.parametrize("threshold", [0.1, 0.4])
+def test_ivf_cosine_dups_matches_fold_reference(spark, emb, emb_np, threshold):
+    """The cell-local verify emits exactly the pairs and doubles of the
+    fold reference over the same cells, at every probe width."""
+    from projet_graphdb_spark.functions import clustering
+
+    ids, mat = emb_np
+    corp = emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
+    cents = similarity.ivf_train(corp, len(ids), n_centroids=8, num_iter=2)
+    for nprobe in (1, 2, 4):
+        assigned = clustering.assign_topn(corp, cents, nprobe=nprobe, vec_col="_v")
+        cells = {}
+        for r in assigned.select("_vid", "_cells").collect():
+            for c in r["_cells"]:
+                cells.setdefault(c, []).append(r["_vid"])
+        want = _fold_dups(spark, ids, mat, cells.values(), threshold)
+        got = _ivf_rows(emb, threshold=threshold, nprobe=nprobe, centroids=cents)
+        assert got == want and got, nprobe
+
+
+def test_ivf_cosine_dups_identical_vectors_at_threshold_one(spark):
+    """Identical vectors have fold cosine exactly 1.0: the bound is
+    inclusive, and the BLAS prefilter's slack keeps the pair."""
+    df = _vec_frame(spark, [[3.0, 4.0], [3.0, 4.0], [4.0, 3.0]])
+    got = _ivf_rows(df, threshold=1.0, centroids={0: [1.0, 1.0]}, nprobe=1)
+    assert got == [(0, 1, 1.0)]
+
+
+def test_ivf_cosine_dups_pair_exactly_at_threshold(spark):
+    """A threshold equal to a pair's fold cosine emits it; the next
+    double up does not — the exact filter, not the BLAS prefilter,
+    decides."""
+    from projet_graphdb_spark.functions.pyudf import seq_rowdot
+
+    rng = np.random.default_rng(5)
+    a = rng.standard_normal(64).astype(np.float32)
+    b = (a + 0.3 * rng.standard_normal(64)).astype(np.float32)
+    V = np.vstack([a, b]).astype(np.float64)
+    na, nb = np.sqrt(seq_rowdot(V, V))
+    sim = float(seq_rowdot(V[:1], V[1:])[0] / (na * nb))
+    df = _vec_frame(spark, [a.tolist(), b.tolist()])
+    cents = {0: [0.0] * 64}
+    assert [r[:2] for r in _ivf_rows(df, threshold=sim, centroids=cents, nprobe=1)] == [(0, 1)]
+    assert _ivf_rows(df, threshold=float(np.nextafter(sim, 2.0)), centroids=cents, nprobe=1) == []
+
+
+def test_ivf_cosine_dups_drops_null_and_nan_vectors(spark):
+    """A NULL vector is never assigned; a vector with a NaN element is,
+    but its NaN dot never passes the verify."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, None), (3, [1.0, float("nan")])],
+        "vec_id long, embedding array<float>",
+    )
+    got = _ivf_rows(df, threshold=0.4, centroids={0: [1.0, 0.0]}, nprobe=1)
+    assert [r[:2] for r in got] == [(0, 1)]
+
+
+def test_ivf_cosine_dups_zero_norm_vector_raises(spark):
+    """A zero vector sharing a probed cell divides by a zero norm
+    product: ANSI mode raises, as the pair-join verify always did."""
+    df = _vec_frame(spark, [[1.0, 0.0], [0.0, 0.0]])
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        similarity.ivf_cosine_dups(df, centroids={0: [1.0, 0.0]}, nprobe=1).collect()
+
+
+def test_ivf_cosine_dups_pair_sharing_two_cells_emitted_once(spark):
+    """Caller-supplied soft assignment: a pair sharing two cells is
+    verified in both and emitted once."""
+    df = _vec_frame(spark, [[1.0, 0.0], [1.0, 0.1], [0.0, 1.0]])
+    cells = spark.createDataFrame(
+        [(0, 0), (1, 0), (0, 1), (1, 1), (2, 1)], "_vid long, _cell long"
+    )
+    got = _ivf_rows(df, threshold=0.4, assigned_cells=cells)
+    assert [r[:2] for r in got] == [(0, 1)]
+
+
+def test_ivf_cosine_dups_one_cell_spans_row_blocks(spark):
+    """One centroid puts 2,100 vectors in one cell, so the BLAS
+    prefilter runs in more than one row block: pairs across the block
+    boundary still equal the fold reference."""
+    rng = np.random.default_rng(17)
+    mat = rng.standard_normal((2100, 16)).astype(np.float32)
+    mat[1::7] = mat[::7][: len(mat[1::7])] + np.float32(0.05)  # planted near-copies
+    df = _vec_frame(spark, mat.tolist())
+    got = _ivf_rows(df, threshold=0.6, centroids={0: [0.0] * 16}, nprobe=1)
+    want = _fold_dups(spark, np.arange(2100), mat, [list(range(2100))], 0.6)
+    assert got == want
+    assert any(a < 1904 <= b for a, b, _ in got)  # crosses the first block
+
+
+def test_ivf_cosine_dups_plan_is_cell_local(spark, emb, monkeypatch):
+    """The own-route IVF plan verifies inside cells: one grouped-map
+    pandas pass, no join keyed on ``_cell``, and one lineage barrier
+    (k-means' training input)."""
+    from projet_graphdb_spark.functions import clustering
+
+    calls = []
+
+    def spy(real):
+        def wrapped(df, *a, **kw):
+            calls.append(1)
+            return real(df, *a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(similarity, "materialize", spy(similarity.materialize))
+    monkeypatch.setattr(clustering, "materialize", spy(clustering.materialize))
+    out = similarity.ivf_cosine_dups(emb, threshold=0.4, n_centroids=8, nprobe=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan
+    assert not [l for l in plan.splitlines() if "Join" in l and "_cell" in l]
+    assert len(calls) == 1
+
+
 def test_incremental_ivf_equals_batch_cross_cut(spark, emb):
     """Under a SHARED frozen codebook, the incremental index-join path
     must produce exactly the shard×corpus subset of the batch
