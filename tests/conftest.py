@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from projet_graphdb_spark.engine import get_spark
@@ -12,6 +14,13 @@ def spark():
 REFERENCE_TESTS = "/root/reference/graphDB/test"
 SF_TINY = "/root/testdata/sf0.001"
 SF_SMALL = "/root/testdata/sf0.01"
+
+# The reference's .q programs are not in the repo; tests that read them
+# run only where the reference checkout is present.
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_TESTS),
+    reason=f"reference test corpus {REFERENCE_TESTS} is absent",
+)
 
 
 @pytest.fixture

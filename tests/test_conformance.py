@@ -9,13 +9,14 @@ Goldens come from the reference's machine-checked artifacts:
 
 import pytest
 
+from conftest import REFERENCE_TESTS, needs_reference
 from projet_graphdb_spark.engine import binding_table, run_program
 
-REF = "/root/reference/graphDB/test"
+pytestmark = needs_reference
 
 
 def run(spark, name):
-    src = open(f"{REF}/{name}.q").read()
+    src = open(f"{REFERENCE_TESTS}/{name}.q").read()
     return run_program(spark, src)
 
 

@@ -1,12 +1,28 @@
 """Display sinks (dot / LaTeX / show) and the CLI driver."""
 
+import os
+
+import pytest
+
+from conftest import REFERENCE_TESTS
 from projet_graphdb_spark.display import graph_to_dot, show_state, table_to_latex
 from projet_graphdb_spark.engine import run_program
 
-SRC = open("/root/reference/graphDB/test/entreprise.q").read()
+ENTREPRISE = os.path.join(REFERENCE_TESTS, "entreprise.q")
+
+needs_entreprise = pytest.mark.skipif(
+    not os.path.isfile(ENTREPRISE), reason=f"reference program {ENTREPRISE} is absent"
+)
 
 
+def entreprise_src():
+    with open(ENTREPRISE) as f:
+        return f.read()
+
+
+@needs_entreprise
 def test_dot_output(spark):
+    SRC = entreprise_src()
     state, b = run_program(spark, SRC)
     dot = graph_to_dot(state)
     assert dot.startswith("digraph G {") and dot.endswith("}")
@@ -16,7 +32,9 @@ def test_dot_output(spark):
     assert dot.count("->") == 4
 
 
+@needs_entreprise
 def test_latex_table(spark):
+    SRC = entreprise_src()
     state, b = run_program(spark, SRC)
     tex = table_to_latex(b)
     assert "\\begin{tabular}{|c|c|}" in tex
@@ -24,7 +42,9 @@ def test_latex_table(spark):
     assert "2 & 3 \\\\" in tex
 
 
+@needs_entreprise
 def test_show_state(spark):
+    SRC = entreprise_src()
     state, b = run_program(spark, SRC)
     txt = show_state(state, b)
     assert "(0:P {age=25, nom=Marie Dubois})" in txt

@@ -2,6 +2,7 @@
 
 import pytest
 
+from conftest import REFERENCE_TESTS, needs_reference
 from projet_graphdb_spark.frontend import (
     LexError,
     ParseError,
@@ -100,9 +101,10 @@ def test_normalize_varref_emits_no_node_instr():
     assert isinstance(instrs[1], IActOnRel)
 
 
+@needs_reference
 def test_reference_corpus_compiles():
     for name in ["test1", "test2", "test3", "tiny", "entreprise"]:
-        src = open(f"/root/reference/graphDB/test/{name}.q").read()
+        src = open(f"{REFERENCE_TESTS}/{name}.q").read()
         np = compile_program(src)
         assert np.instructions
 

@@ -14,6 +14,7 @@ full Spark engine, so examples are kept small and deadline disabled.
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
 
+from conftest import REFERENCE_TESTS, needs_reference
 from projet_graphdb_spark.engine import binding_table, run_program
 from projet_graphdb_spark.frontend import compile_program, normalize, parse
 
@@ -114,9 +115,10 @@ def test_delete_cascade(spark, data, victim):
         assert s != vid and t != vid
 
 
+@needs_reference
 def test_normalize_deterministic():
     for name in ["test1", "test2", "entreprise"]:
-        src = open(f"/root/reference/graphDB/test/{name}.q").read()
+        src = open(f"{REFERENCE_TESTS}/{name}.q").read()
         a = normalize(parse(src)).instructions
         b = normalize(parse(src)).instructions
         assert a == b
