@@ -1,37 +1,31 @@
-"""Distributed k-means (Lloyd's iterations) over an embedding column.
+"""K-means (Lloyd's iterations) over an embedding column.
 
 The reference has no clustering at all; this is part of the
 training-data-pipeline surface (cluster-balanced sampling, IVF codebook
-training, topic bucketing).  The Spark shape per iteration is the one
-that scales:
+training, topic bucketing).
 
-* **assignment** — the current centroids travel in the closure of one
-  Arrow-batched BLAS UDF (:func:`assign_topn`), so assigning every
-  vector is MAP-ONLY: no shuffle, no broadcast exchange, one matmul per
-  batch.
-* **update** — ``posexplode`` the assigned vectors and average per
-  (cluster, position): ONE shuffle of (k·dim)-bounded aggregates
-  (map-side combined), then a k·dim-row collect to the driver — tiny by
-  construction (centroids must fit on the driver for the next
-  assignment regardless).
+Training fetches the ``(id, vector)`` frame to the driver ONCE through
+Arrow (one Spark job) and runs every Lloyd iteration there in numpy
+(:func:`lloyd`), so the frame must fit on the driver
+(``similarity.ivf_train`` / ``imi_train`` cap it at ``max_train_rows``,
+200k × dim).  The codebook reaches the executors in one UDF closure
+(:func:`assign_topn`), so assigning a corpus is map-only.
 
 Determinism/oracle story: seeding is deterministic (vectors with
 ``id < k``), ties break toward the smaller centroid id, and every
-centroid coordinate is rounded to ``round_dp`` decimals after each
-average.  The rounding absorbs float summation-order differences, so a
-DuckDB oracle replaying the same iterations (a left-to-right fold for
-distances, same rounding) reproduces the assignment exactly while the
-fixture's adjacent distances stay far above the BLAS/fold discrepancy
-(``tools/margin_gauge.py``) — the a3-pagerank playbook applied to
-clustering.
+centroid coordinate (a sequential sum in collect order over the count)
+is rounded to ``round_dp`` decimals.  The rounding absorbs float
+summation-order differences, so a DuckDB oracle replaying the same
+iterations (a left-to-right distance fold, same rounding) reproduces
+the assignment while the fixture's adjacent distances stay far above
+the BLAS/fold discrepancy (``tools/margin_gauge.py``).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .materialize import materialize
 
 
 def _sqdist_to_literal(vec: Column, centroid: list) -> Column:
@@ -57,18 +51,16 @@ def assign_topn(
     """Adds ``out_col``: array of the ``nprobe`` nearest centroid ids
     (squared euclidean, ties to the smaller cid), map-only.
 
-    The one nearest-centroid kernel of the engine: every codebook —
-    k-means training, IVF cells, PQ subspace codes — assigns through
-    the Arrow-batched BLAS UDF ``pyudf.make_topn_cells_udf``, whose
-    closure carries the (k × dim) centroid matrix.  Its selection is a
+    The engine's one nearest-centroid kernel, ``pyudf.nearest_cells``,
+    runs here in the Arrow-batched BLAS UDF ``make_topn_cells_udf``,
+    whose closure carries the (k × dim) centroid matrix, and on the
+    driver in k-means training (:func:`lloyd`).  Its selection is a
     stable ``(distance, cid)`` sort, the order a SQL oracle's
     left-to-right distance fold produces; the BLAS expansion agrees
     with that fold while adjacent distances stay far above f64 drift
     (receipt: ``tools/margin_gauge.py``).  A NULL vector, or one whose
     length is not the codebook's dim, gets a NULL ``out_col``.
     """
-    import numpy as np
-
     from .pyudf import make_topn_cells_udf
 
     items = sorted(cents.items())
@@ -77,14 +69,57 @@ def assign_topn(
     return emb.withColumn(out_col, make_topn_cells_udf(mat, cids, nprobe)(F.col(vec_col)))
 
 
-def _assign(emb: DataFrame, cents: dict, id_col: str, vec_col: str) -> DataFrame:
-    """(id, vec, cluster): nearest centroid, ties to the smaller cid —
-    map-only (see assign_topn)."""
-    return (
-        assign_topn(emb, cents, nprobe=1, vec_col=vec_col, out_col="_c1")
-        .withColumn("cluster", F.col("_c1")[0])
-        .drop("_c1")
-    )
+def lloyd(ids, V, k: int, num_iter: int, round_dp: int = 6) -> dict:
+    """:func:`kmeans_centroids`' loop in numpy over ``ids`` and f64 rows
+    ``V`` in collect order: seeds are the rows with ``id < k`` (a repeated
+    id keeps its last row); each iteration assigns with the cell kernel,
+    then sets each coordinate to the cluster's column sum in row order
+    over its count.  All rounded; an empty cluster keeps its centroid."""
+    from .pyudf import nearest_cells
+
+    cents = {
+        int(ids[i]): [round(x, round_dp) for x in V[i].tolist()]
+        for i in np.flatnonzero(ids < k)
+    }
+    for _ in range(num_iter):
+        cids = sorted(cents)
+        C = np.asarray([cents[c] for c in cids], dtype=np.float64)
+        near = nearest_cells(V, C, (C * C).sum(axis=1), 1)[:, 0]
+        sums = np.zeros_like(C)
+        np.add.at(sums, near, V)  # unbuffered: one row at a time, in order
+        counts = np.bincount(near, minlength=len(cids))
+        means = {
+            cids[j]: [round(x, round_dp) for x in (sums[j] / counts[j]).tolist()]
+            for j in np.flatnonzero(counts)
+        }
+        cents = {cid: means.get(cid, cents[cid]) for cid in cents}
+    return cents
+
+
+def collect_vectors(frame: DataFrame, id_col: str, vec_col: str) -> tuple:
+    """``(ids, vecs)`` in collect order from one Arrow job (NULL → None)."""
+    pdf = frame.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
+    return pdf["id"].to_numpy(), pdf["v"]
+
+
+def seeded_codebook(ids, vecs, k: int, num_iter: int, round_dp: int = 6) -> dict:
+    """:func:`lloyd` over collected ``(ids, vecs)``; the smallest seed
+    id with a vector sets the dim.  A seed whose vector is NULL or of
+    another length raises ``ValueError`` naming its id, as does a frame
+    with no seed; any other such row is left out, as
+    :func:`assign_topn` leaves it unassigned."""
+    lens = vecs.map(len, na_action="ignore").to_numpy(np.float64, na_value=np.nan)
+    seeds = np.flatnonzero(ids < k)
+    if not len(seeds):
+        raise ValueError(f"k-means has no seed: no row with id < {k}")
+    sized = seeds[~np.isnan(lens[seeds])]
+    dim = lens[sized[np.argmin(ids[sized])]] if len(sized) else np.nan
+    for i in seeds[lens[seeds] != dim]:
+        got = "a NULL vector" if np.isnan(lens[i]) else f"{lens[i]:g} coordinates, not {dim:g}"
+        raise ValueError(f"k-means seed id {int(ids[i])} has {got}")
+    ok = lens == dim
+    V = np.vstack(vecs[ok].to_numpy()).astype(np.float64)
+    return lloyd(ids[ok], V, k, num_iter, round_dp)
 
 
 def kmeans_centroids(
@@ -97,36 +132,10 @@ def kmeans_centroids(
 ) -> dict:
     """Trained codebook: {cid: centroid} after ``num_iter`` Lloyd
     iterations from the deterministic seed (vectors with ``id < k``,
-    coordinates rounded to ``round_dp`` after every average).  The
-    driver-side dict is the INDEX METADATA a consumer (e.g. IVF search)
-    hands to :func:`assign_topn`."""
-    emb = materialize(embeddings.select(F.col(id_col), F.col(vec_col)))
-    seed = emb.filter(F.col(id_col) < k).select(id_col, vec_col).collect()
-    cents = {
-        int(r[id_col]): [round(float(x), round_dp) for x in r[vec_col]] for r in seed
-    }
-    for _ in range(num_iter):
-        assigned = _assign(emb, cents, id_col, vec_col)
-        means = (
-            assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .collect()  # k*dim rows — bounded by the codebook size
-        )
-        new_cents: dict = {}
-        for r in means:
-            new_cents.setdefault(int(r["cluster"]), {})[int(r["pos"])] = round(
-                float(r["m"]), round_dp
-            )
-        cents = {
-            cid: (
-                [by_pos[p] for p in range(len(cents[cid]))]
-                if (by_pos := new_cents.get(cid))
-                else cents[cid]  # empty cluster keeps its centroid
-            )
-            for cid in cents
-        }
-    return cents
+    coordinates rounded to ``round_dp`` after every average), trained on
+    the driver from one collect of the frame.  The dict is the INDEX
+    METADATA a consumer (e.g. IVF search) hands to :func:`assign_topn`."""
+    return seeded_codebook(*collect_vectors(embeddings, id_col, vec_col), k, num_iter, round_dp)
 
 
 def kmeans_assignments(
@@ -141,9 +150,9 @@ def kmeans_assignments(
     deterministic seed (vectors with ``id < k``, coordinates rounded to
     ``round_dp``)."""
     cents = kmeans_centroids(embeddings, k, num_iter, id_col, vec_col, round_dp)
-    return _assign(
-        embeddings.select(F.col(id_col), F.col(vec_col)), cents, id_col, vec_col
-    ).select(F.col(id_col), F.col("cluster"))
+    return assign_topn(embeddings, cents, vec_col=vec_col).select(
+        F.col(id_col), F.col("_cells")[0].alias("cluster")
+    )
 
 
 def label_centroid_stats(
@@ -160,10 +169,10 @@ def label_centroid_stats(
     Scale design: one map-side pass computes per-vector squared norms
     (left-to-right ``aggregate`` fold, bit-reproducible); the centroid
     is a ``posexplode`` + per-(label, dim) average — a (labels·dim)-
-    bounded shuffle with map-side combine, the same shape as the
-    k-means update step.  Per-coordinate averages round to ``round_dp``
-    decimals (absorbing float summation-order differences) before the
-    64-term norm fold, so the DuckDB oracle reproduces every output bit.
+    bounded shuffle with map-side combine.  Per-coordinate averages
+    round to ``round_dp`` decimals (absorbing float summation-order
+    differences) before the 64-term norm fold, so the DuckDB oracle
+    reproduces every output bit.
 
     Output: (label, n_vecs, centroid_norm, avg_sq_dist).
     """

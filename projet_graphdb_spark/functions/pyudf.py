@@ -144,16 +144,25 @@ def topn_stable(D, p):
     return near
 
 
+def nearest_cells(V, cent_mat, csq, nprobe):
+    """Row indices into ``cent_mat`` of the ``nprobe`` nearest centroids
+    of each row of ``V`` (non-empty, f64): :func:`topn_stable` over
+    :func:`cell_sqdist` blocks of ~32 MB (measured at N=1M, k=16384, a
+    10k-row × 16384-cell block of 1.3 GB per core made allocation
+    thrash, not compute, the cost); selection is O(k) per row."""
+    import numpy as np
+
+    step = max(1, int(4_000_000 // max(1, len(cent_mat))))  # ~32 MB blocks
+    return np.concatenate([
+        topn_stable(cell_sqdist(V[i : i + step], cent_mat, csq), nprobe)
+        for i in range(0, len(V), step)
+    ])
+
+
 def make_topn_cells_udf(cent_mat, cids, nprobe):
     """Factory for the engine's one cell-assignment UDF (see
-    clustering.assign_topn): per Arrow batch, :func:`cell_sqdist`
-    blocks, then :func:`topn_stable` picks the ``nprobe`` nearest cells.
-
-    Scale shape (measured at N=1M, k=16384): rows are processed in
-    sub-chunks sized so the distance block stays ~32 MB (a full
-    10k-row Arrow batch × 16384 cells × 8 B is 1.3 GB per core —
-    allocation thrash, not compute, dominated the first
-    implementation), and selection is O(k) per row, not a full sort.
+    clustering.assign_topn): per Arrow batch, :func:`nearest_cells`
+    picks the ``nprobe`` nearest cells of every vector.
 
     A NULL vector, or one whose length differs from the codebook's
     dim, emits NULL.
@@ -165,7 +174,7 @@ def make_topn_cells_udf(cent_mat, cids, nprobe):
 
     cvec = np.asarray(cids, dtype=np.int64)
     csq = (cent_mat * cent_mat).sum(axis=1)  # (k,)
-    k, dim = cent_mat.shape
+    _, dim = cent_mat.shape
 
     @pandas_udf(ArrayType(LongType()))
     def _cells(v: pd.Series) -> pd.Series:
@@ -173,11 +182,7 @@ def make_topn_cells_udf(cent_mat, cids, nprobe):
         out = [None] * len(v)
         if ok.any():
             V = np.vstack(v[ok].to_numpy()).astype(np.float64)  # (rows × dim)
-            step = max(1, int(4_000_000 // max(1, k)))  # ~32 MB blocks
-            cells = np.concatenate([
-                cvec[topn_stable(cell_sqdist(V[i : i + step], cent_mat, csq), nprobe)]
-                for i in range(0, len(V), step)
-            ])
+            cells = cvec[nearest_cells(V, cent_mat, csq, nprobe)]
             for i, c in zip(np.flatnonzero(ok), cells):
                 out[i] = c
         return pd.Series(out, dtype=object)

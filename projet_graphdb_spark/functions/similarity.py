@@ -764,21 +764,27 @@ def ivf_train(
     """Train the IVF codebook over a ``(_vid, _v)`` frame: ``k = N /
     target_cell_rows`` (occupancy — and hence each cell's share of the
     Σ cell² verify term — held constant as N grows), Lloyd iterations
-    on a deterministic 1-in-step id sample capped at ``max_train_rows``,
-    densely re-id'd map-side so the seeded ``id < k`` rule keeps its
-    k seeds.  Returns the centroid dict :func:`clustering.assign_topn`
-    consumes."""
+    on :func:`_train_sample`, collected to the driver in one Spark job
+    (:func:`clustering.kmeans_centroids`).  Returns the centroid dict
+    :func:`clustering.assign_topn` consumes."""
     from . import clustering
 
     k = n_centroids or max(2, min(max_centroids, -(-n_rows // target_cell_rows)))
-    train = emb
-    if n_rows > max_train_rows:
-        step = -(-n_rows // max_train_rows)
-        train = emb.filter(F.col("_vid") % step == 0).withColumn(
-            "_vid", (F.col("_vid") / step).cast("long")
-        )
     return clustering.kmeans_centroids(
-        train, k=k, num_iter=num_iter, id_col="_vid", vec_col="_v"
+        _train_sample(emb, n_rows, max_train_rows),
+        k=k, num_iter=num_iter, id_col="_vid", vec_col="_v",
+    )
+
+
+def _train_sample(emb: DataFrame, n_rows: int, max_train_rows: int) -> DataFrame:
+    """What the codebook trainers collect: ``emb`` (_vid, _v), or past
+    ``max_train_rows`` a deterministic 1-in-step id sample, densely
+    re-id'd map-side so the seeded ``id < k`` rule keeps its k seeds."""
+    if n_rows <= max_train_rows:
+        return emb
+    step = -(-n_rows // max_train_rows)
+    return emb.filter(F.col("_vid") % step == 0).withColumn(
+        "_vid", (F.col("_vid") / step).cast("long")
     )
 
 
@@ -982,9 +988,10 @@ def ivf_cosine_dups(
     Scale design: codebook size tracks the corpus (``k = N /
     target_cell_rows``) so expected cell occupancy — and hence the
     Σ cell² verify term ≈ ``nprobe²·target_cell_rows·N/2`` dot
-    products — stays LINEAR in N.  Training runs on a deterministic
+    products — stays LINEAR in N.  Training collects a deterministic
     1-in-step id sample capped at ``max_train_rows`` (re-id'd densely,
-    map-side, so the seeded id<k rule still applies); corpus assignment
+    map-side, so the seeded id<k rule still applies) in one Spark job
+    and runs Lloyd on the driver (:func:`ivf_train`); corpus assignment
     is one BLAS matmul per Arrow batch (``clustering.assign_topn``),
     exploded straight into the cell-local verify
     (:func:`_verify_within_cells`): one ``groupBy("_cell")`` grouped-map
@@ -1605,47 +1612,23 @@ def imi_train(
     """Train the two INDEPENDENT half-space codebooks of the inverted
     multi-index (the persisted artifact of :func:`incremental_imi_dups`
     — 2·k·(dim/2) floats, trivially storable next to the cell sink).
-    ``emb`` carries (_vid, _v) with the dense-id contract; training
-    runs on the deterministic 1-in-step id sample of :func:`ivf_train`,
-    both halves sharing ONE checkpointed sample scan."""
+    ``emb`` carries (_vid, _v) with the dense-id contract; ONE Spark job
+    collects :func:`_train_sample` and both codebooks train on the
+    driver from it (``dim=None`` costs one more job to read it)."""
     from . import clustering
 
     if dim is None:
         dim = emb.select(F.size("_v")).first()[0]
     half = dim // 2
-    train = emb
-    if n_rows > max_train_rows:
-        step = -(-n_rows // max_train_rows)
-        train = emb.filter(F.col("_vid") % step == 0).withColumn(
-            "_vid", (F.col("_vid") / step).cast("long")
-        )
-    train = materialize(train)  # both half-codebooks
-    # train from it; one scan, not two
-    lo = F.slice(F.col("_v"), 1, half)
-    hi = F.slice(F.col("_v"), half + 1, dim - half)
-    # the two half-space Lloyd chains are independent reads of the same
-    # checkpointed sample — overlap them (guide §2.6; r15 optimization):
-    # each iteration is a short assignment job + a k·(dim/2)-bounded
-    # update collect, so serial submission left the session idle between
-    # the tiny jobs; the codebooks are identical either way
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f1 = pool.submit(
-            lambda: clustering.kmeans_centroids(
-                train.select("_vid", lo.alias("_v")), k=k1,
-                num_iter=num_iter, id_col="_vid", vec_col="_v",
-            )
-        )
-        f2 = pool.submit(
-            lambda: clustering.kmeans_centroids(
-                train.select("_vid", hi.alias("_v")), k=k2,
-                num_iter=num_iter, id_col="_vid", vec_col="_v",
-            )
-        )
-        cents1 = f1.result()
-        cents2 = f2.result()
-    return cents1, cents2
+    ids, vecs = clustering.collect_vectors(
+        _train_sample(emb, n_rows, max_train_rows), "_vid", "_v"
+    )
+    lo = vecs.map(lambda v: v[:half], na_action="ignore")
+    hi = vecs.map(lambda v: v[half:dim], na_action="ignore")
+    return (
+        clustering.seeded_codebook(ids, lo, k1, num_iter),
+        clustering.seeded_codebook(ids, hi, k2, num_iter),
+    )
 
 
 def _imi_assign(
@@ -1714,8 +1697,9 @@ def imi_cosine_dups(
     RECALL is empirical — measure with :func:`ivf_calibrate_recall`
     over the virtual-cell assignment.
 
-    Training runs on the same deterministic 1-in-step sample as
-    :func:`ivf_train`, per half; both halves share the sample pass.
+    Training collects the same deterministic 1-in-step sample as
+    :func:`ivf_train` in one Spark job; both half-codebooks train on
+    the driver from that one matrix (:func:`imi_train`).
 
     ``cells_only``: return the ``(_vid, _v, _cells)`` virtual-cell
     assignment instead of pairs — :func:`cosine_dups_auto` feeds it to
@@ -4329,8 +4313,8 @@ def knn_ivf_trained(
     full train-index-then-search lifecycle (``knn_ivf`` demonstrates
     the same search with a seeded stand-in codebook).
 
-    Scale design: training's per-iteration cost is one map-only
-    assignment + a (k·dim)-bounded update aggregate; the codebook is
+    Scale design: training collects the frame to the driver in one
+    Spark job and runs the Lloyd iterations there; the codebook is
     driver metadata handed to ``clustering.assign_topn`` (``nprobe=1``
     for the corpus cell, ``nprobe`` for the query probes), so corpus
     cell assignment is a PURE map-side pass (no join/shuffle), the cell
@@ -4378,16 +4362,15 @@ def knn_ivf_trained(
 
 def _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp) -> list:
     """Per-subspace PQ codebooks: ``m`` Lloyd-trained ``ksub``-entry
-    codebooks, one over each ``sub``-wide slice of ``vec_col``."""
-    from .clustering import kmeans_centroids
+    codebooks, one over each ``sub``-wide slice of ``vec_col``, all
+    trained on the driver from one collect of the frame."""
+    from . import clustering
 
+    ids, vecs = clustering.collect_vectors(embeddings, id_col, vec_col)
     return [
-        kmeans_centroids(
-            embeddings.select(
-                F.col(id_col), F.slice(F.col(vec_col), j * sub + 1, sub).alias(vec_col)
-            ),
-            k=ksub, num_iter=num_iter,
-            id_col=id_col, vec_col=vec_col, round_dp=round_dp,
+        clustering.seeded_codebook(
+            ids, vecs.map(lambda v: v[j * sub : (j + 1) * sub], na_action="ignore"),
+            ksub, num_iter, round_dp,
         )
         for j in range(m)
     ]
@@ -4455,8 +4438,8 @@ def knn_pq_adc(
 
     Scale shape — every stage is the one you'd run at 100 TB:
 
-    * **train**: per-subspace ``clustering.kmeans_centroids`` (map-only
-      assign + (ksub·dim/m)-bounded update);
+    * **train**: one collect of the frame, then a driver-side Lloyd
+      codebook per subspace slice (``clustering.seeded_codebook``);
     * **encode**: one ``clustering.assign_topn`` per subspace slice →
       corpus encoding is a PURE map-side pass, output m small ints per
       vector;

@@ -649,25 +649,64 @@ def test_ivf_cosine_dups_one_cell_spans_row_blocks(spark):
 
 def test_ivf_cosine_dups_plan_is_cell_local(spark, emb, monkeypatch):
     """The own-route IVF plan verifies inside cells: one grouped-map
-    pandas pass, no join keyed on ``_cell``, and one lineage barrier
-    (k-means' training input)."""
-    from projet_graphdb_spark.functions import clustering
-
-    calls = []
-
-    def spy(real):
-        def wrapped(df, *a, **kw):
-            calls.append(1)
-            return real(df, *a, **kw)
-        return wrapped
-
-    monkeypatch.setattr(similarity, "materialize", spy(similarity.materialize))
-    monkeypatch.setattr(clustering, "materialize", spy(clustering.materialize))
+    pandas pass, no join keyed on ``_cell``, and no lineage barrier
+    (k-means trains from one driver-side collect)."""
+    calls = _spy_materialize(monkeypatch)
     out = similarity.ivf_cosine_dups(emb, threshold=0.4, n_centroids=8, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
     assert not [l for l in plan.splitlines() if "Join" in l and "_cell" in l]
-    assert len(calls) == 1
+    assert len(calls) == 0
+
+
+def _spy_materialize(monkeypatch) -> list:
+    """Counts every ``materialize`` call, in each engine module that
+    imports it."""
+    import sys
+
+    from projet_graphdb_spark.functions.materialize import materialize as real
+
+    calls = []
+
+    def wrapped(df, *a, **kw):
+        calls.append(1)
+        return real(df, *a, **kw)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("projet_graphdb_spark") and getattr(mod, "materialize", None) is real:
+            monkeypatch.setattr(mod, "materialize", wrapped)
+    return calls
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, the number of Spark jobs it submitted)."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+@pytest.mark.parametrize("max_train_rows", [200_000, 100], ids=["whole", "sampled"])
+def test_codebook_training_is_one_job(spark, emb, monkeypatch, max_train_rows):
+    """``ivf_train`` and ``imi_train`` (``dim`` given) each collect
+    their training sample in one Spark job and train on the driver,
+    with no lineage barrier."""
+    corp = emb.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
+    n = emb.count()
+    calls = _spy_materialize(monkeypatch)
+    cents, jobs = _jobs_in(spark, lambda: similarity.ivf_train(
+        corp, n, n_centroids=8, num_iter=3, max_train_rows=max_train_rows))
+    assert (len(cents), jobs) == (8, 1)
+    (c1, c2), jobs = _jobs_in(spark, lambda: similarity.imi_train(
+        corp, n, k1=4, k2=4, num_iter=2, dim=64, max_train_rows=max_train_rows))
+    assert (len(c1), len(c2), jobs) == (4, 4, 1)
+    assert calls == []
 
 
 def test_incremental_ivf_equals_batch_cross_cut(spark, emb):

@@ -31,7 +31,11 @@ discrepancy.  For the pinned codebooks (the seeded ``id < 8`` cells
 rounded to 6 dp, and ``ivf_train``'s 8 cells × 2 Lloyd rounds) the
 gauge reports, per nprobe, the smallest such gap and the discrepancy,
 both scaled by ``||v||² + ||c||²`` so near-zero self-distances do not
-dominate, and asserts gap / discrepancy >= MARGIN_FACTOR.
+dominate, and asserts gap / discrepancy >= MARGIN_FACTOR.  The
+``ivf_train`` receipt holds only for the codebook the engine trains:
+``codebook_equal`` checks that the engine's driver-side Lloyd
+(``clustering.lloyd``) returns this gauge's fold-distance replay bit
+for bit.
 
 Cosine-cell receipt: ``similarity.knn_ivf`` (s4) ranks cells by the
 same kernel over the unit-normalized ``id < 8`` codebook, while its
@@ -42,7 +46,7 @@ fold with the smallest gap between the oracle's ``nprobe``-th and
 ``(nprobe+1)``-th cosine, for nprobe 1 and 2.
 
 Usage: python tools/margin_gauge.py [out.json]
-Exit 1 if any fixture's margin is below the bound.
+Exit 1 if any fixture's margin is below the bound or its codebooks differ.
 """
 
 from __future__ import annotations
@@ -56,6 +60,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from projet_graphdb_spark.functions import clustering  # noqa: E402
 from projet_graphdb_spark.functions.pyudf import cell_sqdist  # noqa: E402
 from projet_graphdb_spark.functions.similarity import srp_auto_bands, srp_bands  # noqa: E402
 
@@ -103,6 +108,13 @@ def lloyd(V: np.ndarray, k: int, rounds: int, round_dp: int = 6) -> np.ndarray:
             for j in range(k)
         ])
     return C
+
+
+def codebook_equal(V: np.ndarray, k: int = N_CELLS, rounds: int = 2) -> bool:
+    """Whether ``clustering.lloyd`` over ``V`` (ids 0..n-1 in row
+    order) equals :func:`lloyd` bit for bit."""
+    got = clustering.lloyd(np.arange(len(V)), V, k, rounds)
+    return bool(np.array_equal(np.asarray([got[c] for c in sorted(got)]), lloyd(V, k, rounds)))
 
 
 def cell_gauge(V: np.ndarray, C: np.ndarray) -> dict:
@@ -201,13 +213,15 @@ def gauge(sf_dir: str) -> dict:
     srp = srp_gauges(V)
     cells = cell_gauges(V)
     ivf_cos = ivf_cosine_gauge(V)
+    same = codebook_equal(V)
     return {
         "n_vectors": int(V.shape[0]),
         "dim": int(V.shape[1]),
         "srp": srp,
         "cells": cells,
         "ivf_cosine": ivf_cos,
-        "ok": all(r["ok"] for r in [*srp.values(), *cells.values(), ivf_cos]),
+        "codebook_equal": same,
+        "ok": same and all(r["ok"] for r in [*srp.values(), *cells.values(), ivf_cos]),
     }
 
 
@@ -241,7 +255,8 @@ def main() -> None:
             f"discrepancy={g['max_cosine_discrepancy']:.3e} "
             f"gap/discrepancy>={g['min_gap_over_discrepancy']:.1e}"
         )
-        print(f"  {'OK' if r['ok'] else 'TOO CLOSE'}")
+        print(f"  ivf_train_8x2 codebook equals clustering.lloyd: {r['codebook_equal']}")
+        print(f"  {'OK' if r['ok'] else 'FAIL'}")
     results["margin_factor_required"] = MARGIN_FACTOR
     results["ok"] = ok
     if out_path:
