@@ -58,15 +58,23 @@ def assign_topn(
     stable ``(distance, cid)`` sort, the order a SQL oracle's
     left-to-right distance fold produces; the BLAS expansion agrees
     with that fold while adjacent distances stay far above f64 drift
-    (receipt: ``tools/margin_gauge.py``).  A NULL vector, or one whose
-    length is not the codebook's dim, gets a NULL ``out_col``.
+    (receipt: ``tools/margin_gauge.py``).  A NULL vector, one whose
+    length is not the codebook's dim, or one with a non-finite element
+    gets a NULL ``out_col``.
     """
+    return emb.withColumn(out_col, topn_cells(F.col(vec_col), cents, nprobe))
+
+
+def topn_cells(vec: Column, cents: dict, nprobe: int) -> Column:
+    """:func:`assign_topn`'s cell array as a column.  Explode it in the
+    ``select`` that makes it: from a projected column Catalyst infers a
+    ``size(...) > 0`` filter below the projection, running the UDF twice."""
     from .pyudf import make_topn_cells_udf
 
     items = sorted(cents.items())
     mat = np.asarray([cv for _, cv in items], dtype=np.float64)
     cids = [int(cid) for cid, _ in items]
-    return emb.withColumn(out_col, make_topn_cells_udf(mat, cids, nprobe)(F.col(vec_col)))
+    return make_topn_cells_udf(mat, cids, nprobe)(vec)
 
 
 def lloyd(ids, V, k: int, num_iter: int, round_dp: int = 6) -> dict:
@@ -104,10 +112,11 @@ def collect_vectors(frame: DataFrame, id_col: str, vec_col: str) -> tuple:
 
 def seeded_codebook(ids, vecs, k: int, num_iter: int, round_dp: int = 6) -> dict:
     """:func:`lloyd` over collected ``(ids, vecs)``; the smallest seed
-    id with a vector sets the dim.  A seed whose vector is NULL or of
-    another length raises ``ValueError`` naming its id, as does a frame
-    with no seed; any other such row is left out, as
-    :func:`assign_topn` leaves it unassigned."""
+    id with a vector sets the dim.  A seed whose vector is NULL, of
+    another length or has a non-finite element (a NULL element arrives
+    as NaN) raises ``ValueError`` naming its id, as does a frame with no
+    seed; any other such row is left out, as :func:`assign_topn` leaves
+    it unassigned."""
     lens = vecs.map(len, na_action="ignore").to_numpy(np.float64, na_value=np.nan)
     seeds = np.flatnonzero(ids < k)
     if not len(seeds):
@@ -119,7 +128,10 @@ def seeded_codebook(ids, vecs, k: int, num_iter: int, round_dp: int = 6) -> dict
         raise ValueError(f"k-means seed id {int(ids[i])} has {got}")
     ok = lens == dim
     V = np.vstack(vecs[ok].to_numpy()).astype(np.float64)
-    return lloyd(ids[ok], V, k, num_iter, round_dp)
+    finite = np.isfinite(V).all(axis=1)
+    for i in ids[ok][~finite & (ids[ok] < k)]:
+        raise ValueError(f"k-means seed id {int(i)} has a non-finite element")
+    return lloyd(ids[ok][finite], V[finite], k, num_iter, round_dp)
 
 
 def kmeans_centroids(

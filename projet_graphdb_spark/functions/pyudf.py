@@ -45,11 +45,11 @@ def seq_rowdot(A, B):
 
 @pandas_udf(DoubleType())
 def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Arrow-batched exact-verify dot product for candidate PAIRS —
-    the per-pair term of ``similarity._verify_candidate_pairs`` (LSH
-    bands) and ``_incremental_cells_pairs`` (IVF/IMI ingest, shard ×
-    corpus); the batch IVF family verifies inside its cells and calls
-    :func:`seq_rowdot` directly (``similarity._verify_within_cells``).
+    """Arrow-batched exact-verify dot product for candidate PAIRS whose
+    sides come from two frames — the per-pair term of
+    ``similarity._incremental_cells_pairs`` (IVF/IMI ingest, shard ×
+    corpus); the batch dup operators verify inside their blocks and
+    call :func:`seq_rowdot` directly (``similarity._verify_within_blocks``).
     Guide §4.2: the interpreted ``aggregate(zip_with(...))`` fold costs
     ~4.5 µs/pair and dominates the verify tail at scale; one
     BLAS-shaped batch op replaces it.
@@ -164,8 +164,9 @@ def make_topn_cells_udf(cent_mat, cids, nprobe):
     clustering.assign_topn): per Arrow batch, :func:`nearest_cells`
     picks the ``nprobe`` nearest cells of every vector.
 
-    A NULL vector, or one whose length differs from the codebook's
-    dim, emits NULL.
+    A NULL vector, one whose length differs from the codebook's dim, or
+    one with a non-finite element (a NULL element arrives as NaN) emits
+    NULL.
 
     ``cent_mat``: (k × dim) float64 centroid matrix, rows in ``cids``
     order; ``cids``: sorted ascending int64 centroid ids; ``nprobe``:
@@ -182,9 +183,12 @@ def make_topn_cells_udf(cent_mat, cids, nprobe):
         out = [None] * len(v)
         if ok.any():
             V = np.vstack(v[ok].to_numpy()).astype(np.float64)  # (rows × dim)
-            cells = cvec[nearest_cells(V, cent_mat, csq, nprobe)]
-            for i, c in zip(np.flatnonzero(ok), cells):
-                out[i] = c
+            finite = np.isfinite(V).all(axis=1)
+            ok[ok] = finite
+            if finite.any():
+                cells = cvec[nearest_cells(V[finite], cent_mat, csq, nprobe)]
+                for i, c in zip(np.flatnonzero(ok), cells):
+                    out[i] = c
         return pd.Series(out, dtype=object)
 
     return _cells

@@ -10,6 +10,10 @@
 * ``embedding_cosine_dups`` — near-duplicate pairs by cosine within
   blocks (e.g. a cluster label), the embedding analogue of blocked
   n-gram dedup.
+  ``lsh_cosine_dups`` (SRP buckets) and ``ivf_cosine_dups`` /
+  ``imi_cosine_dups`` (k-means cells) block the whole corpus; all of
+  them verify each block in one sorted Arrow stream
+  (:func:`_verify_within_blocks`), so no candidate pair is shuffled.
 
 Dot products use ``zip_with`` + ``aggregate`` (JVM, codegen) in double
 precision with left-to-right summation — bit-reproducible and matching
@@ -36,7 +40,9 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def _pair_sim(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """Exact cosine for candidate-PAIR verify tails: the dot runs as
+    """Exact cosine for candidate pairs whose sides come from two
+    frames (the shard × corpus tail :func:`_incremental_cells_pairs`;
+    in-block pairs use :func:`_verify_within_blocks`): the dot runs as
     ONE Arrow-batched numpy op per batch (guide §4.2 — the interpreted
     ``aggregate(zip_with(...))`` fold costs ~4.5 µs/pair and is the
     dominant per-candidate term at scale), divided by the precomputed
@@ -498,26 +504,22 @@ def embedding_cosine_dups(
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine >= threshold) within blocks.
 
-    Output: (id_a, id_b, sim), id_a < id_b.  The pair enumeration is a
-    SHUFFLE join on a salted block key — never a broadcast of the corpus
-    (a full-table broadcast OOMs the moment blocks stop fitting in one
-    executor).  Salting keeps parallelism when the block key has few
-    distinct values: the probe side gets a deterministic salt in
-    [0, S), the build side is exploded once per salt, and the join runs
-    on (block, salt) — every pair meets exactly once, spread over
-    |blocks|·S tasks, each streaming its shuffle partition.  Shuffle
-    volume is |A| + S·|B|; pick S ≈ cluster parallelism.  (The
-    sub-quadratic scale path for pair *generation* remains SRP/MinHash
-    banding — this operator is the exact in-block verifier.)
+    Output: (id_a, id_b, sim), id_a < id_b.  Each row is shuffled once,
+    to its block's partition — never a broadcast of the corpus (a
+    full-table broadcast OOMs the moment blocks stop fitting in one
+    executor) — and each block is verified in one sorted Arrow stream
+    (:func:`_verify_within_blocks`); no pair is shuffled.  An id that
+    appears twice in a block pairs twice, as a self-join pairs it.
 
     ``max_block_rows``: mechanical guard against accidental quadratics
     (round-5 rehearsal measured this operator at 90× cost for 10× data
-    when mis-used corpus-wide) — the in-block pair count is Σ block²,
-    so any block above the cap raises loudly BEFORE the join runs.
-    Pass ``exact_ok=True`` only when the quadratic cost is the point
-    (a deliberate small-corpus exactness baseline); the scale path for
-    large blocks is ``srp_cosine_pairs`` (s9), which bands the corpus
-    sub-quadratically and verifies exactly inside buckets.
+    when mis-used corpus-wide) — a block's rows land in one task, so
+    the cap bounds a task's memory and its block² dot products; any
+    block above it raises loudly BEFORE the verify runs.  Pass
+    ``exact_ok=True`` only when the quadratic cost is the point (a
+    deliberate small-corpus exactness baseline): one task then holds a
+    large block whole.  The scale path for large blocks is
+    :func:`lsh_cosine_dups` (s9), which bands the corpus sub-quadratically.
     """
     base = materialize(embeddings.select(
         F.col(block_col).alias("_blk"),
@@ -535,33 +537,13 @@ def embedding_cosine_dups(
             raise ValueError(
                 f"embedding_cosine_dups: largest {block_col!r} block has "
                 f"{biggest} rows > max_block_rows={max_block_rows}; the "
-                f"in-block join is quadratic (Σ block²). Use "
-                f"srp_cosine_pairs for corpus-scale near-dup pairs, or "
+                f"in-block verify is quadratic (Σ block²). Use "
+                f"lsh_cosine_dups for corpus-scale near-dup pairs, or "
                 f"pass exact_ok=True if the exact quadratic baseline is "
                 f"intended."
             )
-    n_salts = max(embeddings.sparkSession.sparkContext.defaultParallelism, 1)
-    a = base.select(
-        "_blk",
-        F.pmod(F.xxhash64(F.col("_vid")), F.lit(n_salts)).alias("_salt"),
-        F.col("_vid").alias("id_a"),
-        F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    b = base.select(
-        "_blk",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>")).alias("_salt"),
-        F.col("_vid").alias("id_b"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    return (
-        a.join(b, on=["_blk", "_salt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", _pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
+    pairs = _verify_within_blocks(base, ["_blk"], threshold)
+    return pairs.select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
 def ann_recall(
@@ -684,13 +666,14 @@ def lsh_cosine_dups(
     is ``srp_recall(threshold, bits, 64)``.  Pass explicit bands when
     an oracle or a recall experiment must pin the exact construction.
 
-    Scale design: one signature pass over the corpus (map-only), a
-    per-band self-join on the band signature — shuffle keyed on a
-    64-bucket-per-band hash, never all-pairs — a distinct on candidate
-    pairs, and two id-keyed joins to fetch vectors for the exact
-    verify.  Total cost O(corpus + Σ bucket²) instead of O(n²); at
-    100 TB tune bits-per-band so the largest bucket's pair count fits a
-    task, exactly like the MinHash banding in ``dedup.py``.
+    Scale design: one map-only signature pass (one Arrow matmul UDF)
+    ``posexplode``d into (band, signature) bucket rows that carry their
+    vector — n_bands·N shuffled rows, no candidate pair, no id-keyed
+    vector fetch — and each bucket verified in one task by
+    :func:`_verify_within_blocks`; a pair colliding in several bands is
+    ``distinct``ed.  Cost O(n_bands·N + Σ bucket²) instead of O(n²);
+    at 100 TB tune bits-per-band so the largest bucket fits a task, as
+    in ``dedup.py``'s MinHash banding.  Ids must be unique.
 
     Output: (id_a, id_b, sim), id_a < id_b, cosine ≥ threshold, only
     pairs colliding in ≥1 band.  Deterministic given the seeded planes.
@@ -711,45 +694,14 @@ def lsh_cosine_dups(
         F.col(vec_col).alias("_v"),
         l2norm(F.col(vec_col)).alias("_n"),
     )
-    # one signature pass, materialized: (id, one long per band) is tiny
-    # (~40 B/row at any corpus size) from one Arrow matmul UDF
-    # (srp_signature_array).  posexplode —
-    # not an n-band union — turns the array into (band, sig) rows, so
-    # the plan stays O(1) in band count (the old 64-leg union was a
-    # driver-side analysis bottleneck before the first task ever ran)
-    sigs = materialize(base.select(
-        "_vid", srp_signature_array(F.col("_v"), bands).alias("_sigs")
-    ))
-    cand = sigs.select(
-        "_vid", F.posexplode("_sigs").alias("_band", "_sig")
+    # posexplode straight off the UDF (see clustering.topn_cells)
+    rows = base.select(
+        "_vid", "_v", "_n",
+        F.posexplode(srp_signature_array(F.col("_v"), bands)).alias("_band", "_sig"),
     )
-    a = cand.select("_band", "_sig", F.col("_vid").alias("id_a"))
-    b = cand.select("_band", "_sig", F.col("_vid").alias("id_b"))
-    pairs = (
-        a.join(b, on=["_band", "_sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return _verify_candidate_pairs(base, pairs, threshold)
-
-
-def _verify_candidate_pairs(base: DataFrame, pairs: DataFrame, threshold: float) -> DataFrame:
-    """Exact-cosine verification tail of :func:`lsh_cosine_dups`'s
-    band candidates: two id-keyed joins fetch the vectors +
-    precomputed norms from ``base`` (_vid, _v, _n), one map-side dot
-    per candidate, filter at the unrounded threshold.  (The IVF family
-    verifies inside its cells instead: :func:`_verify_within_cells`.)
-    Output: (id_a, id_b, sim) rounded to 6 dp."""
-    va = base.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
-    vb = base.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("sim", _pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")))
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
-    )
+    pairs = _verify_within_blocks(rows, ["_band", "_sig"], threshold)
+    # a pair colliding in ≥2 bands is verified in each
+    return pairs.distinct().select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
 def ivf_train(
@@ -992,14 +944,14 @@ def ivf_cosine_dups(
     1-in-step id sample capped at ``max_train_rows`` (re-id'd densely,
     map-side, so the seeded id<k rule still applies) in one Spark job
     and runs Lloyd on the driver (:func:`ivf_train`); corpus assignment
-    is one BLAS matmul per Arrow batch (``clustering.assign_topn``),
-    exploded straight into the cell-local verify
-    (:func:`_verify_within_cells`): one ``groupBy("_cell")`` grouped-map
-    pass whose task verifies one cell's members against each other in
-    BLAS blocks — Σ cell² dot products per task, no candidate-pair
-    shuffle and no vector-fetch join.  One cell's rows land in one
-    task, so ``target_cell_rows`` is what bounds a task at scale (a
-    hot cell is the skew to watch: :func:`cell_occupancy_report`).  Beyond
+    is one BLAS matmul per Arrow batch (``clustering.topn_cells``),
+    exploded straight into the blocked verify
+    (:func:`_verify_within_blocks` keyed on ``_cell``): one sorted
+    ``mapInPandas`` stream whose task verifies each cell's members
+    against each other in BLAS blocks — Σ cell² dot products, no
+    candidate-pair shuffle and no vector-fetch join.  One cell's rows
+    land in one task, so ``target_cell_rows`` is what bounds a task at
+    scale (a hot cell is the skew to watch: :func:`cell_occupancy_report`).  Beyond
     ``max_centroids`` cells (~1e7+ rows/shard) flat assignment's N·k
     matmul is the next wall —
     :func:`imi_cosine_dups` breaks it with the two-level IMI layout
@@ -1047,40 +999,42 @@ def ivf_cosine_dups(
                 max_centroids=max_centroids,
                 max_train_rows=max_train_rows,
             )
-        rows = clustering.assign_topn(
-            base, centroids, nprobe=nprobe, vec_col="_v"
-        ).select("_vid", "_v", "_n", F.explode("_cells").alias("_cell"))
+        rows = base.select(
+            "_vid", "_v", "_n",
+            F.explode(clustering.topn_cells(F.col("_v"), centroids, nprobe)).alias("_cell"),
+        )
     else:
         rows = assigned_cells.select("_vid", "_cell").join(base, "_vid")
-    return _verify_within_cells(rows, threshold)
+    pairs = _verify_within_blocks(rows, ["_cell"], threshold)
+    # soft assignment verifies a pair in every cell it shares
+    return pairs.distinct().select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
-def _verify_within_cells(rows: DataFrame, threshold: float) -> DataFrame:
-    """Cell-local exact-cosine verify of the IVF family: ``rows`` carry
-    (_cell, _vid, _v, _n), one row per (vector, cell) membership with
-    ``_n`` the JVM :func:`l2norm`.  One ``groupBy("_cell").applyInPandas``
-    pass verifies each cell's members against each other, so no
-    candidate pair is shuffled and no vector is fetched by id.
+def _verify_within_blocks(rows: DataFrame, keys: list, threshold: float) -> DataFrame:
+    """The blocked exact-cosine verify of every batch dup operator: LSH
+    buckets (``_band``, ``_sig``), label blocks (``_blk``) and IVF/IMI
+    cells (``_cell``).  ``rows`` carry (keys…, _vid, _v, _n), one row per
+    (vector, block) membership with ``_n`` the JVM :func:`l2norm`.  Rows
+    with a NULL key, id or vector are dropped; a hash ``repartition`` on
+    the keys puts each block in one partition and ``sortWithinPartitions``
+    makes it a run of rows in ``_vid`` order.  One ``mapInPandas`` pass
+    streams each partition's Arrow batches, carrying the open block from
+    one batch to the next, so a task holds one block plus one batch and
+    no candidate pair is shuffled.
 
-    Per cell (NULL ids, cells and vectors are dropped first): the rows
-    are split by vector length (ragged pairs are never compared, as in
-    ``pyudf.pair_dot``) and sorted by ``_vid``; ``V_blk @ V.T /
-    outer(n, n)`` runs in ~32 MB row blocks (the ``make_topn_cells_udf``
-    sizing) and keeps the pairs ``id_a < id_b`` that are not provably
-    below the threshold: a BLAS cosine ``>= threshold − 1e-9`` (the
-    ``incremental_exact_dups`` slack, far above the ≤ dim·u BLAS-vs-fold
-    error), a non-finite one, or a zero norm product.  The survivors are
-    re-folded with ``pyudf.seq_rowdot`` and ``sim = _dot / (_na * _nb)``
-    is computed JVM-side, so every emitted ``sim`` is the same double
-    :func:`_pair_sim` gives — the prefilter only selects pairs.  A NaN
-    fold reaches the JVM as NULL (the pandas→Arrow conversion, as in
-    ``pair_dot``), a zero norm product divides by zero there exactly as
-    the pair-join verify did.  A pair sharing ≥2 cells is verified once
-    per cell; the ``distinct`` runs over verified pairs only.
-
-    One cell's rows land in one task, so the task's cost is its cell²
-    dot products; ``target_cell_rows`` is what bounds that at scale.
-    Output: (id_a, id_b, sim rounded to 6 dp), ``id_a`` / ``id_b`` of
+    Per block, the rows are split by vector length (ragged pairs are never
+    compared, as in ``pyudf.pair_dot``); ``V_blk @ V.T / outer(n, n)`` runs
+    in ~32 MB row blocks and keeps the pairs ``id_a < id_b`` that are not
+    provably below the threshold: a BLAS cosine ``>= threshold − 1e-9``
+    (far above the ≤ dim·u BLAS-vs-fold error), a non-finite one, or a
+    zero norm product.  The survivors are re-folded with
+    ``pyudf.seq_rowdot`` and ``sim = _dot / (_na * _nb)`` is computed
+    JVM-side, so every ``sim`` is the double :func:`_pair_sim` gives.  A
+    NaN fold reaches the JVM as NULL (pandas→Arrow) and the pair is
+    dropped; a zero norm product divides by zero there (ANSI mode raises).
+    A pair is emitted once per block and row pair it occurs in (a repeated
+    ``_vid`` pairs twice); callers whose blocks overlap add a ``distinct``.
+    Output: (id_a, id_b, sim) at ``sim >= threshold``, unrounded, ids of
     the input's id type."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -1091,50 +1045,76 @@ def _verify_within_cells(rows: DataFrame, threshold: float) -> DataFrame:
     )
     floor = threshold - 1e-9
 
-    def verify(cell):
+    def verify(batches):
         import numpy as np
         import pandas as pd
 
         from .pyudf import seq_rowdot
 
-        cell = cell.sort_values("_vid", kind="stable")
         out = {c: [] for c in ("id_a", "id_b", "_dot", "_na", "_nb")}
-        for _, grp in cell.groupby(cell["_v"].map(len), sort=False):
-            ids = grp["_vid"].to_numpy()
-            V = np.vstack(grp["_v"].to_numpy()).astype(np.float64)
-            n = grp["_n"].to_numpy(dtype=np.float64)
-            step = max(1, 4_000_000 // len(V))  # ~32 MB blocks
-            for s in range(0, len(V), step):
-                # sorted ids: every partner of rows s.. sits at column ≥ s
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    nn = n[s : s + step, None] * n[None, s:]
-                    cos = (V[s : s + step] @ V[s:].T) / nn
-                keep = (~(cos < floor) | (nn == 0)) & (ids[s : s + step, None] < ids[None, s:])
-                i, j = np.nonzero(keep)
-                i += s
-                j += s
-                out["id_a"].append(ids[i])
-                out["id_b"].append(ids[j])
-                out["_dot"].append(seq_rowdot(V[i], V[j]))
-                out["_na"].append(n[i])
-                out["_nb"].append(n[j])
-        # a group is never empty, so every list holds ≥1 (typed) array
-        return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+        def block(pieces):
+            ids, vecs, n = (np.concatenate(c) for c in zip(*pieces))
+            if len(ids) < 2:
+                return
+            lens = np.fromiter(map(len, vecs), np.int64, len(vecs))
+            for d in np.unique(lens):
+                sel = np.flatnonzero(lens == d)
+                bi, V, bn = ids[sel], np.vstack(vecs[sel]).astype(np.float64), n[sel]
+                step = max(1, 4_000_000 // len(V))  # ~32 MB blocks
+                for s in range(0, len(V), step):
+                    # sorted ids: every partner of rows s.. sits at column ≥ s
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        nn = bn[s : s + step, None] * bn[None, s:]
+                        cos = (V[s : s + step] @ V[s:].T) / nn
+                    keep = (~(cos < floor) | (nn == 0)) & (bi[s : s + step, None] < bi[None, s:])
+                    i, j = np.nonzero(keep)
+                    i += s
+                    j += s
+                    out["id_a"].append(bi[i])
+                    out["id_b"].append(bi[j])
+                    out["_dot"].append(seq_rowdot(V[i], V[j]))
+                    out["_na"].append(bn[i])
+                    out["_nb"].append(bn[j])
+
+        def emit():
+            if out["id_a"]:
+                yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+                for v in out.values():
+                    v.clear()
+
+        held, last = [], None  # the open block's pieces; the previous row's keys
+        for pdf in batches:
+            K = [pdf[k].to_numpy() for k in keys]
+            cols = (pdf["_vid"].to_numpy(), pdf["_v"].to_numpy(), pdf["_n"].to_numpy(np.float64))
+            new = np.zeros(len(pdf), bool)  # row i starts a block
+            new[0] = last is None
+            for k, p in zip(K, last or K):
+                prev = np.concatenate([p[-1:], k[:-1]])
+                new |= (k != prev) & ~(pd.isna(k) & pd.isna(prev))  # Spark groups NaN keys
+            bounds = [0, *(np.flatnonzero(new[1:]) + 1).tolist(), len(pdf)]
+            for s, e in zip(bounds, bounds[1:]):
+                if new[s] and held:
+                    block(held)
+                    held = []
+                held.append(tuple(c[s:e] for c in cols))
+            last = K
+            yield from emit()
+        if held:
+            block(held)
+        yield from emit()
 
     verified = (
-        rows.where(
-            F.col("_vid").isNotNull() & F.col("_cell").isNotNull() & F.col("_v").isNotNull()
-        )
-        .select("_cell", "_vid", "_v", "_n")
-        .groupBy("_cell")
-        .applyInPandas(verify, schema)
+        rows.where(" AND ".join(f"{c} IS NOT NULL" for c in (*keys, "_vid", "_v")))
+        .select(*keys, "_vid", "_v", "_n")
+        .repartition(*keys)
+        .sortWithinPartitions(*keys, "_vid")
+        .mapInPandas(verify, schema)
     )
     return (
         verified.withColumn("sim", F.col("_dot") / (F.col("_na") * F.col("_nb")))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
-        .distinct()  # soft assignment verifies a pair in every cell it shares
-        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
 
 

@@ -184,16 +184,24 @@ def _edge_frame(spark, extra):
 
 
 def test_kmeans_null_and_ragged_non_seeds_left_out(spark):
+    """A NULL, ragged, NULL-element, NaN or infinite non-seed vector is
+    left out of the means and gets no cell."""
     clean = _edge_frame(spark, [])
-    dirty = _edge_frame(spark, [(30, None), (31, [9.0, 9.0]), (32, [9.0, 9.0, 9.0, 9.0])])
+    bad = [None, [9.0, 9.0], [9.0, 9.0, 9.0, 9.0], [9.0, None, 9.0],
+           [float("nan"), 1.0, 1.0], [float("inf"), 1.0, 1.0]]
+    dirty = _edge_frame(spark, list(enumerate(bad, start=30)))
     assert clustering.kmeans_centroids(dirty, k=4, num_iter=2) == (
         clustering.kmeans_centroids(clean, k=4, num_iter=2)
     )
     got = {r["vec_id"]: r["cluster"] for r in kmeans_assignments(dirty, k=4).collect()}
-    assert [got[i] for i in (30, 31, 32)] == [None, None, None]
+    assert [got[i] for i in range(30, 36)] == [None] * 6
 
 
-@pytest.mark.parametrize("bad", [None, [1.0, 2.0]], ids=["null", "ragged"])
+@pytest.mark.parametrize(
+    "bad",
+    [None, [1.0, 2.0], [2.0, None, 2.0], [2.0, float("nan"), 2.0]],
+    ids=["null", "ragged", "null-element", "nan"],
+)
 def test_kmeans_bad_seed_vector_raises(spark, bad):
     rows = [(i, [float(i), 1.0, 2.0]) for i in range(10)]
     rows[2] = (2, bad)

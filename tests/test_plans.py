@@ -180,11 +180,10 @@ def test_x6_no_bnlj_at_sf01(spark):
 
 
 def test_s2_no_corpus_broadcast(spark):
-    """embedding_cosine_dups must shuffle on the salted block key; a
-    broadcast HINT of the build side (the whole corpus) is the OOM
-    anti-pattern.  (AQE may still pick a broadcast join when the corpus
-    genuinely fits — that's runtime-size-based, not forced — so the
-    guard checks the analyzed plan for the hint, not the physical op.)"""
+    """embedding_cosine_dups must shuffle each row once to its block's
+    partition; a broadcast HINT of the corpus is the OOM anti-pattern.
+    (A join AQE picks by runtime size is not forced, so the guard checks
+    the analyzed plan for the hint, not the physical op.)"""
     df = E.queries()["s2_cosine_dups"](spark, SF_TINY)
     logical = df._jdf.queryExecution().analyzed().toString()
     assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical, logical

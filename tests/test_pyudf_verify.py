@@ -89,8 +89,8 @@ def test_pair_sim_bit_identical_to_jvm_fold(spark):
 def test_pair_dot_ragged_nan_null_pairs_are_dropped(spark):
     """pair_dot edge semantics: a ragged pair is NULL (as the JVM
     ``zip_with`` null-pad folds), a NaN element becomes an Arrow NULL
-    (the JVM fold gives NaN instead), a NULL vector is NULL; the verify
-    tail drops all three pairs and keeps the clean one."""
+    (the JVM fold gives NaN instead), a NULL vector is NULL; the blocked
+    verify drops all three pairs and keeps the clean one."""
     rows = [
         (0, [1.0, 2.0, 3.0]),
         (1, [1.0, 2.0, 3.5]),
@@ -116,7 +116,8 @@ def test_pair_dot_ragged_nan_null_pairs_are_dropped(spark):
     assert dots[2][0] is None and np.isnan(dots[2][1])
     assert dots[3] == (None, None)
     assert dots[4] == (None, None)
-    kept = similarity._verify_candidate_pairs(base, pairs, 0.5).collect()
+    block = base.withColumn("_blk", F.lit(0))  # all five rows in one block
+    kept = similarity._verify_within_blocks(block, ["_blk"], 0.5).collect()
     assert [(r.id_a, r.id_b) for r in kept] == [(0, 1)]
 
 

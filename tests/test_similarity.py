@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from projet_graphdb_spark.functions import similarity
 
-from conftest import SF_TINY
+from conftest import SF_SMALL, SF_TINY
 
 
 @pytest.fixture(scope="module")
@@ -604,12 +604,16 @@ def test_ivf_cosine_dups_pair_exactly_at_threshold(spark):
 
 
 def test_ivf_cosine_dups_drops_null_and_nan_vectors(spark):
-    """A NULL vector is never assigned; a vector with a NaN element is,
-    but its NaN dot never passes the verify."""
+    """A NULL vector, a NaN element and a NULL element get no cell, so
+    none of them is verified; the clean pair is emitted."""
+    from projet_graphdb_spark.functions import clustering
+
     df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, None), (3, [1.0, float("nan")])],
+        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, None), (3, [1.0, float("nan")]), (4, [1.0, None])],
         "vec_id long, embedding array<float>",
     )
+    cells = clustering.assign_topn(df, {0: [1.0, 0.0]}, vec_col="embedding").collect()
+    assert {r["vec_id"] for r in cells if r["_cells"] is None} == {2, 3, 4}
     got = _ivf_rows(df, threshold=0.4, centroids={0: [1.0, 0.0]}, nprobe=1)
     assert [r[:2] for r in got] == [(0, 1)]
 
@@ -648,13 +652,13 @@ def test_ivf_cosine_dups_one_cell_spans_row_blocks(spark):
 
 
 def test_ivf_cosine_dups_plan_is_cell_local(spark, emb, monkeypatch):
-    """The own-route IVF plan verifies inside cells: one grouped-map
-    pandas pass, no join keyed on ``_cell``, and no lineage barrier
-    (k-means trains from one driver-side collect)."""
+    """The own-route IVF plan verifies inside cells: one blocked
+    ``mapInPandas`` pass and no grouped map, no join keyed on ``_cell``,
+    and no lineage barrier (k-means trains from one driver-side collect)."""
     calls = _spy_materialize(monkeypatch)
     out = similarity.ivf_cosine_dups(emb, threshold=0.4, n_centroids=8, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    assert plan.count("MapInPandas") == 1 and "FlatMapGroupsInPandas" not in plan
     assert not [l for l in plan.splitlines() if "Join" in l and "_cell" in l]
     assert len(calls) == 0
 
@@ -706,6 +710,202 @@ def test_codebook_training_is_one_job(spark, emb, monkeypatch, max_train_rows):
     (c1, c2), jobs = _jobs_in(spark, lambda: similarity.imi_train(
         corp, n, k1=4, k2=4, num_iter=2, dim=64, max_train_rows=max_train_rows))
     assert (len(c1), len(c2), jobs) == (4, 4, 1)
+    assert calls == []
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _verified_pairs(pairs, threshold):
+    """The deleted pair-join verify tail: ``pair_dot`` over (id_a, _va,
+    _na, id_b, _vb, _nb) candidate rows, filtered at the unrounded
+    threshold."""
+    sim = similarity._pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
+    return _sorted_rows(
+        pairs.withColumn("sim", sim)
+        .filter(F.col("sim") >= threshold)
+        .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
+    )
+
+
+def _side(tag):
+    return [F.col("_vid").alias(f"id_{tag}"), F.col("_v").alias(f"_v{tag}"), F.col("_n").alias(f"_n{tag}")]
+
+
+def _base(emb, *extra):
+    return emb.select(
+        *extra,
+        F.col("vec_id").alias("_vid"),
+        F.col("embedding").alias("_v"),
+        similarity.l2norm(F.col("embedding")).alias("_n"),
+    )
+
+
+def _band_join_dups(emb, bands, threshold):
+    """Reference: LSH as it was verified before the blocked kernel — a
+    band self-join, ``distinct`` candidate pairs, two id-keyed vector
+    joins and ``pair_dot``."""
+    base = _base(emb)
+    cand = base.select(
+        "_vid", F.posexplode(similarity.srp_signature_array(F.col("_v"), bands)).alias("_band", "_sig")
+    )
+    a = cand.select("_band", "_sig", F.col("_vid").alias("id_a"))
+    b = cand.select("_band", "_sig", F.col("_vid").alias("id_b"))
+    pairs = a.join(b, ["_band", "_sig"]).where("id_a < id_b").select("id_a", "id_b").distinct()
+    pairs = pairs.join(base.select(*_side("a")), "id_a").join(base.select(*_side("b")), "id_b")
+    return _verified_pairs(pairs, threshold)
+
+
+def _salted_join_dups(emb, threshold, salts=4):
+    """Reference: label-blocked exact as it was verified before the
+    blocked kernel — a self-join on (block, salt) and ``pair_dot``."""
+    base = _base(emb, F.col("label").alias("_blk"))
+    a = base.select("_blk", F.pmod(F.xxhash64("_vid"), F.lit(salts)).alias("_salt"), *_side("a"))
+    b = base.select(
+        "_blk",
+        F.explode(F.sequence(F.lit(0), F.lit(salts - 1)).cast("array<long>")).alias("_salt"),
+        *_side("b"),
+    )
+    return _verified_pairs(a.join(b, ["_blk", "_salt"]).where("id_a < id_b"), threshold)
+
+
+_S9_BANDS = similarity.srp_bands(8, 6, 64, 43)
+
+
+@pytest.mark.parametrize("sf", [SF_TINY, SF_SMALL], ids=["sf0.001", "sf0.01"])
+def test_blocked_verify_equals_pair_joins(spark, sf):
+    """LSH buckets and label blocks verified in one sorted stream emit
+    the rows of the pair joins they replaced, bit for bit."""
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    for t in (0.2, 0.4, 0.9):
+        lsh = _sorted_rows(similarity.lsh_cosine_dups(emb, bands=_S9_BANDS, threshold=t))
+        assert lsh == _band_join_dups(emb, _S9_BANDS, t), t
+        exact = _sorted_rows(similarity.embedding_cosine_dups(emb, threshold=t))
+        assert exact == _salted_join_dups(emb, t), t
+        assert t == 0.9 or (lsh and exact)
+
+
+def _dup_frame(emb, op, threshold=0.4):
+    if op == "lsh":
+        return similarity.lsh_cosine_dups(emb, bands=_S9_BANDS, threshold=threshold)
+    if op == "exact":
+        return similarity.embedding_cosine_dups(emb, threshold=threshold)
+    return similarity.ivf_cosine_dups(emb, threshold=threshold, n_centroids=8, nprobe=2)
+
+
+@pytest.mark.parametrize(
+    "conf",
+    [
+        {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"},
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "3"},
+    ],
+    ids=["3-row-batches", "aqe-off-3-partitions"],
+)
+def test_blocked_verify_carry_matches_default(spark, emb, conf):
+    """Blocks that straddle Arrow batches are carried whole to the next
+    batch, and no carry crosses a partition: both runs equal the
+    default-configured one."""
+    ops = ("lsh", "exact", "ivf")
+    want = {op: _sorted_rows(_dup_frame(emb, op, 0.2)) for op in ops}
+    old = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        got = {op: _sorted_rows(_dup_frame(emb, op, 0.2)) for op in ops}
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == want and all(want.values())
+
+
+_NAN = float("nan")
+
+
+def test_blocked_exact_edge_rows_equal_salted_join(spark):
+    """A NULL block key, a NULL vector, a ragged vector inside a block
+    and a NaN element are dropped as the salted join dropped them; a
+    repeated id keeps the salted join's multiplicity."""
+    df = spark.createDataFrame(
+        [
+            (0, 1, [1.0, 0.0, 0.0]),
+            (1, 1, [1.0, 0.1, 0.0]),
+            (2, None, [1.0, 0.0, 0.0]),  # NULL block key
+            (3, 1, None),
+            (4, 1, [1.0, 0.0]),  # ragged: never compared inside block 1
+            (5, 1, [1.0, _NAN, 0.0]),
+            (6, 2, [1.0, 0.0]),
+            (7, 2, [1.0, 0.05]),
+            (8, 3, [0.0, 1.0]),
+            (8, 3, [0.1, 1.0]),  # one id twice in a block
+            (9, 3, [0.05, 1.0]),
+        ],
+        "vec_id long, label int, embedding array<float>",
+    )
+    got = _sorted_rows(similarity.embedding_cosine_dups(df, threshold=0.5))
+    assert got == _salted_join_dups(df, 0.5)
+    assert [r[:2] for r in got] == [(0, 1), (6, 7), (8, 9), (8, 9)]
+
+
+def test_blocked_lsh_edge_rows_equal_band_join(spark):
+    """One all-zero plane puts every finite vector in one bucket: a NULL
+    or ragged vector is never indexed, and NaN vectors share a bucket
+    whose pair is dropped, exactly as the band join verified them."""
+    bands = [[[0.0, 0.0, 0.0]]]
+    df = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [1.0, 0.1, 0.0]),
+            (2, None),
+            (3, [1.0, 0.0]),
+            (4, [1.0, _NAN, 0.0]),
+            (5, [_NAN, 1.0, 0.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    got = _sorted_rows(similarity.lsh_cosine_dups(df, bands=bands, threshold=0.5))
+    assert got == _band_join_dups(df, bands, 0.5)
+    assert [r[:2] for r in got] == [(0, 1)]
+
+
+@pytest.mark.parametrize("op", ["lsh", "exact"])
+def test_blocked_verify_zero_norm_divides_like_pair_join(spark, op):
+    """A zero vector sharing a block divides by a zero norm product on
+    the JVM: ANSI mode raises, as the pair joins always did."""
+    df = spark.createDataFrame(
+        [(0, 1, [0.0, 0.0]), (1, 1, [1.0, 0.0])], "vec_id long, label int, embedding array<float>"
+    )
+    bands = [[[0.0, 0.0]]]  # both vectors in one bucket
+    runs = {
+        "lsh": (lambda: similarity.lsh_cosine_dups(df, bands=bands).collect(),
+                lambda: _band_join_dups(df, bands, 0.9)),
+        "exact": (lambda: similarity.embedding_cosine_dups(df).collect(),
+                  lambda: _salted_join_dups(df, 0.9)),
+    }
+    for run in runs[op]:
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            run()
+
+
+@pytest.mark.parametrize("op", ["lsh", "exact", "ivf"])
+def test_dup_operators_plan_is_one_blocked_pass(spark, emb, op):
+    """Each batch dup operator verifies in one ``mapInPandas`` pass: no
+    pair-keyed join, cartesian product or grouped map, and the Python
+    signature or cell UDF runs once per row."""
+    plan = _dup_frame(emb, op)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    for node in ("Join", "CartesianProduct", "FlatMapGroupsInPandas"):
+        assert node not in plan, plan
+    assert plan.count("ArrowEvalPython") == (0 if op == "exact" else 1), plan
+
+
+def test_lsh_cosine_dups_explicit_bands_jobs(spark, emb, monkeypatch):
+    """With explicit bands LSH takes no lineage barrier and submits at
+    most 3 jobs: the bucket exchange, the ``distinct`` exchange and the
+    result."""
+    calls = _spy_materialize(monkeypatch)
+    rows, jobs = _jobs_in(spark, lambda: _dup_frame(emb, "lsh").collect())
+    assert rows and jobs <= 3, jobs
     assert calls == []
 
 
