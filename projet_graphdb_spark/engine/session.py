@@ -47,5 +47,13 @@ def get_spark(
         # CollationAwareUTF8String static init on first executor use;
         # JVM case mapping is correct for the engine's ASCII-ish data
         .config("spark.sql.icu.caseMappings.enabled", "false")
+        # each Python task's setup_spark_files calls
+        # importlib.invalidate_caches(), which on Python 3.11 re-reads the
+        # directory of every zip on the worker's path (pyspark.zip, py4j,
+        # the spark-core jar: ~27k entries, 0.12-0.21 s per task); the
+        # engine's daemon re-reads an archive only when it changed on disk.
+        # The daemon module, not the worker module: Spark ignores
+        # spark.python.worker.module while spark.python.use.daemon is on
+        .config("spark.python.daemon.module", "projet_graphdb_spark.pyworker")
     )
     return builder.getOrCreate()

@@ -25,6 +25,22 @@ def np_l2norm(v: pd.Series) -> pd.Series:
     return v.map(lambda a: float(np.sqrt(np.dot(a, a))))
 
 
+def evaluated_once(col):
+    """``col`` (an expression over a Python UDF) as the one output row of
+    an ``explode``, for a ``select`` that keeps it as a column.
+
+    A filter over a projected UDF column (the caller's, or the
+    ``isnotnull`` Catalyst infers for a join key) is pushed below the
+    projection with the UDF substituted in, so the UDF runs once for
+    the filter and again for the projection: two Python runners per
+    task.  No filter over a generator's output is pushed below the
+    generator, and Catalyst infers none from a generator whose input is
+    not a plain column.  NULL stays a row."""
+    from pyspark.sql import functions as F
+
+    return F.explode(F.array(col))
+
+
 def seq_rowdot(A, B):
     """Row-wise dot products with the JVM HOF fold's EXACT IEEE
     semantics: elementwise f64 products (identical to

@@ -336,8 +336,11 @@ def knn_lsh(
     At scale: corpus bucketed once (map-only signature + shuffle on
     bucket), each query joins its bucket only — probe cost ∝ bucket size.
     """
-    sig = srp_signature_array(F.col(vec_col), [planes])[0]
-    base = embeddings.select(F.col(id_col), F.col(vec_col), sig.alias("_bucket"))
+    # one band: exploding its one-signature array straight off the UDF
+    # keeps the join's inferred NOT NULL filter above the UDF (a NULL
+    # vector's NULL array emits no row, as the inner join would drop it)
+    sig = srp_signature_array(F.col(vec_col), [planes])
+    base = embeddings.select(F.col(id_col), F.col(vec_col), F.explode(sig).alias("_bucket"))
     q = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"), "_bucket"
     )
@@ -391,6 +394,7 @@ def knn_ivf(
     import numpy as np
 
     from . import clustering
+    from .pyudf import evaluated_once
 
     # the codebook is metadata: collect the handful of centroid vectors
     # to the driver and normalize them there; the kernel's closure
@@ -405,22 +409,20 @@ def knn_ivf(
             )
         units[r[0]] = c / norm
     vec = F.col(vec_col)
-    base = clustering.assign_topn(
-        embeddings.select(F.col(id_col), vec, l2norm(vec).alias("_n")),
-        units, nprobe=nprobe, vec_col=vec_col,
-    )
+    cells = clustering.topn_cells(vec, units, nprobe)
+    base = embeddings.select(F.col(id_col), vec, l2norm(vec).alias("_n"))
     assigned = base.select(
         F.col(id_col).alias("neighbour_id"),
         F.col(vec_col).alias("_cvv"),
         F.col("_n").alias("_cnn"),
-        F.col("_cells")[0].alias("_cell"),
+        evaluated_once(cells[0]).alias("_cell"),
     )
     # probe side: each query row explodes its nprobe nearest cells
     probes = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.explode("_cells").alias("_cell"),
+        F.explode(cells).alias("_cell"),
     )
     cand = (
         assigned.join(F.broadcast(probes), on="_cell")
@@ -521,18 +523,15 @@ def embedding_cosine_dups(
     large block whole.  The scale path for large blocks is
     :func:`lsh_cosine_dups` (s9), which bands the corpus sub-quadratically.
     """
-    base = materialize(embeddings.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_v"),
-        l2norm(F.col(vec_col)).alias("_n"),
-    ))
     if not exact_ok:
-        # one tiny agg over the already-materialized checkpoint blocks —
-        # negligible next to the quadratic join it refuses to run
-        biggest = (
-            base.groupBy("_blk").count().agg(F.max("count")).first()[0] or 0
+        # the guard scans the block column alone: one exchange and a
+        # top-1 collect (two jobs), and the verify below stays the base
+        # frame's only consumer, so it needs no lineage barrier
+        top = (
+            embeddings.groupBy(F.col(block_col).alias("_blk")).count()
+            .orderBy(F.desc("count")).limit(1).collect()
         )
+        biggest = top[0]["count"] if top else 0
         if biggest > max_block_rows:
             raise ValueError(
                 f"embedding_cosine_dups: largest {block_col!r} block has "
@@ -542,6 +541,12 @@ def embedding_cosine_dups(
                 f"pass exact_ok=True if the exact quadratic baseline is "
                 f"intended."
             )
+    base = embeddings.select(
+        F.col(block_col).alias("_blk"),
+        F.col(id_col).alias("_vid"),
+        F.col(vec_col).alias("_v"),
+        l2norm(F.col(vec_col)).alias("_n"),
+    )
     pairs = _verify_within_blocks(base, ["_blk"], threshold)
     return pairs.select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
@@ -1159,16 +1164,12 @@ def ivf_cells_frame(
     ``join_cost_flops`` (round-13 verdict item 4): optionally persist
     the session-measured per-join setup constant as an embedded
     ``_join_cost_flops`` column — see :func:`srp_band_index`."""
-    from . import clustering
-
     out = (
-        clustering.assign_topn(
+        _ivf_cell_rows(
             vectors.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v")),
             centroids,
-            nprobe=nprobe,
-            vec_col="_v",
+            nprobe,
         )
-        .select("_vid", F.explode("_cells").alias("_cell"))
         .withColumn("_nprobe", F.lit(nprobe))
         .withColumn("_cbhash", F.lit(_codebook_digest(centroids)))
     )
@@ -1264,15 +1265,11 @@ def validate_ivf_artifacts(
     distinct + re-assigned id sample) — what incremental_ivf_dups runs
     per call, hoisted so a streaming drain over immutable artifacts
     pays it once before start() (r16)."""
-    from . import clustering
-
     corp = corpus.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     _validate_cells_config(corpus_cells, centroids, nprobe, fn_name)
     _stale_sample_guard(
         corp, corpus_cells.select("_vid", "_cell"),
-        lambda s: clustering.assign_topn(
-            s, centroids, nprobe=nprobe, vec_col="_v"
-        ).select("_vid", F.explode("_cells").alias("_cell")),
+        lambda s: _ivf_cell_rows(s, centroids, nprobe),
         fn_name,
     )
 
@@ -1296,8 +1293,7 @@ def validate_imi_artifacts(
     _validate_imi_cells_config(corpus_cells, cents1, cents2, p1, p2, fn_name)
     _stale_sample_guard(
         corp, corpus_cells.select("_vid", "_cell"),
-        lambda s: _imi_assign(s, cents1, cents2, p1, p2, len(cents2), dim)
-        .select("_vid", F.explode("_cells").alias("_cell")),
+        lambda s: _imi_cell_rows(s, cents1, cents2, p1, p2, len(cents2), dim),
         fn_name,
     )
 
@@ -1478,8 +1474,6 @@ def incremental_ivf_dups(
     Output: (new_id, corpus_id, sim) with cosine sim ≥ threshold,
     rounded to 6 dp like every similarity surface here.
     """
-    from . import clustering
-
     _require_dense_int_ids(corpus, id_col, "incremental_ivf_dups")
     corp = corpus.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     if centroids is None:
@@ -1495,10 +1489,7 @@ def incremental_ivf_dups(
             max_train_rows=max_train_rows,
         )
     if corpus_cells is None:
-        corpus_cells = (
-            clustering.assign_topn(corp, centroids, nprobe=nprobe, vec_col="_v")
-            .select("_vid", F.explode("_cells").alias("_cell"))
-        )
+        corpus_cells = _ivf_cell_rows(corp, centroids, nprobe)
     else:
         # staleness guards, layered: (1) the sink's embedded
         # (_nprobe, _cbhash) config must match this call's codebook and
@@ -1519,18 +1510,24 @@ def incremental_ivf_dups(
             corpus_cells = corpus_cells.select("_vid", "_cell")
             _stale_sample_guard(
                 corp, corpus_cells,
-                lambda s: clustering.assign_topn(
-                    s, centroids, nprobe=nprobe, vec_col="_v"
-                ).select("_vid", F.explode("_cells").alias("_cell")),
+                lambda s: _ivf_cell_rows(s, centroids, nprobe),
                 "incremental_ivf_dups",
             )
         else:
             corpus_cells = corpus_cells.select("_vid", "_cell")
     shard = new_batch.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    shard_cells = clustering.assign_topn(
-        shard, centroids, nprobe=nprobe, vec_col="_v"
-    ).select("_vid", F.explode("_cells").alias("_cell"))
+    shard_cells = _ivf_cell_rows(shard, centroids, nprobe)
     return _incremental_cells_pairs(corp, shard, corpus_cells, shard_cells, threshold)
+
+
+def _ivf_cell_rows(emb: DataFrame, centroids: dict, nprobe: int) -> DataFrame:
+    """(_vid, _cell): every ``_v`` of ``emb`` exploded into its ``nprobe``
+    nearest cells, straight off the UDF (see ``clustering.topn_cells``)."""
+    from . import clustering
+
+    return emb.select(
+        "_vid", F.explode(clustering.topn_cells(F.col("_v"), centroids, nprobe)).alias("_cell")
+    )
 
 
 def _incremental_cells_pairs(
@@ -1547,6 +1544,8 @@ def _incremental_cells_pairs(
     the candidates).  ``corp``/``shard`` carry (_vid, _v);
     ``corpus_cells``/``shard_cells`` carry (_vid, _cell).
     Output: (new_id, corpus_id, sim rounded to 6 dp) at ≥ threshold."""
+    from .pyudf import evaluated_once
+
     cand = (
         shard_cells.select(F.col("_cell"), F.col("_vid").alias("new_id"))
         .join(
@@ -1571,10 +1570,11 @@ def _incremental_cells_pairs(
         F.col("_v").alias("_vb"),
         l2norm(F.col("_v")).alias("_nb"),
     )
+    sim = _pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
     return (
         cand.join(va, "new_id")
         .join(vb, "corpus_id")
-        .withColumn("sim", _pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")))
+        .select("new_id", "corpus_id", evaluated_once(sim).alias("sim"))
         .filter(F.col("sim") >= threshold)
         .select("new_id", "corpus_id", F.round("sim", 6).alias("sim"))
     )
@@ -1611,31 +1611,56 @@ def imi_train(
     )
 
 
+def _imi_halves(
+    emb: DataFrame, cents1: dict, cents2: dict, p1: int, p2: int, dim: int,
+) -> DataFrame:
+    """(_vid, _v, _c1s, _c2s): both half-assignments
+    (``clustering.topn_cells``) as array columns of ONE map-only
+    projection — no per-half explode + re-join shuffle.  Spark allows no
+    Python UDF inside a lambda, so :func:`_imi_virtual` combines them in
+    a second projection."""
+    from . import clustering
+
+    half = dim // 2
+    v = F.col("_v")
+    return emb.select(
+        "_vid",
+        v,
+        clustering.topn_cells(F.slice(v, 1, half), cents1, p1).alias("_c1s"),
+        clustering.topn_cells(F.slice(v, half + 1, dim - half), cents2, p2).alias("_c2s"),
+    )
+
+
+def _imi_virtual(k2: int) -> Column:
+    """The p1·p2 virtual cells (c1·k2 + c2) of :func:`_imi_halves`' row,
+    NULL when either half is unassigned."""
+    return F.flatten(
+        F.transform("_c1s", lambda c1: F.transform("_c2s", lambda c2: c1 * k2 + c2))
+    )
+
+
 def _imi_assign(
     emb: DataFrame, cents1: dict, cents2: dict, p1: int, p2: int,
     k2: int, dim: int,
 ) -> DataFrame:
-    """Map-only IMI soft assignment: both half-assignments as array
-    columns on ONE frame, virtual cells (c1·k2 + c2) from a nested
-    transform — no per-half explode + re-join shuffle.  ``_v`` is kept
-    so ivf_calibrate_recall can sample this frame directly.
-    Output: (_vid, _v, _cells) with p1·p2 virtual cells per vector."""
-    from . import clustering
+    """Map-only IMI soft assignment: (_vid, _v, _cells) with p1·p2
+    virtual cells per vector.  ``_v`` is kept so ivf_calibrate_recall
+    can sample this frame directly."""
+    return _imi_halves(emb, cents1, cents2, p1, p2, dim).select(
+        "_vid", "_v", _imi_virtual(k2).alias("_cells")
+    )
 
-    half = dim // 2
-    lo = F.slice(F.col("_v"), 1, half)
-    hi = F.slice(F.col("_v"), half + 1, dim - half)
-    both = emb.select("_vid", F.col("_v"), lo.alias("_v1"), hi.alias("_v2"))
-    both = clustering.assign_topn(both, cents1, nprobe=p1, vec_col="_v1", out_col="_c1s")
-    both = clustering.assign_topn(both, cents2, nprobe=p2, vec_col="_v2", out_col="_c2s")
-    return both.select(
-        "_vid",
-        "_v",
-        F.flatten(
-            F.transform(
-                "_c1s", lambda c1: F.transform("_c2s", lambda c2: c1 * k2 + c2)
-            )
-        ).alias("_cells"),
+
+def _imi_cell_rows(
+    emb: DataFrame, cents1: dict, cents2: dict, p1: int, p2: int,
+    k2: int, dim: int,
+) -> DataFrame:
+    """(_vid, _cell): every ``_v`` of ``emb`` exploded into its virtual
+    cells.  The explode takes the virtual-cell expression, not a
+    projected ``_cells`` column, so Catalyst infers no filter that would
+    run the half UDFs a second time (see ``clustering.topn_cells``)."""
+    return _imi_halves(emb, cents1, cents2, p1, p2, dim).select(
+        "_vid", F.explode(_imi_virtual(k2)).alias("_cell")
     )
 
 
@@ -1693,8 +1718,6 @@ def imi_cosine_dups(
     ID CONTRACT: dense non-negative integer ids (0..N-1), like every
     IVF-family entrypoint — see :func:`ivf_cosine_dups`.
     """
-    from . import clustering
-
     _require_dense_int_ids(embeddings, id_col, "imi_cosine_dups")
     emb = embeddings.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     if dim is None:
@@ -1707,13 +1730,12 @@ def imi_cosine_dups(
             max_train_rows=max_train_rows,
         )
     cents1, cents2 = centroids
-    assigned = _imi_assign(emb, cents1, cents2, p1, p2, len(cents2), dim)
     if cells_only:
-        return assigned
+        return _imi_assign(emb, cents1, cents2, p1, p2, len(cents2), dim)
     return ivf_cosine_dups(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
         n_rows=n_rows,
-        assigned_cells=assigned.select("_vid", F.explode("_cells").alias("_cell")),
+        assigned_cells=_imi_cell_rows(emb, cents1, cents2, p1, p2, len(cents2), dim),
     )
 
 
@@ -1757,8 +1779,7 @@ def imi_cells_frame(
         dim = emb.select(F.size("_v")).first()[0]
     k2 = len(cents2)
     out = (
-        _imi_assign(emb, cents1, cents2, p1, p2, k2, dim)
-        .select("_vid", F.explode("_cells").alias("_cell"))
+        _imi_cell_rows(emb, cents1, cents2, p1, p2, k2, dim)
         .withColumn("_p1", F.lit(p1))
         .withColumn("_p2", F.lit(p2))
         .withColumn("_cbhash", F.lit(_imi_digest(cents1, cents2)))
@@ -2239,9 +2260,7 @@ def incremental_imi_dups(
     cents1, cents2 = centroids
     k2_real = len(cents2)
     if corpus_cells is None:
-        corpus_cells = _imi_assign(
-            corp, cents1, cents2, p1, p2, k2_real, dim
-        ).select("_vid", F.explode("_cells").alias("_cell"))
+        corpus_cells = _imi_cell_rows(corp, cents1, cents2, p1, p2, k2_real, dim)
     elif validate_artifacts:
         _validate_imi_cells_config(
             corpus_cells, cents1, cents2, p1, p2, "incremental_imi_dups"
@@ -2249,17 +2268,14 @@ def incremental_imi_dups(
         corpus_cells = corpus_cells.select("_vid", "_cell")
         _stale_sample_guard(
             corp, corpus_cells,
-            lambda s: _imi_assign(s, cents1, cents2, p1, p2, k2_real, dim)
-            .select("_vid", F.explode("_cells").alias("_cell")),
+            lambda s: _imi_cell_rows(s, cents1, cents2, p1, p2, k2_real, dim),
             "incremental_imi_dups",
         )
     else:
         # validated once by the caller (validate_imi_artifacts) — r16
         corpus_cells = corpus_cells.select("_vid", "_cell")
     shard = new_batch.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    shard_cells = _imi_assign(
-        shard, cents1, cents2, p1, p2, k2_real, dim
-    ).select("_vid", F.explode("_cells").alias("_cell"))
+    shard_cells = _imi_cell_rows(shard, cents1, cents2, p1, p2, k2_real, dim)
     return _incremental_cells_pairs(corp, shard, corpus_cells, shard_cells, threshold)
 
 
@@ -3376,9 +3392,7 @@ def incremental_cosine_dups_auto(
         corpus_cells = ivf_cells.select("_vid", "_cell")
         _stale_sample_guard(
             corp, corpus_cells,
-            lambda s: clustering.assign_topn(
-                s, ivf_centroids, nprobe=ivf_cfg["nprobe"], vec_col="_v"
-            ).select("_vid", F.explode("_cells").alias("_cell")),
+            lambda s: _ivf_cell_rows(s, ivf_centroids, ivf_cfg["nprobe"]),
             "incremental_cosine_dups_auto",
         )
         cap = min(max_probe, ivf_cfg["k"])
@@ -3436,10 +3450,10 @@ def incremental_cosine_dups_auto(
     k2_real = imi_cfg["k2"]
     _stale_sample_guard(
         corp, corpus_cells,
-        lambda s: _imi_assign(
+        lambda s: _imi_cell_rows(
             s, imi_centroids[0], imi_centroids[1],
             imi_cfg["p1"], imi_cfg["p2"], k2_real, dim,
-        ).select("_vid", F.explode("_cells").alias("_cell")),
+        ),
         "incremental_cosine_dups_auto",
     )
     # assignment grid is cap1 × cap2 half-ranks, rank1-major: position
@@ -4295,7 +4309,7 @@ def knn_ivf_trained(
 
     Scale design: training collects the frame to the driver in one
     Spark job and runs the Lloyd iterations there; the codebook is
-    driver metadata handed to ``clustering.assign_topn`` (``nprobe=1``
+    driver metadata handed to ``clustering.topn_cells`` (``nprobe=1``
     for the corpus cell, ``nprobe`` for the query probes), so corpus
     cell assignment is a PURE map-side pass (no join/shuffle), the cell
     id becomes the bucket key, and a probe scans
@@ -4313,19 +4327,20 @@ def knn_ivf_trained(
     )
     vec = F.col(vec_col)
     base = embeddings.select(F.col(id_col), vec, l2norm(vec).alias("_n"))
-    assigned = clustering.assign_topn(base, cents, nprobe=1, vec_col=vec_col).select(
+    # a vector's one nearest cell, exploded off the UDF (see
+    # clustering.topn_cells); a NULL assignment emits no row, which the
+    # inner join below would drop anyway
+    assigned = base.select(
         F.col(id_col).alias("neighbour_id"),
         F.col(vec_col).alias("_cv"),
         F.col("_n").alias("_cn"),
-        F.col("_cells")[0].alias("_cell"),
+        F.explode(clustering.topn_cells(vec, cents, 1)).alias("_cell"),
     )
-    q = clustering.assign_topn(
-        base.filter(F.col(id_col).isin(query_ids)), cents, nprobe=nprobe, vec_col=vec_col
-    ).select(
+    q = base.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         F.col("_n").alias("_qn"),
-        F.explode("_cells").alias("_cell"),
+        F.explode(clustering.topn_cells(vec, cents, nprobe)).alias("_cell"),
     )
     scored = (
         q.join(assigned, on="_cell")
@@ -4356,20 +4371,18 @@ def _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp) -> 
     ]
 
 
-def _pq_encode(frame: DataFrame, books: list, sub: int, vec_col: str) -> DataFrame:
-    """Adds ``_codes``: per subspace j, the nearest codeword of
-    ``books[j]`` to the j-th ``sub``-wide slice of ``vec_col``
-    (``clustering.assign_topn`` with ``nprobe=1`` — map-only)."""
+def _pq_codes(vec: Column, books: list, sub: int) -> Column:
+    """The PQ code array: per subspace j, the nearest codeword of
+    ``books[j]`` to the j-th ``sub``-wide slice of ``vec``
+    (``clustering.topn_cells`` with ``nprobe=1`` — map-only).
+    Posexplode it in the ``select`` that makes it (see
+    ``clustering.topn_cells``)."""
     from . import clustering
 
-    for j, book in enumerate(books):
-        frame = clustering.assign_topn(
-            frame.withColumn(f"_s{j}", F.slice(F.col(vec_col), j * sub + 1, sub)),
-            book, vec_col=f"_s{j}", out_col=f"_c{j}",
-        )
-    return frame.withColumn(
-        "_codes", F.array(*[F.col(f"_c{j}")[0] for j in range(len(books))])
-    )
+    return F.array(*[
+        clustering.topn_cells(F.slice(vec, j * sub + 1, sub), book, 1)[0]
+        for j, book in enumerate(books)
+    ])
 
 
 def _pq_lut(q: DataFrame, books: list, sub: int, id_col: str, vec_col: str, round_dp: int) -> DataFrame:
@@ -4438,10 +4451,10 @@ def knn_pq_adc(
 
     sub = dim // m
     books = _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp)
-    codes = _pq_encode(
-        embeddings.select(F.col(id_col).alias("neighbour_id"), F.col(vec_col)),
-        books, sub, vec_col,
-    ).select("neighbour_id", F.posexplode("_codes").alias("_j", "_code"))
+    codes = embeddings.select(
+        F.col(id_col).alias("neighbour_id"),
+        F.posexplode(_pq_codes(F.col(vec_col), books, sub)).alias("_j", "_code"),
+    )
     lut = _pq_lut(
         embeddings.filter(F.col(id_col).isin([int(q) for q in query_ids])),
         books, sub, id_col, vec_col, round_dp,
@@ -4500,6 +4513,7 @@ def knn_ivfpq(
     from pyspark.sql.window import Window as W
 
     from . import clustering
+    from .pyudf import evaluated_once
 
     cells = {
         int(r[0]): [round(float(x), round_dp) for x in r[1]]
@@ -4511,21 +4525,21 @@ def knn_ivfpq(
     books = _pq_books(embeddings, m, sub, ksub, num_iter, id_col, vec_col, round_dp)
 
     # ONE map-only pass: (id, cell, m codes) — the persisted index rows
-    enc = _pq_encode(
-        clustering.assign_topn(
-            embeddings.select(F.col(id_col).alias("neighbour_id"), F.col(vec_col)),
-            cells, vec_col=vec_col,
-        ),
-        books, sub, vec_col,
+    vec = F.col(vec_col)
+    enc = embeddings.select(
+        F.col(id_col).alias("neighbour_id"),
+        vec,
+        evaluated_once(clustering.topn_cells(vec, cells, 1)[0]).alias("_cell"),
     ).select(
         "neighbour_id",
-        F.col("_cells")[0].alias("_cell"),
-        F.posexplode("_codes").alias("_j", "_code"),
+        "_cell",
+        F.posexplode(_pq_codes(vec, books, sub)).alias("_j", "_code"),
     )
     qids = [int(q) for q in query_ids]
     q = embeddings.filter(F.col(id_col).isin(qids))
-    probes = clustering.assign_topn(q, cells, nprobe=nprobe, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"), F.explode("_cells").alias("_cell")
+    probes = q.select(
+        F.col(id_col).alias("query_id"),
+        F.explode(clustering.topn_cells(vec, cells, nprobe)).alias("_cell"),
     )
     lut = _pq_lut(q, books, sub, id_col, vec_col, round_dp)
     scored = (

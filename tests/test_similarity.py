@@ -434,21 +434,24 @@ def test_knn_ivf_scaled_duplicate_centroid_loses_to_smaller_cid(spark, monkeypat
     from projet_graphdb_spark.functions import clustering
 
     seen = {}
-    real = clustering.assign_topn
+    real = clustering.topn_cells
 
-    def spy(emb, cents, *a, **kw):
+    def spy(vec, cents, *a, **kw):
         seen["cents"] = cents
-        seen["out"] = real(emb, cents, *a, **kw)
-        return seen["out"]
+        seen["cells"] = real(vec, cents, *a, **kw)
+        return seen["cells"]
 
-    monkeypatch.setattr(clustering, "assign_topn", spy)
+    monkeypatch.setattr(clustering, "topn_cells", spy)
     c0 = np.array([0.5, 0.25, 0.125, 0.75])
     codebook = [c0, 2 * c0, [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
     corpus = [c0 + 0.0625 * np.eye(4)[i % 4] for i in range(8)] + [[0.0, 0.0, 1.0, 0.25]]
     df = _ivf_frame(spark, codebook, corpus)
     out = similarity.knn_ivf(df, query_ids=[4], n_centroids=4, nprobe=2, k=20)
     assert seen["cents"][1].tobytes() == seen["cents"][0].tobytes()
-    cells = {r["vec_id"]: list(r["_cells"]) for r in seen["out"].collect()}
+    cells = {
+        r["vec_id"]: list(r["_cells"])
+        for r in df.select("vec_id", seen["cells"].alias("_cells")).collect()
+    }
     for i in [0, 1, *range(4, 12)]:
         assert cells[i] == [0, 1], (i, cells[i])
     assert {r["neighbour_id"] for r in out.collect()} == {0, 1, *range(5, 12)}
@@ -907,6 +910,88 @@ def test_lsh_cosine_dups_explicit_bands_jobs(spark, emb, monkeypatch):
     rows, jobs = _jobs_in(spark, lambda: _dup_frame(emb, "lsh").collect())
     assert rows and jobs <= 3, jobs
     assert calls == []
+
+
+def test_embedding_cosine_dups_takes_no_barrier(spark, emb, monkeypatch):
+    """The exact path takes no lineage barrier: its block-size guard
+    scans the block column alone (an exchange and a top-1 collect), and
+    the verify is the base frame's one consumer."""
+    calls = _spy_materialize(monkeypatch)
+    frame, build_jobs = _jobs_in(spark, lambda: _dup_frame(emb, "exact"))
+    rows, jobs = _jobs_in(spark, frame.collect)
+    assert calls == []
+    assert rows and build_jobs <= 2 and jobs <= 2, (build_jobs, jobs)
+
+
+def test_embedding_cosine_dups_guard_reports_largest_block(spark, emb):
+    """The guard still raises before any verify job, naming the largest
+    block's row count; ``exact_ok=True`` skips it."""
+    labelled = emb.withColumn(
+        "label", F.when(F.col("vec_id") < 100, F.lit(0)).otherwise(F.col("vec_id"))
+    )
+    with pytest.raises(ValueError, match=r"block has 100 rows > max_block_rows=64"):
+        similarity.embedding_cosine_dups(labelled, max_block_rows=64)
+    similarity.embedding_cosine_dups(labelled, max_block_rows=100)
+    similarity.embedding_cosine_dups(labelled, max_block_rows=64, exact_ok=True)
+
+
+def _python_audit():
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "python_audit",
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "python_audit.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_python_audit_flags_a_udf_in_two_nodes():
+    audit = _python_audit()
+    plan = "\n".join([
+        "Project [id#1L, _cell#9L]",
+        "+- Generate explode(pythonUDF0#12), [id#1L], false, [_cell#9L]",
+        "   +- ArrowEvalPython [_cells(v#2)#8, f(slice(v#2, 1, 2))#7], [pythonUDF0#12, pythonUDF1#13], 200",
+        "      +- *(1) Filter (size(pythonUDF0#11, false) > 0)",
+        "         +- ArrowEvalPython [_cells(v#2)#8], [pythonUDF0#11], 200",
+        "            :  +- MapInPandas verify(_cell#9L)#20, [id_a#21L], false",
+        "            +- ArrowEvalPython [_cells(v#3)#8], [pythonUDF0#14], 200",
+    ])
+    nodes = audit.python_nodes(plan)
+    assert [n for n, _ in nodes] == [
+        "ArrowEvalPython", "ArrowEvalPython", "MapInPandas", "ArrowEvalPython"
+    ]
+    assert nodes[0][1] == ["_cells(v#2)#8", "f(slice(v#2, 1, 2))#7"]
+    # the self-join side over re-aliased input v#3 is a different call
+    assert audit.double_evaluated(plan) == ["_cells(v#2)#8"]
+
+
+# every query whose plan used to run a cell, signature or pair UDF twice:
+# a filter over the projected UDF column was pushed below the projection
+_ONCE_QUERIES = (
+    "s3_knn_lsh", "s4_knn_ivf", "s10_knn_ivf_trained", "s11_knn_pq_adc",
+    "s12_knn_ivfpq", "s24_imi_cosine_dups", "s26_incremental_ivf_dups",
+    "s27_incremental_imi_dups", "s29_routed_incremental_ingest",
+    "s30_ivf_index_rebuild", "s35_sized_srp_ingest",
+)
+
+
+def test_python_udfs_evaluate_once_per_plan(spark):
+    """One ``ArrowEvalPython`` per UDF call on sf0.001: each vector
+    kernel is exploded in the ``select`` that makes it, so Catalyst
+    pushes no filter that would evaluate it a second time."""
+    import __spark_entry__ as E
+
+    audit = _python_audit()
+    doubled = {}
+    for name in _ONCE_QUERIES:
+        plan = E.queries()[name](spark, SF_TINY)._jdf.queryExecution().executedPlan().toString()
+        assert audit.python_nodes(plan), name
+        if audit.double_evaluated(plan):
+            doubled[name] = audit.double_evaluated(plan)
+    assert doubled == {}
 
 
 def test_incremental_ivf_equals_batch_cross_cut(spark, emb):
