@@ -1135,9 +1135,9 @@ def s34_exact_guaranteed_route(spark, sf_dir):
     join machinery (the plan is map-only: one corpus scan through a
     MapInPandas BLAS matmul per Arrow batch, no join node, no hash
     shuffle — round 11 vectorized the leg after measuring the
-    interpreted F.aggregate fold at ~8× the arithmetic's wall; the
-    fold path survives as vectorized=False, pinned bitwise-equal by
-    the parity test).  Only the pinned-
+    interpreted F.aggregate fold at ~8× the arithmetic's wall; its
+    sims stay bitwise those of the fold, pinned by a parity test
+    against a fold cross join).  Only the pinned-
     infeasible 8×6 SRP artifact is provided, so the exact row is the
     single feasible route — the choice is deterministic at ANY (N, S)
     and asserted in-line.  The oracle is the plain shard×corpus

@@ -59,37 +59,59 @@ def seq_rowdot(A, B):
     return np.cumsum(P, axis=1)[:, -1]
 
 
-@pandas_udf(DoubleType())
-def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Arrow-batched exact-verify dot product for candidate PAIRS whose
-    sides come from two frames — the per-pair term of
-    ``similarity._incremental_cells_pairs`` (IVF/IMI ingest, shard ×
-    corpus); the batch dup operators verify inside their blocks and
-    call :func:`seq_rowdot` directly (``similarity._verify_within_blocks``).
-    Guide §4.2: the interpreted ``aggregate(zip_with(...))`` fold costs
-    ~4.5 µs/pair and dominates the verify tail at scale; one
-    BLAS-shaped batch op replaces it.
-    Bit-identical to the JVM fold for finite, non-null elements of
-    equal length: see :func:`seq_rowdot`.
+def verify_cosine(a, b, floor):
+    """The engine's one exact-cosine verify: candidate pairs of two row
+    sets ``a`` and ``b``, each ``(ids, vecs)`` with ``vecs`` an object
+    array of non-NULL 1-D vectors.  With ``b`` None the pairs are ``a``'s
+    upper triangle (``id_a < id_b``; ``a`` sorted by id), otherwise every
+    ``a`` × ``b`` pair whose ids differ.
 
-    Edge semantics (pinned by tests/test_pyudf_verify.py): a NULL
-    vector or a ragged pair (lengths differ — the JVM ``zip_with``
-    null-pads and folds to NULL) yields NULL.  A NaN ELEMENT yields a
-    NaN dot, which the pandas→Arrow conversion turns into NULL — unlike
-    the JVM fold, whose NaN passes ``sim >= threshold``.  Either way
-    the pair is dropped by the verify filter."""
+    Rows are split by vector length: vectors of different lengths are
+    never compared.  ``V_a @ V_b.T / outer(n_a, n_b)`` runs in ~32 MB row
+    blocks and keeps the pairs that are not provably below the
+    threshold: a BLAS cosine ``>= floor`` (``threshold − 1e-9``, far
+    above the ≤ dim·u BLAS-vs-fold error), a non-finite one, or a zero
+    norm product.  The survivors' dots are re-folded with
+    :func:`seq_rowdot`, and the norms are ``sqrt(seq_rowdot(v, v))``, so
+    both equal the JVM ``similarity.dot`` / ``l2norm`` folds bit for bit
+    and the caller's JVM-side ``_dot / (_na * _nb)`` is the fold's
+    cosine.  A NaN or NULL element folds to NaN, which reaches the JVM
+    as NULL (pandas→Arrow), so the pair is dropped; a zero norm product
+    divides by zero there (ANSI mode raises).
+
+    Yields ``(id_a, id_b, dot, na, nb)`` array chunks."""
     import numpy as np
 
-    la = va.map(len, na_action="ignore")
-    lb = vb.map(len, na_action="ignore")
-    valid = la == lb  # NULL lengths are NaN, never equal
-    out = np.full(len(va), np.nan)
-    for n in la[valid].unique():
-        rows = (valid & (la == n)).to_numpy()
-        out[rows] = seq_rowdot(
-            np.vstack(va[rows].to_numpy()), np.vstack(vb[rows].to_numpy())
-        )
-    return pd.Series(out)
+    def lengths(vecs):
+        return np.fromiter(map(len, vecs), np.int64, len(vecs))
+
+    same = b is None
+    ia, va = a
+    ib, vb = a if same else b
+    la = lengths(va)
+    lb = la if same else lengths(vb)
+    for d in np.intersect1d(la, lb):
+        sa = la == d
+        ids_a, A = ia[sa], np.vstack(va[sa]).astype(np.float64)
+        na = np.sqrt(seq_rowdot(A, A))
+        if same:
+            ids_b, B, nb = ids_a, A, na
+        else:
+            sb = lb == d
+            ids_b, B = ib[sb], np.vstack(vb[sb]).astype(np.float64)
+            nb = np.sqrt(seq_rowdot(B, B))
+        step = max(1, 4_000_000 // len(B))  # ~32 MB blocks
+        for s in range(0, len(A), step):
+            lo = s if same else 0  # sorted ids: every partner of rows s.. sits at column ≥ s
+            with np.errstate(divide="ignore", invalid="ignore"):
+                nn = na[s : s + step, None] * nb[None, lo:]
+                cos = (A[s : s + step] @ B[lo:].T) / nn
+            i, j = np.nonzero(~(cos < floor) | (nn == 0))
+            i += s
+            j += lo
+            keep = ids_a[i] < ids_b[j] if same else ids_a[i] != ids_b[j]
+            i, j = i[keep], j[keep]
+            yield ids_a[i], ids_b[j], seq_rowdot(A[i], B[j]), na[i], nb[j]
 
 
 def make_srp_sigs_udf(mat, offsets, weights):

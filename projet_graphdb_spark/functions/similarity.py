@@ -12,12 +12,15 @@
   n-gram dedup.
   ``lsh_cosine_dups`` (SRP buckets) and ``ivf_cosine_dups`` /
   ``imi_cosine_dups`` (k-means cells) block the whole corpus; all of
-  them verify each block in one sorted Arrow stream
-  (:func:`_verify_within_blocks`), so no candidate pair is shuffled.
+  them, and the shard × corpus ingest tails, verify each block in one
+  sorted Arrow stream (:func:`_verify_within_blocks`), so no candidate
+  pair is shuffled.  The exact ingest leg runs the same per-block math
+  (``pyudf.verify_cosine``) on each corpus batch × the broadcast shard.
 
 Dot products use ``zip_with`` + ``aggregate`` (JVM, codegen) in double
 precision with left-to-right summation — bit-reproducible and matching
-DuckDB's ``list_`` kernels for oracle comparison.
+DuckDB's ``list_`` kernels for oracle comparison; the Arrow verify
+re-folds in that same order (``pyudf.seq_rowdot``).
 """
 
 from __future__ import annotations
@@ -37,26 +40,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def _pair_sim(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """Exact cosine for candidate pairs whose sides come from two
-    frames (the shard × corpus tail :func:`_incremental_cells_pairs`;
-    in-block pairs use :func:`_verify_within_blocks`): the dot runs as
-    ONE Arrow-batched numpy op per batch (guide §4.2 — the interpreted
-    ``aggregate(zip_with(...))`` fold costs ~4.5 µs/pair and is the
-    dominant per-candidate term at scale), divided by the precomputed
-    norms JVM-side.  For finite, equal-length vectors (the edge cases
-    are NULL and the pair is dropped — see ``pyudf.pair_dot``) values
-    are BIT-IDENTICAL to ``dot(va, vb)``:
-    ``pyudf.pair_dot`` reproduces the fold's exact IEEE operation
-    sequence (f64 casts, f64 products, strict left-to-right summation
-    via sequential ``cumsum`` — see ``pyudf.seq_rowdot``), so the
-    downstream ``>= threshold`` filter and 6-dp round see the same
-    doubles as the JVM path and the DuckDB oracle replay."""
-    from . import pyudf
-
-    return pyudf.pair_dot(va, vb) / (na * nb)
 
 
 def l2norm(a: Column) -> Column:
@@ -542,10 +525,7 @@ def embedding_cosine_dups(
                 f"intended."
             )
     base = embeddings.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_v"),
-        l2norm(F.col(vec_col)).alias("_n"),
+        F.col(block_col).alias("_blk"), F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v")
     )
     pairs = _verify_within_blocks(base, ["_blk"], threshold)
     return pairs.select("id_a", "id_b", F.round("sim", 6).alias("sim"))
@@ -694,14 +674,10 @@ def lsh_cosine_dups(
             n_rows = sized["n"] if n_rows is None else n_rows
             dim = (sized["d"] or 0) if dim is None else dim
         bands = srp_auto_bands(n_rows, dim, threshold=threshold)
-    base = embeddings.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_v"),
-        l2norm(F.col(vec_col)).alias("_n"),
-    )
+    base = embeddings.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
     # posexplode straight off the UDF (see clustering.topn_cells)
     rows = base.select(
-        "_vid", "_v", "_n",
+        "_vid", "_v",
         F.posexplode(srp_signature_array(F.col("_v"), bands)).alias("_band", "_sig"),
     )
     pairs = _verify_within_blocks(rows, ["_band", "_sig"], threshold)
@@ -988,7 +964,6 @@ def ivf_cosine_dups(
     """
     _require_dense_int_ids(embeddings, id_col, "ivf_cosine_dups")
     emb = embeddings.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    base = emb.select("_vid", "_v", l2norm(F.col("_v")).alias("_n"))
     if assigned_cells is None:
         from . import clustering
 
@@ -1004,41 +979,42 @@ def ivf_cosine_dups(
                 max_centroids=max_centroids,
                 max_train_rows=max_train_rows,
             )
-        rows = base.select(
-            "_vid", "_v", "_n",
+        rows = emb.select(
+            "_vid", "_v",
             F.explode(clustering.topn_cells(F.col("_v"), centroids, nprobe)).alias("_cell"),
         )
     else:
-        rows = assigned_cells.select("_vid", "_cell").join(base, "_vid")
+        rows = assigned_cells.select("_vid", "_cell").join(emb, "_vid")
     pairs = _verify_within_blocks(rows, ["_cell"], threshold)
     # soft assignment verifies a pair in every cell it shares
     return pairs.distinct().select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
-def _verify_within_blocks(rows: DataFrame, keys: list, threshold: float) -> DataFrame:
-    """The blocked exact-cosine verify of every batch dup operator: LSH
-    buckets (``_band``, ``_sig``), label blocks (``_blk``) and IVF/IMI
-    cells (``_cell``).  ``rows`` carry (keys…, _vid, _v, _n), one row per
-    (vector, block) membership with ``_n`` the JVM :func:`l2norm`.  Rows
-    with a NULL key, id or vector are dropped; a hash ``repartition`` on
-    the keys puts each block in one partition and ``sortWithinPartitions``
-    makes it a run of rows in ``_vid`` order.  One ``mapInPandas`` pass
-    streams each partition's Arrow batches, carrying the open block from
-    one batch to the next, so a task holds one block plus one batch and
-    no candidate pair is shuffled.
+def _verify_within_blocks(
+    rows: DataFrame, keys: list, threshold: float, side: str | None = None
+) -> DataFrame:
+    """The blocked exact-cosine verify of every dup operator: LSH buckets
+    (``_band``, ``_sig``), label blocks (``_blk``), IVF/IMI cells
+    (``_cell``), and the ingest tail's shard × corpus cells
+    (:func:`_incremental_cells_pairs`).  ``rows`` carry (keys…, _vid, _v),
+    one row per (vector, block) membership.  Rows with a NULL key, id or
+    vector are dropped; a hash ``repartition`` on the keys puts each
+    block in one partition and ``sortWithinPartitions`` makes it a run of
+    rows in ``_vid`` order.  One ``mapInPandas`` pass streams each
+    partition's Arrow batches, carrying the open block from one batch to
+    the next, so a task holds one block plus one batch and no candidate
+    pair is shuffled.
 
-    Per block, the rows are split by vector length (ragged pairs are never
-    compared, as in ``pyudf.pair_dot``); ``V_blk @ V.T / outer(n, n)`` runs
-    in ~32 MB row blocks and keeps the pairs ``id_a < id_b`` that are not
-    provably below the threshold: a BLAS cosine ``>= threshold − 1e-9``
-    (far above the ≤ dim·u BLAS-vs-fold error), a non-finite one, or a
-    zero norm product.  The survivors are re-folded with
-    ``pyudf.seq_rowdot`` and ``sim = _dot / (_na * _nb)`` is computed
-    JVM-side, so every ``sim`` is the double :func:`_pair_sim` gives.  A
-    NaN fold reaches the JVM as NULL (pandas→Arrow) and the pair is
-    dropped; a zero norm product divides by zero there (ANSI mode raises).
-    A pair is emitted once per block and row pair it occurs in (a repeated
-    ``_vid`` pairs twice); callers whose blocks overlap add a ``distinct``.
+    Each block goes through ``pyudf.verify_cosine``: its upper triangle,
+    or with ``side`` (a boolean column) the rectangle of the block's
+    ``side`` rows (``id_a``) × its other rows (``id_b``) minus equal ids,
+    so two rows on the same side are never compared.  ``sim = _dot /
+    (_na * _nb)`` is computed JVM-side from fold-identical values, so it
+    is the double the JVM :func:`dot` / :func:`l2norm` fold gives.  A NaN
+    fold reaches the JVM as NULL and the pair is dropped; a zero norm
+    product divides by zero there (ANSI mode raises).  A pair is emitted
+    once per block and row pair it occurs in (a repeated ``_vid`` pairs
+    twice); callers whose blocks overlap add a ``distinct``.
     Output: (id_a, id_b, sim) at ``sim >= threshold``, unrounded, ids of
     the input's id type."""
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1049,38 +1025,28 @@ def _verify_within_blocks(rows: DataFrame, keys: list, threshold: float) -> Data
         + [StructField(c, DoubleType()) for c in ("_dot", "_na", "_nb")]
     )
     floor = threshold - 1e-9
+    extra = [side] if side else []
 
     def verify(batches):
         import numpy as np
         import pandas as pd
 
-        from .pyudf import seq_rowdot
+        from .pyudf import verify_cosine
 
         out = {c: [] for c in ("id_a", "id_b", "_dot", "_na", "_nb")}
 
         def block(pieces):
-            ids, vecs, n = (np.concatenate(c) for c in zip(*pieces))
+            ids, vecs, *on = (np.concatenate(c) for c in zip(*pieces))
             if len(ids) < 2:
                 return
-            lens = np.fromiter(map(len, vecs), np.int64, len(vecs))
-            for d in np.unique(lens):
-                sel = np.flatnonzero(lens == d)
-                bi, V, bn = ids[sel], np.vstack(vecs[sel]).astype(np.float64), n[sel]
-                step = max(1, 4_000_000 // len(V))  # ~32 MB blocks
-                for s in range(0, len(V), step):
-                    # sorted ids: every partner of rows s.. sits at column ≥ s
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        nn = bn[s : s + step, None] * bn[None, s:]
-                        cos = (V[s : s + step] @ V[s:].T) / nn
-                    keep = (~(cos < floor) | (nn == 0)) & (bi[s : s + step, None] < bi[None, s:])
-                    i, j = np.nonzero(keep)
-                    i += s
-                    j += s
-                    out["id_a"].append(bi[i])
-                    out["id_b"].append(bi[j])
-                    out["_dot"].append(seq_rowdot(V[i], V[j]))
-                    out["_na"].append(bn[i])
-                    out["_nb"].append(bn[j])
+            if on:
+                a = on[0]
+                sets = ((ids[a], vecs[a]), (ids[~a], vecs[~a]))
+            else:
+                sets = ((ids, vecs), None)
+            for chunk in verify_cosine(*sets, floor):
+                for v, x in zip(out.values(), chunk):
+                    v.append(x)
 
         def emit():
             if out["id_a"]:
@@ -1091,7 +1057,7 @@ def _verify_within_blocks(rows: DataFrame, keys: list, threshold: float) -> Data
         held, last = [], None  # the open block's pieces; the previous row's keys
         for pdf in batches:
             K = [pdf[k].to_numpy() for k in keys]
-            cols = (pdf["_vid"].to_numpy(), pdf["_v"].to_numpy(), pdf["_n"].to_numpy(np.float64))
+            cols = [pdf[c].to_numpy() for c in ("_vid", "_v", *extra)]
             new = np.zeros(len(pdf), bool)  # row i starts a block
             new[0] = last is None
             for k, p in zip(K, last or K):
@@ -1111,7 +1077,7 @@ def _verify_within_blocks(rows: DataFrame, keys: list, threshold: float) -> Data
 
     verified = (
         rows.where(" AND ".join(f"{c} IS NOT NULL" for c in (*keys, "_vid", "_v")))
-        .select(*keys, "_vid", "_v", "_n")
+        .select(*keys, "_vid", "_v", *extra)
         .repartition(*keys)
         .sortWithinPartitions(*keys, "_vid")
         .mapInPandas(verify, schema)
@@ -1439,15 +1405,15 @@ def incremental_ivf_dups(
     the shard, so the index stays frozen as shards arrive) — and
     ``corpus_cells`` — the corpus's (_vid, _cell) soft assignment, in
     production read back from its parquet sink (built inline when
-    omitted).  Per shard the cost is one map-only ``assign_topn`` over
-    the shard, a cell-keyed join of shard cells against corpus cells,
-    and an exact-cosine verify whose corpus vector lookup is
-    candidate-bounded (semi-join pruned) — nothing re-scales with
-    corpus size except the slim cell-index scan, and with the s26
-    recipe (sink partitioned by ``_cell``) even that prunes: the join
-    carries a DYNAMIC-PARTITION-PRUNING filter of the shard's probed
-    cells, so the scan reads ~2·S cell directories, not all k
-    (plan-pinned:
+    omitted).  Per shard the cost is one map-only cell assignment of
+    the shard, a left-semi of the corpus cells on the shard's probed
+    cells, one vector join for those corpus rows, and the blocked
+    shard × corpus verify (:func:`_incremental_cells_pairs`) — nothing
+    re-scales with corpus size except the slim cell-index scan, and
+    with the s26 recipe (sink partitioned by ``_cell``) even that
+    prunes: the left-semi carries a DYNAMIC-PARTITION-PRUNING filter of
+    the shard's probed cells, so the scan reads ~2·S cell directories,
+    not all k (plan-pinned:
     tests/test_plans.py::test_ingest_cell_join_dynamic_partition_pruning).
     Two smaller per-shard
     costs ride along when ``corpus_cells`` is passed (stated here so
@@ -1515,9 +1481,11 @@ def incremental_ivf_dups(
             )
         else:
             corpus_cells = corpus_cells.select("_vid", "_cell")
+    from . import clustering
+
     shard = new_batch.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    shard_cells = _ivf_cell_rows(shard, centroids, nprobe)
-    return _incremental_cells_pairs(corp, shard, corpus_cells, shard_cells, threshold)
+    cells = clustering.topn_cells(F.col("_v"), centroids, nprobe)
+    return _incremental_cells_pairs(corp, corpus_cells, shard, cells, threshold)
 
 
 def _ivf_cell_rows(emb: DataFrame, centroids: dict, nprobe: int) -> DataFrame:
@@ -1532,51 +1500,37 @@ def _ivf_cell_rows(emb: DataFrame, centroids: dict, nprobe: int) -> DataFrame:
 
 def _incremental_cells_pairs(
     corp: DataFrame,
-    shard: DataFrame,
     corpus_cells: DataFrame,
-    shard_cells: DataFrame,
+    shard: DataFrame,
+    cells: Column,
     threshold: float,
 ) -> DataFrame:
-    """The shared ingest tail of the IVF/IMI incremental family:
-    cell-keyed candidate join (shard cells × corpus cells), exact
-    cosine verify with a candidate-bounded corpus vector lookup
-    (left-semi pruned — the corpus is never scanned for vectors beyond
-    the candidates).  ``corp``/``shard`` carry (_vid, _v);
-    ``corpus_cells``/``shard_cells`` carry (_vid, _cell).
+    """The shared ingest tail of the IVF/IMI/SRP incremental family.
+    ``shard`` carries (_vid, _v) and ``cells`` is its cell-array column,
+    exploded in the ``select`` that evaluates it (see
+    ``clustering.topn_cells``); ``corp`` carries (_vid, _v) and
+    ``corpus_cells`` (_vid, _cell).  The corpus rows of the probed cells
+    (a left-semi on ``_cell``, which a ``_cell``-partitioned sink turns
+    into a dynamic partition-pruning filter, then one vector join) are
+    unioned with the shard rows and verified in one blocked pass
+    (:func:`_verify_within_blocks` with a side column), so each shard row
+    meets the corpus rows of its cells and nothing else.
     Output: (new_id, corpus_id, sim rounded to 6 dp) at ≥ threshold."""
-    from .pyudf import evaluated_once
-
-    cand = (
-        shard_cells.select(F.col("_cell"), F.col("_vid").alias("new_id"))
-        .join(
-            corpus_cells.select(F.col("_cell"), F.col("_vid").alias("corpus_id")),
-            "_cell",
-        )
-        .filter(F.col("new_id") != F.col("corpus_id"))
-        .select("new_id", "corpus_id")
-        .distinct()  # soft assignment can pair the same ids in ≥2 cells
+    shard_rows = shard.select("_vid", "_v", F.explode(cells).alias("_cell"))
+    corpus_rows = (
+        corpus_cells.select("_vid", "_cell")
+        .join(shard_rows.select("_cell"), "_cell", "left_semi")
+        .join(corp, "_vid")
     )
-    # exact verify: shard vectors in hand; corpus vectors fetched for
-    # candidate ids only (left-semi prunes the corpus scan)
-    cand_ids = cand.select(F.col("corpus_id").alias("_vid")).distinct()
-    corp_sub = corp.join(cand_ids, "_vid", "left_semi")
-    va = shard.select(
-        F.col("_vid").alias("new_id"),
-        F.col("_v").alias("_va"),
-        l2norm(F.col("_v")).alias("_na"),
+    rows = shard_rows.withColumn("_new", F.lit(True)).unionByName(
+        corpus_rows.withColumn("_new", F.lit(False))
     )
-    vb = corp_sub.select(
-        F.col("_vid").alias("corpus_id"),
-        F.col("_v").alias("_vb"),
-        l2norm(F.col("_v")).alias("_nb"),
-    )
-    sim = _pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
-    return (
-        cand.join(va, "new_id")
-        .join(vb, "corpus_id")
-        .select("new_id", "corpus_id", evaluated_once(sim).alias("sim"))
-        .filter(F.col("sim") >= threshold)
-        .select("new_id", "corpus_id", F.round("sim", 6).alias("sim"))
+    pairs = _verify_within_blocks(rows, ["_cell"], threshold, side="_new")
+    # soft assignment verifies a pair in every cell it shares
+    return pairs.distinct().select(
+        F.col("id_a").cast(shard.schema["_vid"].dataType).alias("new_id"),
+        F.col("id_b").cast(corp.schema["_vid"].dataType).alias("corpus_id"),
+        F.round("sim", 6).alias("sim"),
     )
 
 
@@ -2223,8 +2177,8 @@ def incremental_imi_dups(
     production read back from its ``_cell``-partitioned parquet sink).
     Per shard: one map-only two-half ``assign_topn`` over the shard
     (S·(k1+k2)·(dim/2) — √k cheaper than flat at equal cell count), a
-    cell-keyed join against the slim sink, and the candidate-bounded
-    exact-cosine verify shared with the IVF twin
+    probed-cell prune of the slim sink, and the blocked shard × corpus
+    verify shared with the IVF twin
     (:func:`_incremental_cells_pairs`).  The same two per-shard side
     costs as the IVF twin apply (config ``distinct()`` over RLE pages +
     the ``_vid < 64`` staleness sample, stats-pruned on id-ordered
@@ -2275,8 +2229,8 @@ def incremental_imi_dups(
         # validated once by the caller (validate_imi_artifacts) — r16
         corpus_cells = corpus_cells.select("_vid", "_cell")
     shard = new_batch.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    shard_cells = _imi_cell_rows(shard, cents1, cents2, p1, p2, k2_real, dim)
-    return _incremental_cells_pairs(corp, shard, corpus_cells, shard_cells, threshold)
+    halves = _imi_halves(shard, cents1, cents2, p1, p2, dim)
+    return _incremental_cells_pairs(corp, corpus_cells, halves, _imi_virtual(k2_real), threshold)
 
 
 def srp_band_index(
@@ -2592,12 +2546,12 @@ def incremental_srp_dups(
     whose recall drifts.
 
     Per shard: S·bands·bits·dim signature flops (map-only, the same
-    Arrow matmul UDF as the batch tier), a (band, bhash) join
-    whose shuffle carries the SHARD's keys against the partition-
-    pruned index, and the shared candidate-bounded exact-cosine verify
+    Arrow matmul UDF as the batch tier), a left-semi of the
+    partition-pruned index on the SHARD's (band, bhash) keys, and the
+    shared blocked shard × corpus verify
     (:func:`_incremental_cells_pairs` — band and bucket fold into one
     virtual key ``band·2^bits + bhash``).  The corpus appears only
-    through the slim index + the pruned verify lookup; the config
+    through the slim index + the pruned vector join; the config
     ``distinct()`` over RLE pages rides along as in every incremental
     twin.
 
@@ -2617,11 +2571,11 @@ def incremental_srp_dups(
         F.col(id_col).alias("_vid"), key.alias("_cell")
     )
     shard = new_batch.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
-    shard_cells = shard.select(
-        "_vid",
-        F.posexplode(srp_signature_array(F.col("_v"), bands)).alias("band", "bhash"),
-    ).select("_vid", key.alias("_cell"))
-    return _incremental_cells_pairs(corp, shard, corpus_cells, shard_cells, threshold)
+    cells = F.transform(
+        srp_signature_array(F.col("_v"), bands),
+        lambda bhash, band: band.cast("long") * (1 << bits) + bhash,
+    )
+    return _incremental_cells_pairs(corp, corpus_cells, shard, cells, threshold)
 
 
 def ingest_calibrate_recall(
@@ -2685,12 +2639,11 @@ def ingest_calibrate_recall(
     return [h / n for h in hits], n
 
 
-# Ceiling on the exact leg's broadcast-shard footprint: both execution
-# paths materialize the shard driver-side (collect for the BLAS matrix,
-# F.broadcast's driver build for the fold path), so a "shard" that is
-# secretly a corpus would OOM the driver long after the plan looked
-# fine.  2 GiB of packed float64 (rows × dim × 8 bytes) is comfortably
-# inside any driver budget while far above every real daily-slice use;
+# Ceiling on the exact leg's broadcast-shard footprint: the leg
+# collects the shard driver-side, so a "shard" that is secretly a
+# corpus would OOM the driver long after the plan looked fine.  2 GiB
+# of packed float64 (rows × dim × 8 bytes) is comfortably inside any
+# driver budget while far above every real daily-slice use;
 # past it the caller is holding a corpus and should be routing through
 # the blocking legs (incremental_cosine_dups_auto prices that choice).
 EXACT_SHARD_MAX_BYTES: int = 2 << 30
@@ -2702,7 +2655,6 @@ def incremental_exact_dups(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     max_shard_bytes: int | None = None,
 ) -> DataFrame:
     """The EXACT guaranteed leg of the incremental router (round-9
@@ -2716,20 +2668,19 @@ def incremental_exact_dups(
     The 100-TB shape: the SHARD is broadcast (a daily ingest batch is
     small — S·dim floats), the corpus is scanned exactly once, the
     plan is map-only — no shuffle, no candidate materialization, no
-    distinct — and the S·N·dim of arithmetic rides BLAS
-    (``vectorized=True``, the default): one ``corpus_batch @ shard.T``
-    matmul per Arrow batch inside ``mapInPandas``, because the
-    higher-order-function dot (``F.aggregate``) is CodegenFallback —
-    interpreted per element — and made the guaranteed leg pay ~8× the
-    wall the arithmetic says (round-11 measurement: 19.0 s → 2.4 s on
-    36M pairs at equal parallelism).  Survivors of the BLAS prefilter
-    (threshold − 1e-9, a bound far above BLAS-vs-fold divergence) are
-    RE-FOLDED sequentially left-to-right in float64 — the exact
-    IEEE-754 operation order of the JVM ``F.aggregate`` path — and the
-    final filter + 6 dp round run JVM-side, so the emitted pairs are
-    bitwise identical to the fold path on every engine
-    (``vectorized=False`` keeps that plan-transparent
-    BroadcastNestedLoopJoin path; the parity test pins equality).
+    distinct — and the S·N·dim of arithmetic rides BLAS: each corpus
+    Arrow batch × the shard goes through ``pyudf.verify_cosine`` inside
+    one ``mapInPandas``, because the higher-order-function dot
+    (``F.aggregate``) is CodegenFallback — interpreted per element — and
+    made the guaranteed leg pay ~8× the wall the arithmetic says
+    (round-11 measurement: 19.0 s → 2.4 s on 36M pairs at equal
+    parallelism).  The kernel re-folds the BLAS prefilter's survivors
+    in the JVM fold's exact IEEE-754 order and ``sim``, the filter and
+    the 6 dp round run JVM-side, so the emitted pairs are bitwise those
+    of a JVM :func:`dot` cross join.  Its row contract is the blocked
+    verify's: a NULL id or vector is dropped, vectors of different
+    lengths are never compared, a NaN fold drops the pair, and a zero
+    norm product raises (ANSI division by zero).
 
     Cost grows as S·N·dim, which the router prices against the
     blocking legs and only pays when the guarantee is demanded and
@@ -2738,8 +2689,8 @@ def incremental_exact_dups(
     Output: (new_id, corpus_id, sim ≥ threshold, 6 dp) — the shared
     incremental pair shape.
 
-    ``max_shard_bytes`` (default ``EXACT_SHARD_MAX_BYTES``): both paths
-    materialize the SHARD driver-side (that is the design — the corpus
+    ``max_shard_bytes`` (default ``EXACT_SHARD_MAX_BYTES``): the leg
+    materializes the SHARD driver-side (that is the design — the corpus
     streams, the daily slice broadcasts), so a caller who passes a
     corpus as the "shard" fails LOUDLY here with a pointer to the
     blocking legs instead of OOMing the driver mid-collect."""
@@ -2759,112 +2710,43 @@ def incremental_exact_dups(
             f"incremental_imi_dups), or split the shard, or raise "
             f"max_shard_bytes if the driver really has the memory."
         )
-    if not vectorized:
-        shard = F.broadcast(
-            new_batch.select(
-                F.col(id_col).alias("new_id"),
-                F.col(vec_col).alias("_va"),
-                l2norm(F.col(vec_col)).alias("_na"),
-            )
-        )
-        corp = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).alias("_vb"),
-            l2norm(F.col(vec_col)).alias("_nb"),
-        )
-        return (
-            corp.crossJoin(shard)
-            .filter(F.col("new_id") != F.col("corpus_id"))
-            .withColumn(
-                "sim",
-                dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-            )
-            .filter(F.col("sim") >= threshold)
-            .select("new_id", "corpus_id", F.round("sim", 6).alias("sim"))
-        )
-
-    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    spark = corpus.sparkSession
-    # id dtypes come from the INPUTS (round-11 advice): the fold path
-    # preserves the caller's id type (string/UUID/decimal ids all work
-    # there), so the vectorized twin must emit the same schema instead
-    # of hardcoding long — ids pass through untouched end to end
-    out_schema = StructType(
+    from . import clustering
+
+    # ids pass through untouched, so any id type works (string, UUID…)
+    schema = StructType(
         [
             StructField("new_id", new_batch.schema[id_col].dataType),
             StructField("corpus_id", corpus.schema[id_col].dataType),
-            StructField("sim", DoubleType()),
         ]
+        + [StructField(c, DoubleType()) for c in ("_dot", "_na", "_nb")]
     )
-    shard_rows = new_batch.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).collect()
-    if not shard_rows:
-        return spark.createDataFrame([], out_schema)
-    # object dtype: ids are opaque tokens here (compared for self-pair
-    # skip, emitted verbatim) — never arithmetic operands
-    s_ids = np.asarray([r["_id"] for r in shard_rows], dtype=object)
-    s_mat = np.asarray([list(r["_v"]) for r in shard_rows], dtype=np.float64)
-    # torrent-broadcast the shard matrix (S·dim doubles — the same
-    # boundedness premise as the fold path's broadcast side)
-    bc = spark.sparkContext.broadcast((s_ids, s_mat))
-    thr = float(threshold)
+    valid = F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
+    s_ids, s_vecs = clustering.collect_vectors(new_batch.where(valid), id_col, vec_col)
+    # torrent-broadcast the shard (S·dim doubles)
+    bc = corpus.sparkSession.sparkContext.broadcast((s_ids, s_vecs.to_numpy()))
+    floor = threshold - 1e-9
 
     def _score(batches):
-        import numpy as _np
-        import pandas as _pd
+        import pandas as pd
 
-        from .pyudf import seq_rowdot
-
-        ids_s, mat_s = bc.value
-        nrm_s = _np.sqrt((mat_s * mat_s).sum(axis=1))
-        # the JVM fold's exact IEEE order for the emitted sims:
-        # left-to-right accumulate of squares (seq_rowdot — sequential
-        # cumsum, bit-identical to the fold), sqrt each norm.  The BLAS
-        # pairwise norms above stay for the PREFILTER only.
-        nrm_s_fold = _np.sqrt(seq_rowdot(mat_s, mat_s))
+        from .pyudf import verify_cosine
 
         for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["corpus_id"].to_numpy()
-            c_mat = _np.asarray(
-                [_np.asarray(v, dtype=_np.float64) for v in pdf["_vb"]]
-            )
-            c_nrm = _np.sqrt((c_mat * c_mat).sum(axis=1))
-            with _np.errstate(divide="ignore", invalid="ignore"):
-                cos = (c_mat @ mat_s.T) / _np.outer(c_nrm, nrm_s)
-            ci, si = _np.nonzero(cos >= thr - 1e-9)
-            # drop self-pairs, then re-fold ONLY the survivors with the
-            # exact sequential semantics (r16: was a per-pair Python
-            # loop — ~µs/pair; now three vectorized ops over the
-            # selected rows, values bit-identical)
-            keep = c_ids[ci] != ids_s[si]
-            ci, si = ci[keep], si[keep]
-            if len(ci):
-                c_nrm_fold = _np.sqrt(seq_rowdot(c_mat, c_mat))
-                sims = seq_rowdot(c_mat[ci], mat_s[si]) / (
-                    c_nrm_fold[ci] * nrm_s_fold[si]
-                )
-            else:
-                sims = _np.empty(0, dtype=_np.float64)
-            yield _pd.DataFrame(
-                {
-                    "new_id": _pd.Series(list(ids_s[si]), dtype=object),
-                    "corpus_id": _pd.Series(list(c_ids[ci]), dtype=object),
-                    "sim": _pd.Series(sims, dtype="float64"),
-                }
-            )
+            corpus_rows = (pdf["corpus_id"].to_numpy(), pdf["_vb"].to_numpy())
+            for chunk in verify_cosine(bc.value, corpus_rows, floor):
+                yield pd.DataFrame(dict(zip(schema.names, chunk)))
 
-    scored = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("_vb")
-    ).mapInPandas(_score, out_schema)
-    # final filter + round JVM-side on the re-folded doubles: bitwise
-    # identical to the vectorized=False path (and to the SQL oracle)
-    return scored.filter(F.col("sim") >= threshold).select(
-        "new_id", "corpus_id", F.round("sim", 6).alias("sim")
+    scored = (
+        corpus.where(valid if len(s_ids) else F.lit(False))  # an empty shard scans nothing
+        .select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("_vb"))
+        .mapInPandas(_score, schema)
+    )
+    return (
+        scored.withColumn("sim", F.col("_dot") / (F.col("_na") * F.col("_nb")))
+        .filter(F.col("sim") >= threshold)
+        .select("new_id", "corpus_id", F.round("sim", 6).alias("sim"))
     )
 
 
@@ -3435,11 +3317,8 @@ def incremental_cosine_dups_auto(
                 fb = _guaranteed_fallback()  # measured miss: re-route
                 if fb is not None:
                     return fb
-        shard_cells = assigned.select(
-            "_vid", F.explode(F.slice("_cells", 1, probe)).alias("_cell")
-        )
         return _incremental_cells_pairs(
-            corp, shard, corpus_cells, shard_cells, threshold
+            corp, corpus_cells, assigned, F.slice("_cells", 1, probe), threshold
         )
     # IMI route
     _validate_imi_cells_config(
@@ -3518,10 +3397,7 @@ def incremental_cosine_dups_auto(
         if len(idx) == n_grid
         else F.array(*[F.col("_cells")[k] for k in idx])
     )
-    shard_cells = assigned.select("_vid", F.explode(sub).alias("_cell"))
-    return _incremental_cells_pairs(
-        corp, shard, corpus_cells, shard_cells, threshold
-    )
+    return _incremental_cells_pairs(corp, corpus_cells, assigned, sub, threshold)
 
 
 def ingest_artifact_cfgs(

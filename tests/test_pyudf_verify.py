@@ -1,5 +1,5 @@
-"""r16 optimization pins: the Arrow-batched exact-verify dot must be
-BIT-IDENTICAL to the JVM ``aggregate(zip_with(...))`` fold, and the
+"""r16 optimization pins: the Arrow exact verify (``pyudf.verify_cosine``)
+must be BIT-IDENTICAL to the JVM ``aggregate(zip_with(...))`` fold, and the
 sink-backed materialization mode must round-trip frames unchanged."""
 
 import numpy as np
@@ -52,9 +52,19 @@ def test_seq_rowdot_float32_inputs_cast_first():
     assert np.array_equal(got, want)
 
 
-def test_pair_sim_bit_identical_to_jvm_fold(spark):
-    """End-to-end: the ArrowEvalPython verify sim equals the JVM HOF
-    sim BITWISE on a float32 embedding fixture (no tolerance)."""
+def _kernel_sims(a, b):
+    """{(id_a, id_b): dot / (na·nb)} of every pair ``verify_cosine``
+    keeps at a floor that keeps them all."""
+    out = {}
+    for ia, ib, dot, na, nb in pyudf.verify_cosine(a, b, -np.inf):
+        out.update(zip(zip(ia.tolist(), ib.tolist()), (dot / (na * nb)).tolist()))
+    return out
+
+
+def test_verify_cosine_bit_identical_to_jvm_fold(spark):
+    """The shared verify's cosine equals the JVM HOF fold's BITWISE on a
+    float32 embedding fixture (no tolerance), for its upper triangle and
+    for a two-sided rectangle."""
     rng = np.random.default_rng(3)
     rows = [
         (i, [float(x) for x in rng.standard_normal(24).astype(np.float32)])
@@ -69,28 +79,33 @@ def test_pair_sim_bit_identical_to_jvm_fold(spark):
         F.col("id").alias("id_b"), F.col("v").alias("_vb"),
         similarity.l2norm(F.col("v")).alias("_nb"),
     )
-    pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-    jvm = pairs.withColumn(
+    jvm = a.crossJoin(b).where(F.col("id_a") != F.col("id_b")).withColumn(
         "sim",
         similarity.dot(F.col("_va"), F.col("_vb"))
         / (F.col("_na") * F.col("_nb")),
     ).select("id_a", "id_b", "sim")
-    arrow = pairs.withColumn(
-        "sim",
-        similarity._pair_sim(
-            F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
-        ),
-    ).select("id_a", "id_b", "sim")
-    got = {(r.id_a, r.id_b): r.sim for r in arrow.collect()}
     want = {(r.id_a, r.id_b): r.sim for r in jvm.collect()}
-    assert got == want  # dict equality on raw doubles == bitwise
+    ids = np.arange(60)
+    vecs = np.empty(60, dtype=object)
+    vecs[:] = [np.asarray(v, dtype=np.float32) for _, v in rows]
+    tri = _kernel_sims((ids, vecs), None)
+    assert tri == {k: v for k, v in want.items() if k[0] < k[1]}  # raw doubles == bitwise
+    rect = _kernel_sims((ids[40:], vecs[40:]), (ids[:50], vecs[:50]))
+    assert rect == {k: v for k, v in want.items() if k[0] >= 40 and k[1] < 50}
 
 
-def test_pair_dot_ragged_nan_null_pairs_are_dropped(spark):
-    """pair_dot edge semantics: a ragged pair is NULL (as the JVM
-    ``zip_with`` null-pad folds), a NaN element becomes an Arrow NULL
-    (the JVM fold gives NaN instead), a NULL vector is NULL; the blocked
-    verify drops all three pairs and keeps the clean one."""
+def _objects(*vecs):
+    out = np.empty(len(vecs), dtype=object)
+    out[:] = [np.asarray(v, dtype=np.float64) for v in vecs]
+    return out
+
+
+def test_verify_cosine_ragged_nan_null_pairs_are_dropped(spark):
+    """Edge semantics: a ragged pair is never compared (the JVM
+    ``zip_with`` null-pad folds to NULL), a NaN element re-folds to a NaN
+    dot (the JVM fold gives NaN too) that reaches the JVM as NULL, and a
+    NULL vector never reaches the kernel; the blocked verify drops all
+    three pairs and keeps the clean one, one-sided and two-sided."""
     rows = [
         (0, [1.0, 2.0, 3.0]),
         (1, [1.0, 2.0, 3.5]),
@@ -98,36 +113,44 @@ def test_pair_dot_ragged_nan_null_pairs_are_dropped(spark):
         (3, [1.0, 2.0]),
         (4, None),
     ]
-    base = spark.createDataFrame(rows, "_vid long, _v array<float>").withColumn(
-        "_n", similarity.l2norm(F.col("_v"))
-    )
+    base = spark.createDataFrame(rows, "_vid long, _v array<float>")
     pairs = spark.createDataFrame([(0, b) for b in range(1, 5)], "id_a long, id_b long")
     va = base.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"))
     vb = base.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"))
-    dots = {
-        r.id_b: (r.arrow, r.jvm)
+    jvm = {
+        r.id_b: r.jvm
         for r in pairs.join(va, "id_a").join(vb, "id_b").select(
-            "id_b",
-            pyudf.pair_dot(F.col("_va"), F.col("_vb")).alias("arrow"),
-            similarity.dot(F.col("_va"), F.col("_vb")).alias("jvm"),
+            "id_b", similarity.dot(F.col("_va"), F.col("_vb")).alias("jvm")
         ).collect()
     }
-    assert dots[1] == (1.0 + 4.0 + 10.5,) * 2
-    assert dots[2][0] is None and np.isnan(dots[2][1])
-    assert dots[3] == (None, None)
-    assert dots[4] == (None, None)
+    assert jvm[1] == 1.0 + 4.0 + 10.5 and np.isnan(jvm[2])
+    assert jvm[3] is None and jvm[4] is None
+    (ia, ib, dot, _, _), = pyudf.verify_cosine(
+        (np.array([0]), _objects(rows[0][1])),
+        (np.array([1, 2, 3]), _objects(*(v for _, v in rows[1:4]))),
+        -np.inf,
+    )
+    assert ib.tolist() == [1, 2] and dot[0] == jvm[1] and np.isnan(dot[1])
     block = base.withColumn("_blk", F.lit(0))  # all five rows in one block
     kept = similarity._verify_within_blocks(block, ["_blk"], 0.5).collect()
     assert [(r.id_a, r.id_b) for r in kept] == [(0, 1)]
+    sided = block.withColumn("_a", F.col("_vid") == 0)
+    kept = similarity._verify_within_blocks(sided, ["_blk"], 0.5, side="_a").collect()
+    assert [(r.id_a, r.id_b) for r in kept] == [(0, 1)]
 
 
-def test_pair_dot_mixed_lengths_across_rows():
-    """Equal-length pairs of DIFFERENT lengths in one batch each get
-    the exact fold (one vstack per length, not one per batch)."""
-    va = pd.Series([np.array([1.0, 2.0]), np.array([1.0, 2.0, 3.0]), None])
-    vb = pd.Series([np.array([3.0, 4.0]), np.array([1.0, 1.0, 1.0]), np.array([1.0])])
-    got = pyudf.pair_dot.func(va, vb)
-    assert got[:2].tolist() == [11.0, 6.0] and np.isnan(got[2])
+def test_verify_cosine_mixed_lengths_across_rows():
+    """Equal-length pairs of DIFFERENT lengths in one call each get the
+    exact fold (one stack per length), on both shapes."""
+    a = (np.array([0, 1]), _objects([1.0, 2.0], [1.0, 2.0, 3.0]))
+    b = (np.array([2, 3, 4]), _objects([3.0, 4.0], [1.0, 1.0, 1.0], [1.0]))
+    got = {(i, j): d for ia, ib, d, _, _ in pyudf.verify_cosine(a, b, -np.inf)
+           for i, j, d in zip(ia.tolist(), ib.tolist(), d.tolist())}
+    assert got == {(0, 2): 11.0, (1, 3): 6.0}
+    both = (np.concatenate([a[0], b[0]]), np.concatenate([a[1], b[1]]))
+    got = {(i, j): d for ia, ib, d, _, _ in pyudf.verify_cosine(both, None, -np.inf)
+           for i, j, d in zip(ia.tolist(), ib.tolist(), d.tolist())}
+    assert got == {(0, 2): 11.0, (1, 3): 6.0}
 
 
 def test_topn_stable_equals_stable_sort():

@@ -721,13 +721,15 @@ def _sorted_rows(df):
 
 
 def _verified_pairs(pairs, threshold):
-    """The deleted pair-join verify tail: ``pair_dot`` over (id_a, _va,
-    _na, id_b, _vb, _nb) candidate rows, filtered at the unrounded
-    threshold."""
-    sim = similarity._pair_sim(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
+    """Reference verify of (id_a, _va, _na, id_b, _vb, _nb) candidate
+    rows: the JVM ``similarity.dot`` fold over the JVM norms, filtered at
+    the unrounded threshold.  A NaN element folds to a NaN ``sim``, which
+    passes ``>=`` in Spark; the blocked kernel drops that pair, so the
+    reference drops it explicitly."""
+    sim = similarity.dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     return _sorted_rows(
         pairs.withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
+        .filter(~F.isnan("sim") & (F.col("sim") >= threshold))
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )
 
@@ -748,7 +750,7 @@ def _base(emb, *extra):
 def _band_join_dups(emb, bands, threshold):
     """Reference: LSH as it was verified before the blocked kernel — a
     band self-join, ``distinct`` candidate pairs, two id-keyed vector
-    joins and ``pair_dot``."""
+    joins and the fold verify."""
     base = _base(emb)
     cand = base.select(
         "_vid", F.posexplode(similarity.srp_signature_array(F.col("_v"), bands)).alias("_band", "_sig")
@@ -762,7 +764,7 @@ def _band_join_dups(emb, bands, threshold):
 
 def _salted_join_dups(emb, threshold, salts=4):
     """Reference: label-blocked exact as it was verified before the
-    blocked kernel — a self-join on (block, salt) and ``pair_dot``."""
+    blocked kernel — a self-join on (block, salt) and the fold verify."""
     base = _base(emb, F.col("label").alias("_blk"))
     a = base.select("_blk", F.pmod(F.xxhash64("_vid"), F.lit(salts)).alias("_salt"), *_side("a"))
     b = base.select(
@@ -890,6 +892,106 @@ def test_blocked_verify_zero_norm_divides_like_pair_join(spark, op):
             run()
 
 
+def _cells_join_tail(corp, corpus_cells, shard, cells, threshold):
+    """Reference: the ingest tail as it was verified before the two-sided
+    blocked kernel — a cell-keyed candidate join, ``distinct``, a
+    left-semi corpus prune, two vector joins and the fold verify."""
+    cand = (
+        shard.select(F.col("_vid").alias("id_a"), F.explode(cells).alias("_cell"))
+        .join(corpus_cells.select("_cell", F.col("_vid").alias("id_b")), "_cell")
+        .where("id_a != id_b")
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    corp_sub = corp.join(cand.select(F.col("id_b").alias("_vid")).distinct(), "_vid", "left_semi")
+
+    def normed(df, tag):
+        return df.select("_vid", "_v", similarity.l2norm(F.col("_v")).alias("_n")).select(*_side(tag))
+
+    pairs = cand.join(normed(shard, "a"), "id_a").join(normed(corp_sub, "b"), "id_b")
+    return _verified_pairs(pairs, threshold)
+
+
+@pytest.mark.parametrize("sf", [SF_TINY, SF_SMALL], ids=["sf0.001", "sf0.01"])
+def test_ingest_tail_equals_cell_join(spark, sf, monkeypatch):
+    """IVF, IMI and SRP ingest, verified shard × corpus in one blocked
+    pass, emit the rows of the candidate-join tail they replaced, bit for
+    bit."""
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    cut = int(emb.count() * 0.9)
+    corpus = emb.where(F.col("vec_id") < cut)
+    shard = emb.where(F.col("vec_id") >= cut)
+    corp = corpus.select(F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v"))
+    cents = similarity.ivf_train(corp, cut, n_centroids=8, num_iter=2)
+    halves = similarity.imi_train(corp, cut, k1=4, k2=4, num_iter=1, dim=64)
+    idx = similarity.srp_band_index(corpus, n_bands=8, bits=6, dim=64)
+    calls = []
+    real = similarity._incremental_cells_pairs
+    monkeypatch.setattr(
+        similarity, "_incremental_cells_pairs", lambda *a: calls.append(a) or real(*a)
+    )
+    ops = {
+        "ivf": lambda t: similarity.incremental_ivf_dups(corpus, shard, t, nprobe=2, centroids=cents),
+        "imi": lambda t: similarity.incremental_imi_dups(corpus, shard, t, dim=64, centroids=halves),
+        "srp": lambda t: similarity.incremental_srp_dups(corpus, shard, t, dim=64, index=idx),
+    }
+    for t in (0.2, 0.4, 0.9):
+        for op, run in ops.items():
+            got = _sorted_rows(run(t))
+            assert got == _cells_join_tail(*calls[-1]), (op, t)
+            assert t == 0.9 or got, (op, t)
+
+
+def test_ingest_tail_edge_rows_equal_cell_join(spark):
+    """Two-sided edge rows: a NULL or ragged vector and a NaN element are
+    dropped, the same id on both sides is no pair, and two rows of one
+    side are never compared, as the candidate-join tail verified them; a
+    zero norm product on either side raises."""
+    corp = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [1.0, 0.1, 0.0]),
+            (2, None),
+            (3, [1.0, 0.0]),  # ragged
+            (4, [1.0, _NAN, 0.0]),
+            (10, [1.0, 0.02, 0.0]),  # also a shard id
+            (20, [1.0, 0.0, 0.0]),  # in a cell no shard row probes
+        ],
+        "_vid long, _v array<float>",
+    )
+    corpus_cells = spark.createDataFrame(
+        [(i, 1) for i in (0, 1, 2, 3, 4, 5, 10)] + [(20, 2)], "_vid long, _cell long"
+    )  # id 5 joins a corpus vector only in the zero-norm run below
+    shard = spark.createDataFrame(
+        [
+            (10, [1.0, 0.05, 0.0], [1]),
+            (11, [1.0, 0.04, 0.0], [1]),
+            (12, None, [1]),
+            (13, [1.0, 0.0], [1]),  # ragged against the cell's dim
+            (14, [_NAN, 1.0, 0.0], [1]),
+            (15, [1.0, 0.0, 0.0], [3]),  # probes a cell with no corpus row
+        ],
+        "_vid long, _v array<float>, _cells array<long>",
+    )
+
+    def tail(corp, shard):
+        return similarity._incremental_cells_pairs(corp, corpus_cells, shard, F.col("_cells"), 0.5)
+
+    got = _sorted_rows(tail(corp, shard))
+    assert got == _cells_join_tail(corp, corpus_cells, shard, F.col("_cells"), 0.5)
+    assert [r[:2] for r in got] == [(10, 0), (10, 1), (11, 0), (11, 1), (11, 10), (13, 3)]
+    zero = [0.0, 0.0, 0.0]
+    runs = (
+        (corp.union(spark.createDataFrame([(5, zero)], corp.schema)), shard),
+        (corp, shard.union(spark.createDataFrame([(16, zero, [1])], shard.schema))),
+    )
+    for c, s in runs:
+        for run in (lambda: tail(c, s).collect(),
+                    lambda: _cells_join_tail(c, corpus_cells, s, F.col("_cells"), 0.5)):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                run()
+
+
 @pytest.mark.parametrize("op", ["lsh", "exact", "ivf"])
 def test_dup_operators_plan_is_one_blocked_pass(spark, emb, op):
     """Each batch dup operator verifies in one ``mapInPandas`` pass: no
@@ -992,6 +1094,20 @@ def test_python_udfs_evaluate_once_per_plan(spark):
         if audit.double_evaluated(plan):
             doubled[name] = audit.double_evaluated(plan)
     assert doubled == {}
+
+
+def test_ingest_tail_python_nodes(spark):
+    """The s26 ingest plan on sf0.001 runs no pair UDF: its Python
+    nodes are the blocked verify's one ``MapInPandas`` and the shard's
+    cell UDF, which runs in two ``ArrowEvalPython`` nodes because the
+    shard cells feed both the verify's union and the broadcast probe of
+    the corpus left-semi, with no exchange shared between them."""
+    import __spark_entry__ as E
+
+    plan = E.queries()["s26_incremental_ivf_dups"](spark, SF_TINY)._jdf.queryExecution().executedPlan().toString()
+    nodes = _python_audit().python_nodes(plan)
+    assert sorted(n for n, _ in nodes) == ["ArrowEvalPython", "ArrowEvalPython", "MapInPandas"]
+    assert all(c.startswith("_cells(") for _, calls in nodes for c in calls)
 
 
 def test_incremental_ivf_equals_batch_cross_cut(spark, emb):
@@ -2335,29 +2451,44 @@ def test_srp_band_index_sized_construction_roundtrips(spark, emb, tmp_path):
         similarity.srp_band_index(corpus, threshold=0.4, max_bands=1)
 
 
+def _fold_cross_join(corpus, shard, threshold, id_col="vec_id", vec_col="embedding"):
+    """Reference: the exact leg as the JVM fold verified it — the
+    broadcast shard cross-joined with the corpus, ``similarity.dot`` over
+    the JVM norms, a NaN ``sim`` dropped (the kernel drops it)."""
+    def side(df, vid, v, n):
+        return df.select(
+            F.col(id_col).alias(vid), F.col(vec_col).alias(v), similarity.l2norm(F.col(vec_col)).alias(n)
+        )
+
+    sim = similarity.dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    return (
+        side(corpus, "corpus_id", "_vb", "_nb")
+        .crossJoin(F.broadcast(side(shard, "new_id", "_va", "_na")))
+        .filter(F.col("new_id") != F.col("corpus_id"))
+        .withColumn("sim", sim)
+        .filter(~F.isnan("sim") & (F.col("sim") >= threshold))
+        .select("new_id", "corpus_id", F.round("sim", 6).alias("sim"))
+    )
+
+
+def _repr_rows(df):
+    return sorted((r["new_id"], r["corpus_id"], repr(r["sim"])) for r in df.collect())
+
+
 def test_incremental_exact_dups_is_bruteforce_and_shuffle_free(spark, emb):
-    """The exact guaranteed leg: pairs equal the brute-force definition
-    (knn-style full verify) on BOTH execution paths, bitwise; the
-    default (vectorized) plan is map-only — one corpus scan through a
-    MapInPandas BLAS stage, no join, no hash exchange — and the
-    ``vectorized=False`` path keeps the plan-transparent broadcast
-    nested-loop shape with no hash exchange either."""
+    """The exact guaranteed leg: pairs equal the JVM fold cross join
+    bitwise and the brute-force definition; the plan is map-only — one
+    corpus scan through one MapInPandas BLAS stage, no join, no hash
+    exchange."""
     cut = int(emb.count() * 0.9)
     corpus = emb.where(F.col("vec_id") < cut)
     shard = emb.where(F.col("vec_id") >= cut)
-    fold = similarity.incremental_exact_dups(
-        corpus, shard, threshold=0.4, vectorized=False
-    )
-    fold_plan = fold._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in fold_plan
-    assert "Exchange hashpartitioning" not in fold_plan
     df = similarity.incremental_exact_dups(corpus, shard, threshold=0.4)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
+    assert plan.count("MapInPandas") == 1
     assert "Join" not in plan  # map-only: the matmul replaced the BNLJ
     assert "Exchange hashpartitioning" not in plan
-    key = lambda r: (r["new_id"], r["corpus_id"], repr(r["sim"]))
-    assert sorted(map(key, fold.collect())) == sorted(map(key, df.collect()))
+    assert _repr_rows(_fold_cross_join(corpus, shard, 0.4)) == _repr_rows(df)
     got = sorted((r["new_id"], r["corpus_id"], r["sim"]) for r in df.collect())
     rows = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     import math
@@ -2378,11 +2509,10 @@ def test_incremental_exact_dups_is_bruteforce_and_shuffle_free(spark, emb):
 
 
 def test_incremental_exact_dups_preserves_id_type(spark, emb):
-    """Round-11 advice (medium): the vectorized path hardcoded a
-    ``long`` id schema and int64-coerced ids, so string/UUID ids
-    crashed and the two execution paths forked schemas.  Both paths
-    must now carry the caller's id dtype end to end and agree pairwise
-    on non-integer ids."""
+    """Round-11 advice (medium): the leg once hardcoded a ``long`` id
+    schema and int64-coerced ids, so string/UUID ids crashed.  It must
+    carry the caller's id dtype end to end and agree pairwise with the
+    fold cross join on non-integer ids."""
     cut = int(emb.count() * 0.9)
     sids = emb.select(
         F.concat(F.lit("doc-"), F.col("vec_id").cast("string")).alias("vec_id"),
@@ -2392,22 +2522,55 @@ def test_incremental_exact_dups_preserves_id_type(spark, emb):
     corpus = sids.where(F.col("_n") < cut).drop("_n")
     shard = sids.where(F.col("_n") >= cut).drop("_n")
     vec = similarity.incremental_exact_dups(corpus, shard, threshold=0.4)
-    fold = similarity.incremental_exact_dups(
-        corpus, shard, threshold=0.4, vectorized=False
-    )
+    fold = _fold_cross_join(corpus, shard, 0.4)
     assert dict(vec.dtypes) == {
         "new_id": "string", "corpus_id": "string", "sim": "double",
     }
     assert dict(vec.dtypes) == dict(fold.dtypes)
-    key = lambda r: (r["new_id"], r["corpus_id"], repr(r["sim"]))
-    got = sorted(map(key, vec.collect()))
-    assert got == sorted(map(key, fold.collect())) and got
+    got = _repr_rows(vec)
+    assert got == _repr_rows(fold) and got
     assert all(k[0].startswith("doc-") for k in got)
-    # the empty-shard early return carries the same derived schema
+    # an empty shard gives an empty frame of the same derived schema
     empty = similarity.incremental_exact_dups(
         corpus, shard.where(F.lit(False)), threshold=0.4
     )
     assert dict(empty.dtypes) == dict(vec.dtypes) and empty.count() == 0
+
+
+def test_incremental_exact_dups_edge_rows(spark):
+    """The exact leg follows the blocked kernel's row contract on both
+    sides: a NULL id, a NULL vector and a ragged vector are dropped (the
+    fold cross join drops them too), a NaN element drops its pairs, and
+    the same id on both sides is no pair; a zero norm product raises."""
+    corpus = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [1.0, 0.1, 0.0]),
+            (2, None),
+            (3, [1.0, 0.0]),  # ragged
+            (4, [1.0, _NAN, 0.0]),
+            (None, [1.0, 0.0, 0.0]),
+            (10, [0.9, 0.1, 0.0]),  # id also in the shard
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    shard = spark.createDataFrame(
+        [
+            (10, [1.0, 0.05, 0.0]),
+            (11, None),
+            (12, [1.0, 0.0]),  # ragged against the corpus dim
+            (13, [_NAN, 1.0, 0.0]),
+            (None, [1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    got = _repr_rows(similarity.incremental_exact_dups(corpus, shard, threshold=0.5))
+    assert got == _repr_rows(_fold_cross_join(corpus, shard, 0.5))
+    assert [r[:2] for r in got] == [(10, 0), (10, 1), (12, 3)]
+    zero = spark.createDataFrame([(20, [0.0, 0.0, 0.0])], "vec_id long, embedding array<float>")
+    for c, s in ((corpus.union(zero), shard), (corpus, shard.union(zero))):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            similarity.incremental_exact_dups(c, s, threshold=0.5).collect()
 
 
 def _two_cluster_drift_fixture(spark):
@@ -2628,19 +2791,18 @@ def test_router_prices_srp_from_measured_occupancy(spark, emb):
 def test_exact_leg_shard_size_guard(spark, emb):
     """The exact leg materializes the shard driver-side by design; a
     corpus passed as the 'shard' must fail loudly with a routing
-    pointer BEFORE the collect, on both execution paths — and the cap
+    pointer BEFORE the collect — and the cap
     is overridable for drivers that really have the memory."""
     import pytest as _pytest
 
     cut = int(emb.count() * 0.9)
     corpus = emb.where(F.col("vec_id") < cut)
     shard = emb.where(F.col("vec_id") >= cut)
-    for vec in (True, False):
-        with _pytest.raises(ValueError, match="broadcast ceiling"):
-            similarity.incremental_exact_dups(
-                corpus, shard, threshold=0.4, vectorized=vec,
-                max_shard_bytes=64,  # force the over-cap branch
-            )
+    with _pytest.raises(ValueError, match="broadcast ceiling"):
+        similarity.incremental_exact_dups(
+            corpus, shard, threshold=0.4,
+            max_shard_bytes=64,  # force the over-cap branch
+        )
     # at the real default the daily slice sails through
     assert similarity.incremental_exact_dups(
         corpus, shard, threshold=0.4

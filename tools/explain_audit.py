@@ -68,12 +68,6 @@ NL_ALLOWED = {
     # (same 1-row-gauge cross joins as above) with the Hamming tier's
     # 1-row policy aggregates (identity + persisted-layout rows) —
     # constant sides, 3-row output
-    "s34_exact_guaranteed_route",  # the exact guaranteed leg: since the
-    # round-11 vectorization its default plan is map-only (MapInPandas
-    # BLAS, no join node at all); the allowance remains for the
-    # vectorized=False fold path, whose DELIBERATE BroadcastNestedLoop
-    # broadcasts the daily SHARD slice (200 rows at sf0.1) against one
-    # corpus scan — the measured cap verifies the shard stays a shard
     "x75_fk_integrity_audit",  # five 1-row orphan-count aggregates
     # cross-joined into five 1-row report rows — all constant sides
     "m10_cutmix_plan",  # 1-row image-count broadcast into the partner
