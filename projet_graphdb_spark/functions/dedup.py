@@ -8,16 +8,17 @@ Scale design notes (the point of each variant):
   inside small blocks (e.g. a language or source partition).  Quadratic
   only within a block; the self-join shuffles on the block key, so block
   sizing is the scale knob.
-* ``minhash_lsh_pairs`` — the sub-quadratic scale path: shingle →
-  MinHash signature (relational min-aggregate, map-side combined) →
-  banded LSH bucket join (id-only shuffle on band hash) → exact
-  verification of candidates.  100 TB-safe: cost is O(corpus) +
-  O(candidate pairs), never all-pairs.
+* ``minhash_lsh_pairs`` — the sub-quadratic scale path, one lazy plan:
+  hashed shingles (JVM) → MinHash signatures (one Arrow ``mapInArrow``
+  pass) → band keys (JVM) → one exchange on the band key → a streaming
+  Jaccard verify inside each bucket.  100 TB-safe: cost is O(corpus ×
+  bands) + O(bucket pairs), never all-pairs.
 * ``simhash64`` — 64-bit near-dup fingerprint; hamming-close fingerprints
   ≈ similar docs.  Map-only signature; pairing via band join on nibbles.
 
-All signatures use built-in hash functions (xxhash64/crc32) inside
-whole-stage codegen — no Python in the hot path.
+Shingle and band hashes are JVM built-ins (xxhash64, md5).  Python runs
+only the Arrow-batched MinHash signature and bucket-verify passes of
+the MinHash-LSH path (``pyudf.minhash_sigs``, ``pyudf.verify_jaccard``).
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .materialize import materialize
+from .pyudf import MASK31
 from .text import fingerprint
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -43,25 +45,38 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the text (array<string>).
+    """Distinct word n-gram shingles of the text (array<string>): see
+    :func:`shingles_of_tokens`.
 
     NOTE: higher-order functions are CodegenFallback (interpreted) in
     Spark, and interpreted lambdas re-evaluate captured subtrees per
-    element — referencing this whole expression inside another lambda
-    re-runs the split per shingle.  Prefer ``shingle_frame`` which
-    materializes tokens/shingles behind checkpoints.
+    element.  This expression's one lambda captures only its element,
+    so nothing is split per element, but its arguments read the tokens
+    six times and split six times per row; frame-level callers use
+    ``_shingle_select``, which splits once.  A caller's lambda that
+    captures the whole expression re-runs it per element: such callers
+    use ``shingle_frame``, whose barrier makes ``_sh`` a plain attribute.
     """
     return shingles_of_tokens(F.split(F.trim(text), r"\s+"), text, n)
 
 
 def shingles_of_tokens(toks: Column, text: Column, n: int) -> Column:
-    # slide an n-window over token positions; empty text → empty array
+    """The distinct n-token windows of ``toks`` joined by single spaces,
+    as ``n`` zipped slices ``slice(toks, j + 1, k)`` (``j < n``, ``k =
+    max(size(toks) − n + 1, 1)``): a row of fewer than ``n`` tokens
+    gives one shingle of all of them, because ``arrays_zip`` pads the
+    short slices with NULLs and ``concat_ws`` skips them.  No lambda
+    captures ``toks``.  Text that is NULL or empty after ``trim`` gives
+    an empty array, as the DuckDB oracle's ``_SHINGLES`` does."""
+    k = F.greatest(F.size(toks) - n + 1, F.lit(1))
+    grams = F.arrays_zip(*[F.slice(toks, j + 1, k) for j in range(n)])
+    fields = [str(j) for j in range(n)]
     return F.array_distinct(
-        F.when(F.length(F.trim(text)) == 0, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-            )
+        F.when(
+            F.coalesce(F.length(F.trim(text)), F.lit(0)) == 0,
+            F.array().cast("array<string>"),
+        ).otherwise(
+            F.transform(grams, lambda g: F.concat_ws(" ", *[g[f] for f in fields]))
         )
     )
 
@@ -74,36 +89,32 @@ def shingle_frame(
     extra_cols: list = (),
     hash_fn=None,
 ) -> DataFrame:
-    """(id, *extra, _sh) with shingles MATERIALIZED (eager checkpoint).
+    """(id, *extra, _sh) with shingles MATERIALIZED: one eager barrier,
+    so ``_sh`` is a plain attribute for callers that capture it in a
+    lambda or read it twice (an interpreted lambda that captured the
+    shingle expression would re-split the text once per element).
 
-    Two stages, each behind a barrier, so that every downstream lambda
-    captures a plain attribute: (1) tokens from one split per row,
-    (2) shingles sliding over the token attribute.  Without the barriers
-    Catalyst collapses the projections and interpreted HOFs re-split the
-    text once per element (quadratic per row, catastrophic when nested).
+    ``hash_fn``: hash each shingle (e.g. ``_hash_fn("md5")``) in the same
+    projection, so ``_sh`` is ``array<long>``; its lambda captures only
+    its own element."""
+    return materialize(_shingle_select(docs, n, text_col, [id_col, *extra_cols], hash_fn))
 
-    ``hash_fn``: fold per-shingle hashing (e.g. ``_hash_fn("md5")``)
-    into the SECOND projection, so callers that only ever consume
-    hashed shingles skip their own third materialization pass — one
-    fewer eager job per call (r16: the streaming ingest path paid that
-    extra pass per MICRO-BATCH).  Safe against the quadratic trap: the
-    outer ``transform``'s input array is evaluated once per row and the
-    hash lambda captures only its own element variable.  ``_sh`` is
-    then ``array<long>`` instead of ``array<string>``."""
-    toks = materialize(docs.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
+
+def _shingle_select(docs: DataFrame, n: int, text_col: str, cols: list, hash_fn=None) -> DataFrame:
+    """``docs.select(*cols, _sh)``, lazily.  The tokens get their own
+    projection: the shingle expression reads them six times, so
+    CollapseProject keeps the split below it and it runs once per row
+    (inlined, the interpreted ``transform``'s arguments would split the
+    text once per read)."""
+    toks = docs.select(
+        *cols,
         F.col(text_col).alias("_txt"),
         F.split(F.trim(F.col(text_col)), r"\s+").alias("_toks"),
-    ))
+    )
     sh = shingles_of_tokens(F.col("_toks"), F.col("_txt"), n)
     if hash_fn is not None:
         sh = F.transform(sh, lambda s: hash_fn(s))
-    return materialize(toks.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra_cols],
-        sh.alias("_sh"),
-    ))
+    return toks.select(*toks.columns[:-2], sh.alias("_sh"))
 
 
 def ngram_jaccard_pairs(
@@ -186,9 +197,6 @@ def ngram_jaccard_pairs(
     )
 
 
-_MASK31 = (1 << 31) - 1
-
-
 def md5_hash60(c: Column) -> Column:
     """60-bit hash from the md5 hex prefix (15 nibbles) — slower than
     xxhash64 but bit-reproducible in any engine with md5(), which is what
@@ -198,20 +206,9 @@ def md5_hash60(c: Column) -> Column:
 
 def _minhash_coeffs(i: int) -> tuple:
     """Deterministic "random" multiply-shift coefficients for hash i."""
-    a = ((2 * i + 1) * 0x9E3779B97F4A7C15) & _MASK31 or 1
-    b = (i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) & _MASK31
+    a = ((2 * i + 1) * 0x9E3779B97F4A7C15) & MASK31 or 1
+    b = (i * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) & MASK31
     return a, b
-
-
-def _perm(h: Column, i: int) -> Column:
-    """Multiply-shift universal hash: bits 29..59 of (a_i*h + b_i), h 31-bit.
-
-    Division-free on purpose: ANSI ``%``/``/`` are an order of magnitude
-    slower than shift/mask (interpreted DivModLike.eval, and overflow
-    checks); operands stay below 2^62, so ANSI never fires.
-    """
-    a, b = _minhash_coeffs(i)
-    return F.shiftright(h * F.lit(a) + F.lit(b), 29).bitwiseAND(F.lit(_MASK31))
 
 
 def minhash_signatures(
@@ -220,40 +217,44 @@ def minhash_signatures(
     id_col: str = "_did",
     sh_col: str = "_sh",
 ) -> DataFrame:
-    """MinHash signatures computed RELATIONALLY: explode (doc, shingle-hash)
-    postings, then one hash-aggregate with ``num_hashes`` ``min`` columns.
+    """MinHash signatures in one Arrow pass: a ``mapInArrow`` over the
+    ``list<long>`` shingle column's offsets and values, one
+    ``np.minimum.reduceat`` per hash (``pyudf.minhash_sigs``, the
+    multiply-shift family of :func:`_minhash_coeffs` — division-free,
+    operands below 2^62).  A row with a NULL or empty shingle set emits
+    no row.
 
-    Every expression is whole-stage codegen (no interpreted higher-order
-    lambdas — those were ~3× slower here), and partial aggregation
-    (map-side combine) reduces each doc to ``num_hashes`` longs *before*
-    the shuffle — shuffle volume is O(docs · num_hashes · 8 bytes)
-    regardless of document length, the property that matters at 100 TB.
+    Output: (id_col, sh_col, m0..m{num_hashes-1}), the input's two
+    columns carried through."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    Output: (id_col, m0..m{num_hashes-1}).
-    """
-    post = hashed_shingles.select(
-        F.col(id_col), F.explode(sh_col).alias("_h")
-    ).withColumn("_h31", F.col("_h").bitwiseAND(F.lit(_MASK31)))
-    return post.groupBy(id_col).agg(*_minhash_agg_cols(num_hashes))
-
-
-def minhash_signature_of_shingles(sh: Column, num_hashes: int = 32) -> Column:
-    """Column-expression MinHash signature (array<long>) over a
-    MATERIALIZED shingle array — same hash family as
-    ``minhash_signatures``.  Kept for per-row use; the relational form
-    is the fast path (HOF lambdas are interpreted, and each part
-    re-evaluates its captured subtree, so ``sh`` must be an attribute).
-    """
-    hashes = F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MASK31)))
-
-    def perm_fn(i: int):
-        # factory closure: PySpark inspects lambda arity, so the hash
-        # index must NOT appear as a (defaulted) lambda parameter
-        return lambda h: _perm(h, i)
-
-    return F.array(
-        *[F.array_min(F.transform(hashes, perm_fn(i))) for i in range(num_hashes)]
+    coeffs = [_minhash_coeffs(i) for i in range(num_hashes)]
+    inp = hashed_shingles.select(id_col, sh_col)
+    schema = StructType(
+        list(inp.schema.fields)
+        + [StructField(f"m{i}", LongType()) for i in range(num_hashes)]
     )
+    names = schema.fieldNames()
+
+    def sigs(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .pyudf import minhash_sigs
+
+        for batch in batches:
+            size = pc.list_value_length(batch.column(sh_col))
+            batch = batch.filter(pc.fill_null(pc.greater(size, 0), False))
+            if batch.num_rows == 0:
+                continue
+            sh = batch.column(sh_col)
+            off = sh.offsets.to_numpy()
+            sig = minhash_sigs(off - off[0], sh.flatten().to_numpy(), coeffs)
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, *(pa.array(c) for c in sig.T)], names=names
+            )
+
+    return inp.mapInArrow(sigs, schema)
 
 
 def _hash_fn(hash: str):
@@ -264,28 +265,16 @@ def _hash_fn(hash: str):
     raise ValueError(f"unknown hash {hash!r}")
 
 
-# Memoized unresolved Column trees (r16): building the 32-hash MinHash
-# aggregate / band-explode expressions costs ~100s of py4j round trips
-# (~0.3-0.9 s of pure driver time) and is a pure function of the
-# config, so each tree is built once per process and reused — Column
+# Memoized unresolved Column trees (r16): building the band-explode
+# expression costs ~100s of py4j round trips (~0.3-0.9 s of pure
+# driver time) and is a pure function of the config, so each tree is
+# built once per process and reused — Column
 # objects are unresolved expression templates, reusable across any
 # DataFrame/plan in the same JVM gateway.  This is EXPRESSION reuse,
 # not data caching: no row, file, or result is held.  The streaming
 # ingest drain previously paid the full construction once per
 # MICRO-BATCH; the d-family pays it once per query.
 _EXPR_CACHE: dict = {}
-
-
-def _minhash_agg_cols(num_hashes: int) -> list:
-    key = ("mh_agg", num_hashes)
-    cols = _EXPR_CACHE.get(key)
-    if cols is None:
-        cols = [
-            F.min(_perm(F.col("_h31"), i)).alias(f"m{i}")
-            for i in range(num_hashes)
-        ]
-        _EXPR_CACHE[key] = cols
-    return cols
 
 
 def _band_explode_col(num_hashes: int, bands: int, band_hash):
@@ -348,59 +337,56 @@ def minhash_shared(
     hash: str = "xxhash64",
     checkpoint_sig: bool = True,
 ) -> tuple:
-    """``(hashed-shingle base, signature frame)`` pair for
-    ``minhash_lsh_pairs`` — compute once, reuse across several band
-    configurations (d23's sensitivity sweep runs bands ∈ {4,8,16} over
-    the SAME signatures; without sharing, the shingle + 32-min-hash
-    aggregate — the dominant cost — is paid per setting).
+    """``(base, sig, config)`` for ``minhash_lsh_pairs`` — compute once,
+    reuse across several band configurations (d23's sensitivity sweep
+    runs bands ∈ {4,8,16} over the SAME signatures) and across the two
+    legs of :func:`ingest_dedup_decisions`.
 
-    ``checkpoint_sig``: materialize the signature frame (docs ×
-    num_hashes longs — tiny) so re-banding replays nothing.  A
-    single-config caller should pass False: the extra checkpoint job
-    buys nothing when the signatures feed exactly one band explode.
+    ``sig`` is the one signature frame (_did, _sh, m0..): the text's
+    hashed shingles (:func:`_shingle_select`, JVM) through
+    :func:`minhash_signatures` (one Arrow pass); ``base`` is its
+    (_did, _sh) projection, so a document with no shingle (NULL or
+    empty text) is in neither.
 
-    Returns ``(base, sig, config)`` where ``config`` records the
-    (num_hashes, n, hash) the frames were built with —
-    ``minhash_lsh_pairs`` asserts it against its own parameters, so a
-    mismatched reuse (sig built with 32 hashes, caller banding for 16)
-    fails loudly instead of slicing band keys from the wrong signature
-    layout."""
-    sh_hash = _hash_fn(hash)
-    # hashed shingle set, kept for the exact-verification step (long
-    # arrays intersect much faster than string arrays).  Hashing is
-    # folded into shingle_frame's second materialization (hash_fn=), so
-    # the old third checkpoint pass is gone (r16: one fewer eager job —
-    # per MICRO-BATCH on the streaming ingest path); both consumers
-    # (signature aggregate, verify) still read one materialized frame
-    # through the trivial rename projection.
-    base = shingle_frame(docs, n, id_col, text_col, hash_fn=sh_hash).select(
-        F.col(id_col).alias("_did"), "_sh"
-    )
-    sig = minhash_signatures(base, num_hashes)
+    ``checkpoint_sig``: materialize ``sig`` (one barrier, shingles
+    included) so several consumers replay nothing.  A single-config
+    caller passes False and the frames stay one lazy plan.
+
+    ``config`` records the (num_hashes, n, hash, text_col, id_col) the
+    frames were built with — ``minhash_lsh_pairs`` asserts it against
+    its own parameters, so a mismatched reuse (sig built with 32
+    hashes, caller banding for 16) fails loudly instead of slicing band
+    keys from the wrong signature layout."""
+    did = [F.col(id_col).alias("_did")]
+    sig = minhash_signatures(_shingle_select(docs, n, text_col, did, _hash_fn(hash)), num_hashes)
     if checkpoint_sig:
         sig = materialize(sig)
     # config records the COLUMN layout too (round-7 advice): a shared
     # tuple built from a different id/text column silently hashes the
     # wrong corpus; the assert in minhash_lsh_pairs must catch that.
-    return base, sig, {
+    return sig.select("_did", "_sh"), sig, {
         "num_hashes": num_hashes, "n": n, "hash": hash,
         "text_col": text_col, "id_col": id_col,
     }
 
 
-def _band_frame(sig: DataFrame, num_hashes: int, bands: int, band_hash) -> DataFrame:
-    """(_did, band, bhash) from a signature frame — the slim banded key
-    shared by the self-join path (:func:`minhash_lsh_pairs`) and the
+def _band_frame(
+    sig: DataFrame, num_hashes: int, bands: int, band_hash, carry: tuple = ()
+) -> DataFrame:
+    """(_did, *carry, band, bhash) from a signature frame, one row per
+    document per band — the band key of the bucket verify
+    (:func:`minhash_lsh_pairs`, which carries ``_sh``) and of the
     persisted-index incremental path (:func:`lsh_band_index` /
-    :func:`incremental_lsh_dups`).  The band key is a pure per-document
-    function of the signature, so two frames banded with the same
-    (num_hashes, bands, hash) collide identically regardless of which
-    corpus they came from — the property that makes the index reusable
-    across ingest batches."""
+    :func:`incremental_lsh_dups`).  ``bhash`` hashes the band's
+    comma-joined signature slice on the JVM (md5 or xxhash64), so it is
+    a pure per-document function of the signature: two frames banded
+    with the same (num_hashes, bands, hash) collide identically
+    regardless of which corpus they came from — the property that makes
+    the index reusable across ingest batches."""
     return sig.select(
-        F.col("_did"),
+        "_did", *carry,
         _band_explode_col(num_hashes, bands, band_hash).alias("_b"),
-    ).select("_did", F.col("_b.band").alias("band"), F.col("_b.bhash").alias("bhash"))
+    ).select("_did", *carry, F.col("_b.band").alias("band"), F.col("_b.bhash").alias("bhash"))
 
 
 def lsh_band_index(
@@ -651,9 +637,12 @@ def incremental_lsh_dups(
                 f"minhash_shared(**matching params)"
             )
     else:
-        nb_base, nb_sig, _ = minhash_shared(
-            new_batch, num_hashes, n, text_col, id_col, hash, checkpoint_sig=False
+        # lazy and barrier-free: the verify leg re-runs the JVM shingle
+        # projection instead of a second signature pass
+        nb_base = _shingle_select(
+            new_batch, n, text_col, [F.col(id_col).alias("_did")], sh_hash
         )
+        nb_sig = minhash_signatures(nb_base, num_hashes)
     cand = (
         _band_frame(nb_sig, num_hashes, bands, band_hash)
         .select(F.col("_did").alias("new_id"), "band", "bhash")
@@ -775,8 +764,14 @@ def minhash_lsh_pairs(
     hash: str = "xxhash64",
     shared: tuple | None = None,
 ) -> DataFrame:
-    """Sub-quadratic near-dup pairs: MinHash signatures → banded LSH
-    bucket join → exact Jaccard verification of candidates only.
+    """Sub-quadratic near-dup pairs in one lazy plan with no join and no
+    barrier: text → hashed shingles (JVM) → signatures (one Arrow pass,
+    :func:`minhash_signatures`) → band keys (JVM, :func:`_band_frame`)
+    → one ``(band, bhash)`` exchange and sort → a streaming
+    bucket-local Jaccard verify (``similarity._blocked_map`` with
+    ``pyudf.verify_jaccard``) → ``distinct``.  Each document's hashed
+    shingles travel once per band, so no candidate pair is shuffled and
+    no shingle set is fetched back by id.
 
     ``hash``: ``xxhash64`` (the 100 TB default — fastest JVM hash) or
     ``md5`` (60-bit md5-prefix shingle/band hashes — slower but
@@ -792,14 +787,22 @@ def minhash_lsh_pairs(
     is given, ``docs`` is ignored: the tuple already embodies the
     corpus.
 
+    Ids must be unique: an id repeated in a bucket is verified once per
+    row, and ``distinct`` keeps one row per distinct (id_a, id_b,
+    jaccard).  A document with NULL or empty text has no signature and
+    pairs with nothing.
+
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    band_hash = _hash_fn(hash)
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from .similarity import _blocked_map
+
     if shared is not None:
         # NOTE: `docs` is unused on this path — the shared tuple IS the
         # corpus (hashed shingles + signatures); only the banding and
         # verification parameters of THIS call apply.
-        base, sig, cfg = shared
+        _, sig, cfg = shared
         want = {
             "num_hashes": num_hashes, "n": n, "hash": hash,
             "text_col": text_col, "id_col": id_col,
@@ -811,35 +814,31 @@ def minhash_lsh_pairs(
                 f"minhash_shared(**matching params)"
             )
     else:
-        # single-config path: leave sig lazy so it fuses into the band
-        # explode below (pre-refactor behavior — no extra job)
-        base, sig, _ = minhash_shared(
+        _, sig, _ = minhash_shared(
             docs, num_hashes, n, text_col, id_col, hash, checkpoint_sig=False
         )
-    # band key: (band index, hash of that band's signature slice).  The
-    # banded frame is SLIM — (doc, band, bhash) only: carrying the
-    # shingle arrays through an 8-way explode + self-join shuffle would
-    # multiply shuffle volume by ~2·bands; instead candidates re-attach
-    # shingles from `base` after the (cheap) id-only bucket join.
-    banded = _band_frame(sig, num_hashes, bands, band_hash)
+    rows = _band_frame(sig, num_hashes, bands, _hash_fn(hash), carry=("_sh",))
+    id_type = sig.schema["_did"].dataType
+    schema = StructType([
+        StructField("id_a", id_type), StructField("id_b", id_type),
+        StructField("jaccard", DoubleType()),
+    ])
 
-    a = banded.select("band", "bhash", F.col("_did").alias("id_a"))
-    b = banded.select("band", "bhash", F.col("_did").alias("id_b"))
-    cand = (
-        a.join(b, on=["band", "bhash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()  # same pair can collide in several bands
-    )
-    pairs = cand.join(
-        base.select(F.col("_did").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
-    ).join(base.select(F.col("_did").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-    return pairs.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
+    def verify(pieces, sizes):
+        import pyarrow as pa
+
+        from .pyudf import verify_jaccard
+
+        blocks = pa.Table.from_batches(pieces)
+        sh = blocks.column("_sh").combine_chunks()
+        off = sh.offsets.to_numpy()
+        return list(verify_jaccard(
+            blocks.column("_did").to_numpy(), off - off[0], sh.flatten().to_numpy(),
+            sizes, threshold,
+        ))
+
+    # a pair colliding in several bands is verified in each
+    return _blocked_map(rows, ["band", "bhash"], ["_did", "_sh"], verify, schema, arrow=True).distinct()
 
 
 def simhash_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -848,10 +847,11 @@ def simhash_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 
     Per-bit majority vote of shingle hashes: bit b of the result is 1
     iff sum over shingles of (+1 if hash bit b set else -1) > 0.
-    Computed relationally like ``minhash_signatures``: explode postings,
-    one hash-aggregate with per-bit codegen'd sum columns (map-side
-    combined — shuffle is one long per bit per doc), then recombine the
-    votes.  A nested-HOF formulation was interpreted and ~3× slower.
+    Computed relationally: explode postings, one hash-aggregate with
+    per-bit codegen'd sum columns (map-side combined — shuffle is one
+    long per bit per doc), then recombine the votes.  A nested-HOF
+    formulation was interpreted and ~3× slower.  A document with no
+    shingle (NULL or empty text) has no row.
 
     ``hash``: ``xxhash64`` (64-bit, the 100 TB default — fastest JVM
     hash) or ``md5`` (60 bits from the md5 hex prefix — slower but

@@ -114,6 +114,133 @@ def verify_cosine(a, b, floor):
             yield ids_a[i], ids_b[j], seq_rowdot(A[i], B[j]), na[i], nb[j]
 
 
+def ranges(starts, counts):
+    """The concatenated index ranges ``[s, s + c)`` for each ``(s, c)``."""
+    import numpy as np
+
+    counts = np.asarray(counts, dtype=np.int64)
+    firsts = np.cumsum(counts) - counts
+    return np.repeat(np.asarray(starts, dtype=np.int64) - firsts, counts) + np.arange(counts.sum())
+
+
+def stream_blocks(frames, cut, block):
+    """The blocked kernel's carry loop (``similarity._blocked_map``).
+    ``frames`` yields ``(keys, payload)`` per input batch, rows sorted by
+    the block key: ``keys`` a list of equal-length key arrays.  A block
+    is a run of equal keys (NaN equals NaN, as in Spark's grouping) and
+    may span batches: the open block's pieces ``cut(payload, rows)`` are
+    carried from one batch to the next.
+
+    Once per batch, ``block(pieces, sizes)`` gets every block of two
+    rows or more that closed in it: the pieces, concatenated, are
+    ``len(sizes)`` consecutive blocks of those sizes (the carried block
+    first, then one cut of the batch's inner blocks).  A one-row block
+    inside a batch is never cut.  Yields once after each batch and once
+    at the end, so the caller can flush what ``block`` produced."""
+    import numpy as np
+    import pandas as pd
+
+    held, n_held, last = [], 0, None  # the open block; the previous batch's keys
+    for keys, payload in frames:
+        n = len(keys[0])
+        if n == 0:
+            continue
+        new = np.zeros(n, bool)  # row i starts a block
+        new[0] = last is None
+        for k, p in zip(keys, last or keys):
+            prev = np.concatenate([p[-1:], k[:-1]])
+            new |= (k != prev) & ~(pd.isna(k) & pd.isna(prev))
+        bounds = np.concatenate([[0], np.flatnonzero(new[1:]) + 1, [n]])
+        sizes = np.diff(bounds)
+        last = keys
+        if not new[0]:  # the open block goes on
+            held.append(cut(payload, np.arange(bounds[1])))
+            n_held += sizes[0]
+            if len(sizes) == 1:
+                yield
+                continue
+        pieces, closed = (held, [n_held]) if n_held > 1 else ([], [])
+        inner = np.arange(0 if new[0] else 1, len(sizes) - 1)
+        inner = inner[sizes[inner] > 1]
+        if len(inner):
+            pieces = pieces + [cut(payload, ranges(bounds[inner], sizes[inner]))]
+            closed += sizes[inner].tolist()
+        if closed:
+            block(pieces, closed)
+        held, n_held = [cut(payload, np.arange(bounds[-2], n))], sizes[-1]
+        yield
+    if n_held > 1:
+        block(held, [n_held])
+    yield
+
+
+MASK31 = (1 << 31) - 1
+
+
+def minhash_sigs(offsets, values, coeffs):
+    """MinHash signatures of non-empty hashed shingle sets: row ``r``
+    is ``values[offsets[r]:offsets[r + 1]]``, and its entry ``i`` is the
+    min over those hashes ``h`` of ``((h & MASK31)·a_i + b_i) >> 29 &
+    MASK31`` for ``(a_i, b_i) = coeffs[i]`` (``dedup._minhash_coeffs``).
+    The operands stay below 2^62, so int64 never wraps and the values
+    are the DuckDB oracle's bigint arithmetic.  Returns (rows ×
+    len(coeffs)) int64."""
+    import numpy as np
+
+    h = np.asarray(values, dtype=np.int64) & MASK31
+    starts = np.asarray(offsets[:-1], dtype=np.int64)
+    out = np.empty((len(starts), len(coeffs)), dtype=np.int64)
+    for i, (a, b) in enumerate(coeffs):
+        out[:, i] = np.minimum.reduceat(((h * a + b) >> 29) & MASK31, starts)
+    return out
+
+
+def verify_jaccard(ids, offsets, values, sizes, threshold):
+    """Jaccard verify of consecutive blocks of hashed shingle sets (row
+    ``r`` is ``values[offsets[r]:offsets[r + 1]]``; ``sizes`` are the
+    block sizes, rows sorted by id within a block): every pair ``i <
+    j`` of one block with ``id_a < id_b`` and ``inter / union >=
+    threshold``, where ``inter = |set(a) ∩ set(b)|`` and ``union =
+    len(a) + len(b) − inter`` (``len`` counts array elements, as
+    ``size`` does), one IEEE division — the value of the JVM
+    ``size(array_intersect(a, b))`` form bit for bit.
+
+    All pairs of all blocks are counted at once, in pieces of ~1M
+    gathered elements: each pair's two distinct-hash lists are tagged
+    with the pair, sorted, and every tag-and-hash repeat is one common
+    hash.  Yields ``(id_a, id_b, jaccard)`` array chunks."""
+    import numpy as np
+
+    n = len(ids)
+    lens = np.diff(offsets)
+    u, inv = np.unique(values, return_inverse=True)
+    cell = np.unique(np.repeat(np.arange(n, dtype=np.int64), lens) * len(u) + inv.ravel())
+    row, hid = np.divmod(cell, len(u))  # each row's distinct hashes, in row order
+    dlen = np.bincount(row, minlength=n)
+    doff = np.concatenate([[0], np.cumsum(dlen)])
+    end = np.repeat(np.cumsum(sizes), sizes)  # one past each row's block
+    partners = end - np.arange(n) - 1
+    cost = partners * dlen + doff[end] - doff[1:]  # elements gathered for row i's pairs
+    cum = np.concatenate([[0], np.cumsum(cost)])
+    r0 = 0
+    while r0 < n:
+        r1 = max(r0 + 1, int(np.searchsorted(cum, cum[r0] + 1_000_000, "right")) - 1)
+        r1 = min(r1, n)
+        c = partners[r0:r1]
+        i = np.repeat(np.arange(r0, r1), c)
+        j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(c) - c, c)
+        pair = np.arange(len(i))
+        tags = np.concatenate([np.repeat(pair, dlen[i]), np.repeat(pair, dlen[j])])
+        hs = np.concatenate([hid[ranges(doff[i], dlen[i])], hid[ranges(doff[j], dlen[j])]])
+        key = np.sort(tags * len(u) + hs)
+        common = key[1:][key[1:] == key[:-1]] // len(u)
+        inter = np.bincount(common, minlength=len(i)).astype(np.float64)
+        jac = inter / (lens[i] + lens[j] - inter)
+        keep = (jac >= threshold) & (ids[i] < ids[j])
+        yield ids[i][keep], ids[j][keep], jac[keep]
+        r0 = r1
+
+
 def make_srp_sigs_udf(mat, offsets, weights):
     """Factory for the engine's one SRP signature UDF (see
     similarity.srp_signature_array): one BLAS matmul per Arrow batch,

@@ -990,20 +990,85 @@ def ivf_cosine_dups(
     return pairs.distinct().select("id_a", "id_b", F.round("sim", 6).alias("sim"))
 
 
+def _blocked_map(rows: DataFrame, keys: list, cols: list, block, schema, arrow: bool = False):
+    """The blocked kernel's plan: rows with a NULL key or column are
+    dropped, a hash ``repartition`` on ``keys`` puts each block in one
+    partition, and ``sortWithinPartitions(keys, cols[0])`` makes it a
+    run of rows in ``cols[0]`` (id) order.  One ``mapInPandas`` (or,
+    with ``arrow``, ``mapInArrow``) pass streams each partition's
+    batches through ``pyudf.stream_blocks``, so a task holds one block
+    plus one batch.
+
+    ``block(pieces, sizes)`` runs on the executor once per input batch
+    with the blocks of two rows or more that closed in it (see
+    ``stream_blocks``): ``pieces`` are tuples of ``cols`` numpy arrays
+    (pandas), or ``pyarrow.RecordBatch`` takes (arrow: a block of one row
+    never leaves Arrow).  It returns column chunks in ``schema`` order,
+    which are flushed after every input batch."""
+    if arrow:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        out_schema = to_arrow_schema(schema)
+
+    def verify(batches):
+        import numpy as np
+
+        from .pyudf import stream_blocks
+
+        out = []
+        if arrow:
+            import pyarrow as pa
+
+            frames = (
+                ([b.column(k).to_numpy(zero_copy_only=False) for k in keys], b)
+                for b in batches
+            )
+
+            def cut(b, rows):
+                return b.take(pa.array(rows))
+
+            def flush():
+                return pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(c), type=f.type, from_pandas=True)
+                     for c, f in zip(zip(*out), out_schema)],
+                    schema=out_schema,
+                )
+        else:
+            import pandas as pd
+
+            frames = (
+                ([pdf[k].to_numpy() for k in keys], tuple(pdf[c].to_numpy() for c in cols))
+                for pdf in batches
+            )
+
+            def cut(p, rows):
+                return tuple(c[rows] for c in p)
+
+            def flush():
+                return pd.DataFrame(
+                    {f: np.concatenate(c) for c, f in zip(zip(*out), schema.fieldNames())}
+                )
+
+        for _ in stream_blocks(frames, cut, lambda *a: out.extend(block(*a))):
+            if out:
+                yield flush()
+                out.clear()
+
+    rows = rows.where(" AND ".join(f"{c} IS NOT NULL" for c in (*keys, *cols)))
+    ordered = rows.select(*keys, *cols).repartition(*keys).sortWithinPartitions(*keys, cols[0])
+    return (ordered.mapInArrow if arrow else ordered.mapInPandas)(verify, schema)
+
+
 def _verify_within_blocks(
     rows: DataFrame, keys: list, threshold: float, side: str | None = None
 ) -> DataFrame:
-    """The blocked exact-cosine verify of every dup operator: LSH buckets
-    (``_band``, ``_sig``), label blocks (``_blk``), IVF/IMI cells
+    """The blocked exact-cosine verify of every vector dup operator: LSH
+    buckets (``_band``, ``_sig``), label blocks (``_blk``), IVF/IMI cells
     (``_cell``), and the ingest tail's shard × corpus cells
     (:func:`_incremental_cells_pairs`).  ``rows`` carry (keys…, _vid, _v),
-    one row per (vector, block) membership.  Rows with a NULL key, id or
-    vector are dropped; a hash ``repartition`` on the keys puts each
-    block in one partition and ``sortWithinPartitions`` makes it a run of
-    rows in ``_vid`` order.  One ``mapInPandas`` pass streams each
-    partition's Arrow batches, carrying the open block from one batch to
-    the next, so a task holds one block plus one batch and no candidate
-    pair is shuffled.
+    one row per (vector, block) membership; :func:`_blocked_map` drops
+    rows with a NULL key, id or vector and streams each block through
+    one ``mapInPandas`` pass, so no candidate pair is shuffled.
 
     Each block goes through ``pyudf.verify_cosine``: its upper triangle,
     or with ``side`` (a boolean column) the rectangle of the block's
@@ -1025,63 +1090,26 @@ def _verify_within_blocks(
         + [StructField(c, DoubleType()) for c in ("_dot", "_na", "_nb")]
     )
     floor = threshold - 1e-9
-    extra = [side] if side else []
 
-    def verify(batches):
+    def verify(pieces, sizes):
         import numpy as np
-        import pandas as pd
 
         from .pyudf import verify_cosine
 
-        out = {c: [] for c in ("id_a", "id_b", "_dot", "_na", "_nb")}
-
-        def block(pieces):
-            ids, vecs, *on = (np.concatenate(c) for c in zip(*pieces))
-            if len(ids) < 2:
-                return
+        cols = [np.concatenate(c) for c in zip(*pieces)]
+        out, s = [], 0
+        for e in np.cumsum(sizes):
+            ids, vecs, *on = (c[s:e] for c in cols)
             if on:
                 a = on[0]
                 sets = ((ids[a], vecs[a]), (ids[~a], vecs[~a]))
             else:
                 sets = ((ids, vecs), None)
-            for chunk in verify_cosine(*sets, floor):
-                for v, x in zip(out.values(), chunk):
-                    v.append(x)
+            out.extend(verify_cosine(*sets, floor))
+            s = e
+        return out
 
-        def emit():
-            if out["id_a"]:
-                yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
-                for v in out.values():
-                    v.clear()
-
-        held, last = [], None  # the open block's pieces; the previous row's keys
-        for pdf in batches:
-            K = [pdf[k].to_numpy() for k in keys]
-            cols = [pdf[c].to_numpy() for c in ("_vid", "_v", *extra)]
-            new = np.zeros(len(pdf), bool)  # row i starts a block
-            new[0] = last is None
-            for k, p in zip(K, last or K):
-                prev = np.concatenate([p[-1:], k[:-1]])
-                new |= (k != prev) & ~(pd.isna(k) & pd.isna(prev))  # Spark groups NaN keys
-            bounds = [0, *(np.flatnonzero(new[1:]) + 1).tolist(), len(pdf)]
-            for s, e in zip(bounds, bounds[1:]):
-                if new[s] and held:
-                    block(held)
-                    held = []
-                held.append(tuple(c[s:e] for c in cols))
-            last = K
-            yield from emit()
-        if held:
-            block(held)
-        yield from emit()
-
-    verified = (
-        rows.where(" AND ".join(f"{c} IS NOT NULL" for c in (*keys, "_vid", "_v")))
-        .select(*keys, "_vid", "_v", *extra)
-        .repartition(*keys)
-        .sortWithinPartitions(*keys, "_vid")
-        .mapInPandas(verify, schema)
-    )
+    verified = _blocked_map(rows, keys, ["_vid", "_v", *([side] if side else [])], verify, schema)
     return (
         verified.withColumn("sim", F.col("_dot") / (F.col("_na") * F.col("_nb")))
         .filter(F.col("sim") >= threshold)

@@ -7,20 +7,22 @@ the physical plan for Python evaluation operators:
 - ``BatchEvalPython`` — row-at-a-time Python UDF: FORBIDDEN anywhere
   (exit 1).  ~10-100× slower than Arrow; there is always a built-in or
   pandas_udf alternative.
-- ``ArrowEvalPython`` / ``FlatMapGroupsInPandas`` / ``MapInPandas`` /
-  ``FlatMapGroupsInPandasWithState`` — Arrow-batched: allowed, but
-  every plan containing one is LISTED so the Python surface stays
-  deliberate and reviewable (each listed query documents why JVM
-  built-ins can't express it, e.g. the BLAS argpartition assignment
-  past the literal cutoff, or media decode stubs).
+- every other Python node (``ArrowEvalPython``, ``MapInPandas``,
+  ``MapInArrow``, the grouped and windowed pandas/Arrow nodes) is
+  Arrow-batched: allowed, but every plan containing one is LISTED with
+  its node kinds by name, so the Python surface stays deliberate and
+  reviewable (each listed query documents why JVM built-ins can't
+  express it, e.g. the BLAS cell assignment, the blocked verify
+  kernels, the MinHash signature pass, or media decode stubs).
 
 KNOWN BLIND SPOT (shared with shuffle_audit): only the returned
 DataFrame's plan is grepped, so a Python operator upstream of an eager
-``localCheckpoint`` would be invisible here.  The checkpoint-based
-pipelines (d-family minhash) are pure-JVM higher-order-function
-column algebra by construction — pinned by their oracles — so the
-blind spot does not change this audit's conclusion; it is recorded so
-a future checkpointed Python stage isn't assumed covered.
+barrier (``materialize``) is invisible here.  The MinHash pipeline
+(d-family) is one lazy plan with its two Python nodes (signatures,
+bucket verify) in the returned frame, except where ``minhash_shared``
+is checkpointed for several consumers (d23, ``ingest_dedup_decisions``):
+there the signature pass runs in that barrier and only the verify is
+listed.
 
 DOUBLE EVALUATION (exit 1): each listed plan reports its count of
 Python nodes, and one Python UDF call appearing in two
@@ -52,23 +54,23 @@ import __spark_entry__ as E  # noqa: E402
 import explain_audit as EA  # noqa: E402
 from projet_graphdb_spark.engine import get_spark  # noqa: E402
 
-ARROW_NODES = (
-    "ArrowEvalPython",
-    "FlatMapGroupsInPandasWithState",
-    "FlatMapGroupsInPandas",
-    "MapInPandas",
-)
 # physical node names that run a Python worker
-PYTHON_NODES = frozenset(ARROW_NODES) | {
+PYTHON_NODES = frozenset({
     "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
     "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInPandasWithState",
     "FlatMapGroupsInArrow",
     "FlatMapCoGroupsInPandas",
     "FlatMapCoGroupsInArrow",
     "AggregateInPandas",
     "ArrowWindowPython",
     "WindowInPandas",
-}
+})
+# every Python node but the row-at-a-time one is Arrow-batched
+ARROW_NODES = PYTHON_NODES - {"BatchEvalPython"}
 _NODE = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s*)?([A-Za-z]\w*)")
 
 

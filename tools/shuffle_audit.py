@@ -14,10 +14,13 @@ so a reused shuffle counts once, mirroring what the cluster would move.
 
 KNOWN BLIND SPOT: only the RETURNED DataFrame's executed plan is
 measured.  Queries that eagerly materialize during construction
-(``localCheckpoint``-based pipelines — the minhash_shared base/sig
-frames of the d-family, d28's day-1 leg) run those shuffles before the
-profile collects, so their ledger rows UNDER-report.  For exactly that
-family the incremental-rehearsal wall times
+(``materialize`` barriers — d23's and ``ingest_dedup_decisions``'
+checkpointed ``minhash_shared`` signature frame, ``shingle_frame``'s
+output barrier, d28's day-1 leg) run those shuffles before the profile
+collects, so their ledger rows UNDER-report.  The batch MinHash-LSH
+path (d3) is one lazy plan: its row covers the band-key exchange that
+carries every document's hashed shingles once per band.  For the
+checkpointed family the incremental-rehearsal wall times
 (``BENCH_sf1.json["incremental_ingest_*"]``) are the authoritative
 cost receipts; this ledger's strength is the 250+ declarative queries
 whose whole plan is the returned frame.
